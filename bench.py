@@ -111,12 +111,15 @@ def main() -> None:
     # /tmp index does not already exist. Sample the state BEFORE the
     # timed loop (the first run creates it) so the recorded number can't
     # be misread as probe-only — or as including a build — without
-    # evidence.
+    # evidence. The probe is a pure stat: the centroid sidecar appears
+    # only after the atomic publish, and ivf_index_exists would also run
+    # crash recovery, renaming directories before the timed loop.
     try:
-        from ecollector_spark.datapipe.similarity import ivf_index_exists
         from ecollector_spark.driver_queries.datapipe import _ivf_index_dir
 
-        ivf_prebuilt = ivf_index_exists(_ivf_index_dir(sf_dir, n_centroids=8, n_iter=2))
+        ivf_prebuilt = os.path.isdir(
+            os.path.join(_ivf_index_dir(sf_dir, n_centroids=8, n_iter=2), "centroids")
+        )
     except Exception:  # noqa: BLE001 — annotation only, never fail the bench
         ivf_prebuilt = None
 

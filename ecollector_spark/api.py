@@ -393,18 +393,15 @@ class EcollectorApi:
             group_by_time = "1h"
         try:
             def _run():
-                df = self.warehouse.read_tier("gen_year")
+                from_e = rfc3339_epoch(from_time)
+                to_e = rfc3339_epoch(to_time)
+                # the tier reader's sargable ts bounds (from_e <= ts <=
+                # to_e on integer epochs) reach the parquet scan
+                df = self.warehouse.read_tier("gen_year", from_e, to_e)
                 if df is None:
                     return []
                 step = parse_relative_duration(group_by_time)
-                from_e = rfc3339_epoch(from_time)
-                to_e = rfc3339_epoch(to_time)
-                ts_epoch = F.unix_timestamp("ts")
-                base = df.where(
-                    (F.col("measurement") == "electricity_meter_energy_sampled")
-                    & (ts_epoch >= from_e)
-                    & (ts_epoch <= to_e)
-                )
+                base = df.where(F.col("measurement") == "electricity_meter_energy_sampled")
                 groups = split_group_tags(group_by_tag)
                 agg = base.groupBy(time_bucket("ts", step).alias("time"), *groups).agg(
                     F.sum("value_f").alias("value")
@@ -499,7 +496,7 @@ class EcollectorApi:
             df = self.warehouse.read_tier(tier)
             if df is None:
                 continue
-            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+            out = df if out is None else out.unionByName(df)
         if out is not None and measurement:
             out = out.where(F.col("measurement") == measurement)
         return out

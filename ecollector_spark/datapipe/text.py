@@ -16,6 +16,8 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ecollector_spark.functions import quote_ident as _ident
+
 #: small stopword/marker sets for the language-ID heuristic. Order of
 #: _LANGS is the tie-break cascade (first wins).
 LANG_MARKERS = {
@@ -28,16 +30,6 @@ LANG_MARKERS = {
 _LANGS = tuple(LANG_MARKERS)
 
 EN_STOPWORDS = ("the", "a", "an", "of", "and", "or", "to", "in", "is", "it")
-
-
-def _ident(col: str) -> str:
-    """Backtick-quote a SIMPLE top-level column name for a SQL fragment,
-    escaping embedded backticks (ADVICE r12). The fragment builders
-    treat their string argument as one column name — a qualified or
-    nested reference like ``s.text`` that ``F.col`` would resolve is NOT
-    supported here (it would become a literal quoted name); pass a
-    Column for those."""
-    return "`" + col.replace("`", "``") + "`"
 
 
 def tokens_sql(col: str) -> str:

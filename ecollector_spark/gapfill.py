@@ -29,6 +29,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ecollector_spark.functions import quote_ident
+
 FILL_NULL = "null"
 FILL_PREVIOUS = "previous"
 FILL_ZERO = "0"
@@ -71,11 +73,11 @@ def bucket_spine(
         1, numPartitions=1
     ).selectExpr(
         f"explode(sequence({n_from}L, {int(to_epoch)}L, "
-        f"{int(step_seconds)}L)) AS `{time_col}`"
+        f"{int(step_seconds)}L)) AS {quote_ident(time_col)}"
     )
     if group_cols:
         if groups_df is None:
-            groups_df = df_any.select(*group_cols).distinct()
+            groups_df = df_any.select(*map(quote_ident, group_cols)).distinct()
         spine = spine.crossJoin(F.broadcast(groups_df))
     return spine
 
@@ -149,17 +151,17 @@ def _window_fill(
     single-chunk specialization of :func:`_chunked_fill` (its expressions
     with the carried chunk edges replaced by their known-NULL values).
     Only safe when the caller has bounded the per-group row count."""
-    out_cols = joined.columns
+    out_cols = [quote_ident(c) for c in joined.columns]
     # SQL-string window fragments (r13, guide §5): one parser call per
     # filled column instead of the Window-builder chain (~45 py4j
     # round-trips per fill build). Identical expression trees — the SQL
     # window syntax resolves to the same WindowSpec.
     part = (
-        "PARTITION BY " + ", ".join(f"`{g}`" for g in group_cols) + " "
+        "PARTITION BY " + ", ".join(map(quote_ident, group_cols)) + " "
         if group_cols
         else ""
     )
-    t, v = f"`{time_col}`", f"`{value_col}`"
+    t, v = quote_ident(time_col), quote_ident(value_col)
     wprev = f"OVER ({part}ORDER BY {t} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     wnext = f"OVER ({part}ORDER BY {t} ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
     prev_v = f"last({v}, true) {wprev}"
@@ -167,9 +169,9 @@ def _window_fill(
         return joined.withColumn(value_col, F.expr(prev_v)).select(*out_cols)
 
     nn_struct = f"CASE WHEN {v} IS NOT NULL THEN struct({t}, {v}) END"
-    prev_t = f"last(({nn_struct}).`{time_col}`, true) {wprev}"
+    prev_t = f"last(({nn_struct}).{t}, true) {wprev}"
     next_v = f"first({v}, true) {wnext}"
-    next_t = f"first(({nn_struct}).`{time_col}`, true) {wnext}"
+    next_t = f"first(({nn_struct}).{t}, true) {wnext}"
     interp = (
         f"{prev_v} + ({next_v} - {prev_v}) * ({t} - {prev_t}) / ({next_t} - {prev_t})"
     )

@@ -120,6 +120,23 @@ def get_spark(
 _SPLIT_CONF_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
+def _min_partition_num(jconf, default_parallelism: int) -> int:
+    """Spark's own split denominator (ADVICE r12), read from the session
+    SQL conf like the other split confs: FilePartition divides by
+    spark.sql.files.minPartitionNum (a Scala ``Option``), falling back to
+    spark.sql.leafNodeDefaultParallelism, falling back to
+    sc.defaultParallelism — NOT by the caller's width, which only decides
+    the spread threshold. Values <= 0 are ignored."""
+    files = jconf.filesMinPartitionNum()
+    for v in (
+        files.get() if files.isDefined() else None,
+        jconf.getConfString("spark.sql.leafNodeDefaultParallelism", None),
+    ):
+        if v is not None and int(v) > 0:
+            return int(v)
+    return default_parallelism
+
+
 def _estimated_splits(
     spark: SparkSession, input_bytes: int, parallelism: int, n_files: int = 1
 ) -> int:
@@ -143,21 +160,14 @@ def _estimated_splits(
     sc = spark.sparkContext
     memo = _SPLIT_CONF_MEMO.get(sc)
     if memo is None:
+        # Resolved once per context (these confs are pinned at get_spark;
+        # mid-session changes are out of contract, same assumption as the
+        # other conf memos here).
         jconf = spark._jsparkSession.sessionState().conf()
-        # Spark's own denominator (ADVICE r12): FilePartition divides by
-        # spark.sql.files.minPartitionNum, falling back to
-        # spark.sql.leafNodeDefaultParallelism, falling back to
-        # sc.defaultParallelism — NOT by the caller's width, which only
-        # decides the spread threshold. Resolved once per context (these
-        # confs are pinned at get_spark; mid-session changes are out of
-        # contract, same assumption as the other conf memos here).
-        min_pn = spark.conf.get("spark.sql.files.minPartitionNum", None) or spark.conf.get(
-            "spark.sql.leafNodeDefaultParallelism", None
-        )
         memo = _SPLIT_CONF_MEMO[sc] = (
             int(jconf.filesMaxPartitionBytes()),
             int(jconf.filesOpenCostInBytes()),
-            int(min_pn) if min_pn else sc.defaultParallelism,
+            _min_partition_num(jconf, sc.defaultParallelism),
         )
     max_part, open_cost, min_partition_num = memo
     charged = input_bytes + max(n_files, 1) * open_cost

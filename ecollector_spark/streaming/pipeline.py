@@ -42,6 +42,7 @@ from ecollector_spark.streaming.stateful import (
 )
 from ecollector_spark.tiers import is_high_frequency_col, write_retention_col
 from ecollector_spark.transform import default_transform
+from ecollector_spark.warehouse import canonical_points
 
 #: dev_type whose series accumulate hourly (HAN main meters) — reference
 #: metadata/interface.go:4, process.go:160-162
@@ -269,9 +270,13 @@ def write_warehouse_stream(
     subpartition stamped from event time (partition-drop retention at
     scale). The processing-time trigger replaces the reference's
     SaveInterval flush loop; checkpointing replaces its retry/drop
-    logic with exactly-once.
+    logic with exactly-once. Rows are projected onto the warehouse schema
+    first (:func:`warehouse.canonical_points`): mistyped columns are cast,
+    and a column outside the schema raises ``ValueError`` at start.
     """
-    out = points.withColumn("tier", write_retention_col(F.col("measurement")))
+    out = canonical_points(points, date_partition).withColumn(
+        "tier", write_retention_col(F.col("measurement"))
+    )
     pcols = WAREHOUSE_PARTITION_COLUMNS
     if date_partition:
         out = out.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))

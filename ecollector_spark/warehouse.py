@@ -9,6 +9,20 @@ files. Retention (the RP TTL) is a batch job that drops expired rows by
 rewriting only the affected partitions — the Spark equivalent of
 InfluxDB's retention enforcement service.
 
+Schema contract: the warehouse has one canonical schema,
+``schema.DATAPOINT_SCHEMA`` (FIXTURES.md §3) plus the ``dt`` day
+partition in the dated layout. Readers never infer it: every scan goes
+through :meth:`Warehouse._scan`, which hands it to
+``spark.read.schema(...)`` — no footer-inference job per read, and the
+columns of a tier never depend on which file happens to be listed first
+(a tier mixing full raw files with 8-column counter-difference files
+would otherwise lose tag columns). Writers project onto it
+(:func:`canonical_points`): every column is cast to its canonical type
+and a column outside the schema raises ``ValueError``, so nothing
+written can become invisible to the reader or be dropped by a later
+compaction or retention rewrite. Columns a writer leaves out read back
+as null.
+
 Scale notes: writes append partitioned files (no shuffle beyond the
 pipeline's own); the TTL job reads only partitions that can contain
 expired data (all queries pin tier, and file/partition statistics skip
@@ -18,14 +32,18 @@ partition drop — the layout constant keeps that a one-line change.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import shutil
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ecollector_spark.schema import WAREHOUSE_PARTITION_COLUMNS
+from ecollector_spark.functions import quote_ident
+from ecollector_spark.schema import DATAPOINT_SCHEMA, WAREHOUSE_PARTITION_COLUMNS
 from ecollector_spark.tiers import TIER_TTL_SECONDS, TIERS
 from ecollector_spark.tiers import write_retention_col
 
@@ -44,6 +62,39 @@ CSV_COLUMNS = (
     "value",
     "unit",
 )
+
+
+def warehouse_schema(date_partition: bool = False) -> T.StructType:
+    """The canonical schema every warehouse scan reads with:
+    ``DATAPOINT_SCHEMA``, plus ``dt`` in the dated layout — kept as its
+    ``yyyy-MM-dd`` string (partition type inference would make it a
+    date)."""
+    if not date_partition:
+        return DATAPOINT_SCHEMA
+    return T.StructType([*DATAPOINT_SCHEMA.fields, T.StructField("dt", T.StringType())])
+
+
+def canonical_points(points: DataFrame, date_partition: bool = False) -> DataFrame:
+    """Project a datapoint frame onto the warehouse schema before it is
+    written: each column cast to its canonical type, in canonical order.
+    A column outside the schema raises ``ValueError`` — written, it
+    would be invisible to the canonical reader. Missing columns stay
+    missing (they read back as null). One ``selectExpr`` parse."""
+    schema = warehouse_schema(date_partition)
+    present = set(points.columns)
+    unknown = sorted(present - set(schema.names))
+    if unknown:
+        raise ValueError(
+            f"columns outside the warehouse schema: {unknown}; "
+            f"allowed: {schema.names}"
+        )
+    return points.selectExpr(
+        *[
+            f"CAST({quote_ident(f.name)} AS {f.dataType.simpleString()}) AS {quote_ident(f.name)}"
+            for f in schema.fields
+            if f.name in present
+        ]
+    )
 
 
 #: Serializes rename-aside publishes against recovery-on-read. Reads are a
@@ -94,6 +145,22 @@ def _recover_crashed_swap(dst: str) -> None:
             shutil.rmtree(old, ignore_errors=True)
 
 
+def _parquet_listing(path: str) -> frozenset:
+    """(path, size, mtime_ns) of every parquet file under ``path``; a
+    file removed mid-walk is left out."""
+    out = set()
+    for d, _, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                p = os.path.join(d, f)
+                try:
+                    st = os.stat(p)
+                except FileNotFoundError:
+                    continue
+                out.add((p, st.st_size, st.st_mtime_ns))
+    return frozenset(out)
+
+
 class Warehouse:
     """Filesystem-backed tiered warehouse over parquet.
 
@@ -118,6 +185,9 @@ class Warehouse:
             if date_partition
             else WAREHOUSE_PARTITION_COLUMNS
         )
+        self.schema = warehouse_schema(date_partition)
+        #: tier -> (parquet listing, scan built from it); see read_tier
+        self._tier_scans: dict[str, tuple[frozenset, DataFrame]] = {}
 
     # -- paths -------------------------------------------------------------
     def tier_path(self, tier: str) -> str:
@@ -148,6 +218,16 @@ class Warehouse:
             os.rename(tmp, dst)
             shutil.rmtree(old, ignore_errors=True)
 
+    def _scan(self, *paths: str, base_path: str | None = None) -> DataFrame:
+        """The one warehouse scan: parquet under ``paths`` read with the
+        canonical schema (module docstring) — no inference job, and the
+        same columns whichever file is listed first. ``base_path`` keeps
+        the partition columns above ``paths``."""
+        reader = self.spark.read.schema(self.schema)
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        return reader.parquet(*paths)
+
     def _stamp_dt(self, df: DataFrame) -> DataFrame:
         if self.date_partition and "dt" not in df.columns:
             df = df.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
@@ -169,12 +249,15 @@ class Warehouse:
         write — no shuffle, but every parquet file comes out clustered,
         so its rowgroup min/max stats are tight and time-range /
         series predicates skip rowgroups instead of scanning them (the
-        cheap half of Z-ordering, free at write time)."""
-        out = points
+        cheap half of Z-ordering, free at write time).
+
+        The frame is projected onto the canonical schema first
+        (:func:`canonical_points`): mistyped columns are cast, and a
+        column outside the schema raises ``ValueError``."""
+        out = canonical_points(points, self.date_partition)
         if "tier" not in out.columns:
             out = out.withColumn("tier", write_retention_col(F.col("measurement")))
-        if self.date_partition and "dt" not in out.columns:
-            out = out.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
+        out = self._stamp_dt(out)
         if sort:
             out = out.sortWithinPartitions("series_id", "ts")
         (
@@ -196,36 +279,49 @@ class Warehouse:
         In the dated layout, ``from_epoch``/``to_epoch`` additionally
         prune the ``dt`` day partitions covering the range (the ``ts``
         row predicate itself cannot prune directories — the day bounds
-        can), then the row-exact ``ts`` filter applies as usual."""
+        can), then the row-exact ``ts`` filter applies as usual.
+
+        The tier's scan is reused while its parquet files are unchanged
+        (same paths, sizes and mtimes): building one costs a file listing
+        plus relation analysis on the driver, every query. Any append,
+        swap or removal changes the listing, and the scan is rebuilt."""
         path = self.tier_path(tier)
         _recover_crashed_swap(path)
         _recover_measurement_swaps(path)
-        if not self._has_data(path):
+        listing = _parquet_listing(path)
+        if not listing:
             return None
-        # read via the root with basePath so partition columns survive,
-        # and pin the tier -> Catalyst prunes to the one subdirectory
-        df = self.spark.read.option("basePath", self.root).parquet(path)
-        if self.date_partition and "dt" in df.columns:
-            if from_epoch is not None:
-                df = df.where(
-                    F.col("dt") >= F.date_format(F.timestamp_seconds(F.lit(int(from_epoch))), "yyyy-MM-dd")
-                )
-            if to_epoch is not None:
-                df = df.where(
-                    F.col("dt") <= F.date_format(F.timestamp_seconds(F.lit(int(to_epoch))), "yyyy-MM-dd")
-                )
-            df = df.drop("dt")
+        cached = self._tier_scans.get(tier)
+        if cached is None or cached[0] != listing:
+            # read via the root with basePath so partition columns
+            # survive, and pin the tier -> Catalyst prunes to the one
+            # subdirectory
+            cached = (listing, self._scan(path, base_path=self.root))
+            self._tier_scans[tier] = cached
+        df = cached[1]
         # r13 (guide §6): sargable timestamp-literal forms instead of
         # unix_timestamp(ts) — the function-wrapped predicate can never
         # reach the parquet scan, the literal form lands in PushedFilters
         # and rowgroup min/max stats prune (same convention the planner
         # adopted in r10). Exactly equivalent on integer epochs:
         # unix(ts) >= X  <=>  ts >= X;  unix(ts) <= X  <=>  ts < X+1
-        # (unix_timestamp floors to whole seconds).
+        # (unix_timestamp floors to whole seconds). All bounds go into
+        # one filter: each DataFrame step is a separate analysis.
+        conds = []
         if from_epoch is not None:
-            df = df.where(F.col("ts") >= F.timestamp_seconds(F.lit(int(from_epoch))))
+            lo = F.timestamp_seconds(F.lit(int(from_epoch)))
+            conds.append(F.col("ts") >= lo)
+            if self.date_partition:
+                conds.append(F.col("dt") >= F.date_format(lo, "yyyy-MM-dd"))
         if to_epoch is not None:
-            df = df.where(F.col("ts") < F.timestamp_seconds(F.lit(int(to_epoch) + 1)))
+            conds.append(F.col("ts") < F.timestamp_seconds(F.lit(int(to_epoch) + 1)))
+            if self.date_partition:
+                hi_day = F.date_format(F.timestamp_seconds(F.lit(int(to_epoch))), "yyyy-MM-dd")
+                conds.append(F.col("dt") <= hi_day)
+        if conds:
+            df = df.where(functools.reduce(operator.and_, conds))
+        if self.date_partition:
+            df = df.drop("dt")
         return df.withColumn("tier", F.lit(tier))
 
     def tier_reader(self):
@@ -327,7 +423,8 @@ class Warehouse:
         when it predates the rewritten range."""
         old_hwm = self._read_hwm_sidecar(tier)
         df = self.read_tier(tier)
-        new = points.drop("tier") if "tier" in points.columns else points
+        # dt is re-stamped below for every row, kept and new alike
+        new = canonical_points(points, self.date_partition).drop("tier", "dt")
         if df is not None:
             # sargable form (r13): unix(ts) < X <=> ts < X on integer X
             keep = df.where(
@@ -345,7 +442,7 @@ class Warehouse:
             .parquet(tmp)
         )
         tail_max = (
-            self.spark.read.parquet(tmp)
+            self._scan(tmp)
             .where(F.col("ts") >= F.timestamp_seconds(F.lit(int(from_epoch))))
             .agg(F.max("ts").alias("m"))
             .collect()[0]["m"]
@@ -459,7 +556,7 @@ class Warehouse:
                 _recover_crashed_swap(mdir)
                 if not self._has_data(mdir):
                     continue
-                df = self.spark.read.option("basePath", self.root).parquet(mdir)
+                df = self._scan(mdir, base_path=self.root)
                 # one counting pass answers both "anything to delete?"
                 # and "anything left?" — no separate isEmpty scan
                 row = df.agg(
@@ -526,7 +623,7 @@ class Warehouse:
             vname = f"{name}_{tier}"
             df.createOrReplaceTempView(vname)
             registered.append(vname)
-            union = df if union is None else union.unionByName(df, allowMissingColumns=True)
+            union = df if union is None else union.unionByName(df)
         if union is not None:
             union.createOrReplaceTempView(name)
             registered.append(name)
@@ -640,7 +737,7 @@ class Warehouse:
             if not doomed:
                 continue
             # metadata-only count (parquet footers), then the drop
-            n = self.spark.read.parquet(*doomed).count()
+            n = self._scan(*doomed).count()
             for d in doomed:
                 shutil.rmtree(d)
             if n:

@@ -988,3 +988,165 @@ class TestConcurrentReadDuringSwap:
         assert not os.path.isdir(mdir + ".old")
         # and the live data is untouched
         assert wh.read_tier("gen_raw").count() == 4
+
+
+class TestCanonicalSchema:
+    """Every warehouse scan reads with the canonical schema
+    (``warehouse_schema``) and every write projects onto it."""
+
+    #: the counter-difference writer's file shape: 8 data columns
+    DIFF_COLS = ("measurement", "ts", "series_id", "dev_id", "dir", "src",
+                 "value_f", "unit", "agg_func")
+
+    def test_read_tier_launches_no_spark_job(self, spark, tmp_path):
+        """Schema inference is a Spark job (``parquet at ...``); the
+        canonical reader plans without one, ranged or not."""
+        w = Warehouse(spark, str(tmp_path / "w"))
+        w.write_points(_mk_points(spark, [
+            ("electricity_meter_power", "2024-01-01T00:10:00", "7", 1.0),
+        ]))
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        w.read_tier("gen_raw")
+        w.read_tier("gen_raw", 1704067200, 1704070800)
+        assert set(tracker.getJobIdsForGroup(None)) == before
+
+    def test_tier_scan_reused_until_files_change(self, spark, tmp_path):
+        """read_tier reuses a tier's scan while its parquet listing is
+        unchanged; an append or a rewrite rebuilds it, so new rows are
+        always visible."""
+        w = Warehouse(spark, str(tmp_path / "w"))
+        w.write_points(_mk_points(spark, [
+            ("electricity_meter_power", "2024-01-01T00:10:00", "7", 1.0),
+        ]))
+        assert w.read_tier("gen_raw").count() == 1
+        scan = w._tier_scans["gen_raw"][1]
+        w.read_tier("gen_raw", 1704067200, 1704070800)
+        assert w._tier_scans["gen_raw"][1] is scan
+        w.write_points(_mk_points(spark, [
+            ("electricity_meter_power", "2024-01-01T00:20:00", "7", 2.0),
+        ]))
+        assert w.read_tier("gen_raw").count() == 2
+        assert w._tier_scans["gen_raw"][1] is not scan
+        assert w.delete_points("electricity_meter_power", to_epoch=1704068000) == 1
+        assert [r["value_f"] for r in w.read_tier("gen_raw").collect()] == [2.0]
+        w.drop_tier("gen_raw")
+        assert w.read_tier("gen_raw") is None
+
+    @pytest.mark.parametrize("diff_first", [True, False])
+    def test_mixed_file_shapes_keep_every_column(self, spark, tmp_path, diff_first):
+        """A tier mixing full raw files with 8-column counter-difference
+        files exposes the full column list whichever file sorts first
+        (inference reads only the first footer), and its tags answer a
+        GROUP BY."""
+        w = Warehouse(spark, str(tmp_path / "w"))
+        full = _mk_points(spark, [
+            ("electricity_meter_power", "2024-01-01T00:10:00", "7", 10.0),
+            ("electricity_meter_power", "2024-01-01T00:20:00", "8", 20.0),
+        ]).withColumn("location_id", F.when(F.col("dev_id") == "7", "L1").otherwise("L2"))
+        # same partition, a day before the query range
+        diff = full.select(*self.DIFF_COLS).withColumn(
+            "ts", F.col("ts") - F.expr("INTERVAL 1 DAY"))
+        mdir = os.path.join(w.tier_path("gen_raw"), "measurement=electricity_meter_power")
+
+        def write_renamed(df, prefix):
+            w.write_points(df.coalesce(1))
+            for f in os.listdir(mdir):
+                if f.startswith("part-") and f.endswith(".parquet"):
+                    os.rename(os.path.join(mdir, f), os.path.join(mdir, f"{prefix}-{f}"))
+
+        write_renamed(diff, "0" if diff_first else "9")
+        write_renamed(full, "5")
+        files = sorted(f for f in os.listdir(mdir) if f.endswith(".parquet"))
+        assert files[0].startswith("0" if diff_first else "5")
+
+        df = w.read_tier("gen_raw")
+        assert sorted(df.columns) == sorted(DATAPOINT_SCHEMA.names)
+        assert df.columns == [
+            *(n for n in DATAPOINT_SCHEMA.names if n not in ("measurement", "tier")),
+            "tier", "measurement"]
+        rsp = EcollectorApi(spark, w).run_query(
+            'SELECT last("value") FROM "gen_raw"."electricity_meter_power" '
+            "WHERE time > now()-2h GROUP BY time(10m), location_id FILL(none)",
+            now=datetime(2024, 1, 1, 1, 0, 0, tzinfo=timezone.utc),
+        )
+        series = rsp["val"]["Results"][0]["Series"]
+        got = {s["tags"]["location_id"]: [v[-1] for v in s["values"]] for s in series}
+        assert got == {"L1": [10.0], "L2": [20.0]}
+
+    def test_write_points_casts_and_rejects(self, spark, tmp_path):
+        import glob
+
+        import pyarrow.parquet as pq
+
+        w = Warehouse(spark, str(tmp_path / "w"))
+        pts = _mk_points(spark, [
+            ("electricity_meter_power", "2024-01-01T00:10:00", "7", 1.0),
+        ])
+        with pytest.raises(ValueError, match="bogus"):
+            w.write_points(pts.withColumn("bogus", F.lit(1)))
+        assert not os.path.exists(w.root)
+        # an integer location_id is stored as the canonical string
+        w.write_points(pts.withColumn("location_id", F.lit(42)))
+        (f,) = glob.glob(f"{w.tier_path('gen_raw')}/measurement=*/*.parquet")
+        assert str(pq.read_schema(f).field("location_id").type) == "string"
+        assert [r["location_id"] for r in w.read_tier("gen_raw").collect()] == ["42"]
+
+    def test_stream_sink_rejects_unknown_column(self, spark, tmp_path):
+        from ecollector_spark.streaming.pipeline import write_warehouse_stream
+
+        stream = spark.readStream.format("rate").load()  # timestamp, value
+        with pytest.raises(ValueError, match="outside the warehouse schema"):
+            write_warehouse_stream(
+                stream, str(tmp_path / "w"), str(tmp_path / "ck"), available_now=True)
+
+    def test_dated_layout_still_prunes_days(self, spark, tmp_path):
+        """``dt`` is part of the canonical read schema (as a string): a
+        ranged read must prune whole day directories. The pruned days'
+        files are corrupted, so a read that opened them would fail."""
+        w = Warehouse(spark, str(tmp_path / "w"), date_partition=True)
+        w.write_points(_mk_points(spark, [
+            ("electricity_meter_power", "2024-01-01T05:00:00", "7", 1.0),
+            ("electricity_meter_power", "2024-01-02T05:00:00", "7", 2.0),
+            ("electricity_meter_power", "2024-01-03T05:00:00", "7", 3.0),
+        ]))
+        mdir = os.path.join(w.tier_path("gen_raw"), "measurement=electricity_meter_power")
+        for day in ("dt=2024-01-01", "dt=2024-01-03"):
+            for f in os.listdir(os.path.join(mdir, day)):
+                if f.endswith(".parquet"):
+                    with open(os.path.join(mdir, day, f), "wb") as fh:
+                        fh.write(b"not parquet")
+        t0 = int(datetime(2024, 1, 2, tzinfo=timezone.utc).timestamp())
+        df = w.read_tier("gen_raw", t0, t0 + 86399)
+        assert [r["value_f"] for r in df.collect()] == [2.0]
+        assert "dt" not in df.columns
+
+    def test_energy_rollup_pushes_ts_bounds(self, wh, spark):
+        """get_energy_data_points hands its range to read_tier, so the
+        ts bounds reach the parquet scan's PushedFilters; the report is
+        the one the unbounded read gave."""
+        wh.write_points(_mk_points(spark, [
+            ("electricity_meter_energy_sampled", "2024-01-01T00:10:00", "7", 1.5),
+            ("electricity_meter_energy_sampled", "2024-01-01T00:20:00", "7", 2.5),
+            ("electricity_meter_energy_sampled", "2024-01-01T01:10:00", "7", 4.0),
+            ("electricity_meter_energy_sampled", "2024-01-01T02:00:00", "7", 8.0),
+        ]))
+        reads = []
+        read_tier = wh.read_tier
+
+        def spy(tier, from_epoch=None, to_epoch=None):
+            df = read_tier(tier, from_epoch, to_epoch)
+            reads.append(df)
+            return df
+
+        wh.read_tier = spy
+        rep = EcollectorApi(spark, wh).get_energy_data_points(
+            "2024-01-01T00:00:00Z", "2024-01-01T01:59:59Z", group_by_time="1h"
+        )
+        vals = rep["val"]["Results"][0]["Series"][0]["values"]
+        assert [v[1] for v in vals] == [4.0, 4.0]
+        (df,) = reads
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        pushed = plan.split("PushedFilters: ")[1].split("]")[0]
+        assert "GreaterThanOrEqual(ts,2024-01-01 00:00:00.0)" in pushed
+        assert "LessThan(ts,2024-01-01 02:00:00.0)" in pushed

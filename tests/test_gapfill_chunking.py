@@ -75,3 +75,18 @@ def test_carry_across_empty_chunks(spark, fill_type):
         # everything between the samples carries the first value
         mid = [v for _, t, v in tiny if 0 < t < (N_BUCKETS - 1) * STEP]
         assert set(mid) == {10.0}
+
+
+@pytest.mark.parametrize("fill_type", [gf.FILL_NULL, gf.FILL_PREVIOUS])
+def test_backtick_identifiers_round_trip(spark, fill_type):
+    """Group, time and value names are escaped (each backtick doubled)
+    in the spine and the window fragments: a group column named
+    ``a`b`` survives FILL(null) and FILL(previous)."""
+    df = spark.createDataFrame(
+        [("x", 0, 1.0), ("x", 2 * STEP, 3.0)], "`a``b` string, `t``s` long, `v``al` double"
+    )
+    out = gf.gap_fill(df, fill_type, 0, 2 * STEP, STEP, ["a`b"], time_col="t`s", value_col="v`al")
+    assert out.columns == ["t`s", "a`b", "v`al"]
+    filled = 1.0 if fill_type == gf.FILL_PREVIOUS else None
+    got = sorted((r["a`b"], r["t`s"], r["v`al"]) for r in out.collect())
+    assert got == [("x", 0, 1.0), ("x", STEP, filled), ("x", 2 * STEP, 3.0)]

@@ -61,3 +61,39 @@ def test_directory_layout_matches_probe_branch(spark, sf_dir, tmp_path):
 def test_directory_at_scale_never_spreads(spark):
     # 100 TB directory of 1 GB files: the estimate must dwarf any width
     assert _estimated_splits(spark, 100 * 1024**4, 32, n_files=100_000) > 32_000
+
+
+def test_min_partition_num_reads_session_conf(spark):
+    """The split estimate's denominator comes from the session's SQL
+    conf: filesMinPartitionNum when set (a Scala Option), else
+    sc.defaultParallelism; values <= 0 are ignored."""
+    from ecollector_spark.session import _min_partition_num
+
+    jconf = spark._jsparkSession.sessionState().conf()
+    default = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.minPartitionNum"
+    assert spark.conf.get(key, None) is None
+    assert _min_partition_num(jconf, default) == default
+    spark.conf.set(key, "3")
+    try:
+        assert _min_partition_num(jconf, default) == 3
+    finally:
+        spark.conf.unset(key)
+    assert _min_partition_num(jconf, default) == default
+
+
+def test_min_partition_num_ignores_non_positive():
+    from types import SimpleNamespace
+
+    from ecollector_spark.session import _min_partition_num
+
+    def jconf(files, leaf):
+        opt = SimpleNamespace(isDefined=lambda: files is not None, get=lambda: files)
+        return SimpleNamespace(
+            filesMinPartitionNum=lambda: opt, getConfString=lambda key, default: leaf
+        )
+
+    assert _min_partition_num(jconf(0, None), 4) == 4
+    assert _min_partition_num(jconf(-1, "6"), 4) == 6
+    assert _min_partition_num(jconf(None, "0"), 4) == 4
+    assert _min_partition_num(jconf(5, "6"), 4) == 5

@@ -133,21 +133,22 @@ def zone_offsets(zone: str, from_epoch: int, to_epoch: int) -> list[int]:
     return offs
 
 
-def tz_spine_times(spark, zone: str, from_epoch: int, to_epoch: int,
-                   step_seconds: int, offset_seconds: int = 0):
-    """Non-uniform FILL spine for sub-day tz() buckets: one row per VALID
-    bucket-start UTC instant (column ``time``) — two instants for a wall
-    label inside a fall-back's repeated span, zero inside a spring-forward
-    gap. Built fully in Spark: uniform wall-label sequence x the (tiny,
-    driver-computed) distinct-offset set, explode, validity-filter.
+def tz_spine_times(zone: str, from_epoch: int, to_epoch: int,
+                   step_seconds: int, offset_seconds: int = 0) -> tuple[str, int]:
+    """Non-uniform FILL spine for sub-day tz() buckets: a SQL
+    ``array<bigint>`` of every VALID bucket-start UTC instant — two
+    instants for a wall label inside a fall-back's repeated span, zero
+    inside a spring-forward gap — with an upper bound on its length.
+    Uniform wall-label sequence x the (tiny, driver-computed)
+    distinct-offset set, validity-filtered, ``array_distinct``.
 
     A candidate (w, o) is valid iff some instant with offset ``o`` falls
     in wall bucket ``w`` — since offset regimes are month-long intervals
     and step < 1d, that is iff the offset at the bucket's first or last
     covered instant equals ``o``. Its key is w - off(w - o): identical to
-    ``tz_bucket_expr``'s normalization, so every data key joins."""
+    ``tz_bucket_expr``'s normalization, so every data key is on it."""
     offs = zone_offsets(zone, from_epoch, to_epoch)
-    from datetime import datetime, timezone as _tz
+    from datetime import datetime
     from zoneinfo import ZoneInfo
 
     z = ZoneInfo(zone)
@@ -157,23 +158,19 @@ def tz_spine_times(spark, zone: str, from_epoch: int, to_epoch: int,
 
     wall_from, wall_to = _wall(from_epoch), _wall(to_epoch)
     n_from = (wall_from - offset_seconds) // step_seconds * step_seconds + offset_seconds
-    labels = spark.range(1, numPartitions=1).select(
-        F.explode(
-            F.sequence(
-                F.lit(int(n_from)).cast("long"),
-                F.lit(int(wall_to)).cast("long"),
-                F.lit(int(step_seconds)).cast("long"),
-            )
-        ).alias("_w")
+    n_labels = max(0, (wall_to - n_from) // step_seconds + 1)
+    zone_lit = "'" + zone.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    def off(x: str) -> str:  # zone offset (seconds) at instant x
+        return f"(unix_timestamp(from_utc_timestamp(timestamp_seconds({x}), {zone_lit})) - ({x}))"
+
+    off_a = off("_w - _o")
+    off_b = off(f"_w + {int(step_seconds)}L - _o - 1")
+    offs_sql = ", ".join(f"{int(o)}L" for o in offs)
+    sql = (
+        f"array_distinct(flatten(transform("
+        f"sequence({int(n_from)}L, {int(wall_to)}L, {int(step_seconds)}L), "
+        f"_w -> transform(filter(array({offs_sql}), _o -> {off_a} = _o OR {off_b} = _o), "
+        f"_o -> CAST(_w - {off_a} AS BIGINT)))))"
     )
-    cand = labels.select(
-        "_w",
-        F.explode(F.array(*[F.lit(int(o)).cast("long") for o in offs])).alias("_o"),
-    )
-    a = F.col("_w") - F.col("_o")
-    b_last = F.col("_w") + F.lit(int(step_seconds)) - F.col("_o") - 1
-    off_a = _wall_epoch(a, zone) - a
-    off_b = _wall_epoch(b_last, zone) - b_last
-    valid = (off_a == F.col("_o")) | (off_b == F.col("_o"))
-    key = (F.col("_w") - off_a).cast("long")
-    return cand.where(valid).select(key.alias("time")).distinct()
+    return sql, n_labels * len(offs)

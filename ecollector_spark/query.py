@@ -844,15 +844,13 @@ class QueryPlanner:
         # boundaries, and our wire format is epoch seconds either way.
         tz_subday = bool(req.tz) and bool(step) and step < 86400
         fill_from, fill_to = from_epoch, to_epoch
-        fill_times = None
+        fill_spine = None
         if req.tz and step:
             from zoneinfo import ZoneInfo
 
             zone = ZoneInfo(req.tz)  # raises on an unknown zone name
             if tz_subday:
-                fill_times = tz_spine_times(
-                    df.sparkSession, req.tz, from_epoch, to_epoch, step, bucket_off
-                )
+                fill_spine = tz_spine_times(req.tz, from_epoch, to_epoch, step, bucket_off)
             else:
                 def _wall(e: int) -> int:
                     return e + int(
@@ -927,7 +925,7 @@ class QueryPlanner:
                 step,
                 group_cols,
                 offset_seconds=bucket_off,
-                times_df=fill_times,
+                spine=fill_spine,
             )
         time_out = F.col("time").cast("long")
         if req.tz and step and not tz_subday:
@@ -1064,8 +1062,8 @@ class QueryPlanner:
         (alias, else the function name, ``_1``/``_2``-suffixed on
         repeats). Single-stage aggregates only (incl. percentile);
         two-stage shapes (difference/mode/integral) and transforms stay
-        single-selector. Gap fill is not applied — FILL(none) semantics
-        (the parser rejects other fills for multi-select)."""
+        single-selector. FILL(null) and FILL(0) go through ``gap_fill``;
+        the parser rejects previous/linear for multi-select."""
         from dataclasses import replace as _dc_replace
 
         # Tier routing upgrades to a coarser pre-aggregated tier only for
@@ -1134,11 +1132,9 @@ class QueryPlanner:
             # by the UTC bucket-start instant with a non-uniform spine
             tz_subday = bool(req.tz) and step < 86400
             spine_from, spine_to = ctx["from_epoch"], ctx["to_epoch"]
-            spine_times = None
+            spine = None
             if req.tz and tz_subday:
-                spine_times = tz_spine_times(
-                    df.sparkSession, req.tz, spine_from, spine_to, step, bucket_off
-                )
+                spine = tz_spine_times(req.tz, spine_from, spine_to, step, bucket_off)
             elif req.tz:
                 from zoneinfo import ZoneInfo
 
@@ -1157,26 +1153,21 @@ class QueryPlanner:
                 bucket = time_bucket(bucket_src, step, bucket_off).alias("time")
             agg = df.groupBy(bucket, *tag_cols).agg(*aggs)
             # FILL(null) is InfluxQL's default and must not silently
-            # change when a second selector is added: spine-join every
-            # column; FILL(0) coalesces. previous/linear stay rejected
-            # by the parser for multi-select.
+            # change when a second selector is added: every column rides
+            # the spine; FILL(0) coalesces each. previous/linear stay
+            # rejected by the parser for multi-select.
             fill_type = ctx["fill_type"]
             if fill_type in ("null", "0"):
-                from ecollector_spark.gapfill import bucket_spine
-
-                spine = bucket_spine(
+                agg = gap_fill(
                     agg,
+                    fill_type,
                     spine_from,
                     spine_to,
                     step,
                     tag_cols,
                     offset_seconds=bucket_off,
-                    times_df=spine_times,
+                    spine=spine,
                 )
-                agg = spine.join(agg, on=["time", *tag_cols], how="left")
-                if fill_type == "0":
-                    for n in names:
-                        agg = agg.withColumn(n, F.coalesce(F.col(n), F.lit(0.0)))
         else:
             agg = df.groupBy(*tag_cols).agg(*aggs)
             agg = agg.select(

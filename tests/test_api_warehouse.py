@@ -1150,3 +1150,48 @@ class TestCanonicalSchema:
         pushed = plan.split("PushedFilters: ")[1].split("]")[0]
         assert "GreaterThanOrEqual(ts,2024-01-01 00:00:00.0)" in pushed
         assert "LessThan(ts,2024-01-01 02:00:00.0)" in pushed
+
+
+class TestGapFillPlanShape:
+    """A grouped gap-filled request scans its tier once and joins nothing:
+    the spine is built from the aggregate's own rows (gapfill.bucket_spine),
+    so the request runs the aggregate shuffle, one single-partition
+    shuffle of aggregated rows and the result — three Spark jobs."""
+
+    NOW = datetime(2024, 1, 1, 1, tzinfo=timezone.utc)
+
+    @staticmethod
+    def _req(fill):
+        # max keeps the request on gen_raw (only mean upgrades the tier)
+        return DataPointsRequest(
+            measurement_name="electricity_meter_power",
+            relative_time="1h",
+            group_by_time="10m",
+            data_function="max",
+            group_by_tag="dev_id",
+            fill_type=fill,
+        )
+
+    @pytest.mark.parametrize("fill", ["null", "previous"])
+    def test_grouped_fill_runs_at_most_three_jobs(self, wh, fill):
+        api = EcollectorApi(wh.spark, wh)
+        sc = wh.spark.sparkContext
+        group = f"gapfill-jobs-{fill}"
+        sc.setJobGroup(group, group)
+        try:
+            rep = api.get_data_points(self._req(fill), now=self.NOW)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        series = {s["tags"]["dev_id"]: s["values"] for s in rep["val"]["Results"][0]["Series"]}
+        assert sorted(series) == ["7", "8"] and all(len(v) == 7 for v in series.values())
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+    @pytest.mark.parametrize("fill", ["null", "previous"])
+    def test_grouped_fill_scans_the_tier_once(self, wh, fill):
+        df = EcollectorApi(wh.spark, wh).planner.plan(self._req(fill), now=self.NOW)
+        df.collect()
+        # the adaptive plan's final physical plan, query stages included
+        plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+        assert plan.count("FileScan") == 1
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan

@@ -77,16 +77,22 @@ def test_carry_across_empty_chunks(spark, fill_type):
         assert set(mid) == {10.0}
 
 
-@pytest.mark.parametrize("fill_type", [gf.FILL_NULL, gf.FILL_PREVIOUS])
-def test_backtick_identifiers_round_trip(spark, fill_type):
+@pytest.mark.parametrize("fill_type", [gf.FILL_NULL, gf.FILL_PREVIOUS, gf.FILL_LINEAR])
+def test_backtick_identifiers_round_trip(spark, monkeypatch, fill_type):
     """Group, time and value names are escaped (each backtick doubled)
     in the spine and the window fragments: a group column named
-    ``a`b`` survives FILL(null) and FILL(previous)."""
+    ``a`b`` and a value column named ``v`a.l`` survive every fill, on
+    the single-chunk path and on the chunked path (one bucket per chunk,
+    so the carried edges are read by field name)."""
     df = spark.createDataFrame(
-        [("x", 0, 1.0), ("x", 2 * STEP, 3.0)], "`a``b` string, `t``s` long, `v``al` double"
+        [("x", 0, 1.0), ("x", 2 * STEP, 3.0)], "`a``b` string, `t``s` long, `v``a.l` double"
     )
-    out = gf.gap_fill(df, fill_type, 0, 2 * STEP, STEP, ["a`b"], time_col="t`s", value_col="v`al")
-    assert out.columns == ["t`s", "a`b", "v`al"]
-    filled = 1.0 if fill_type == gf.FILL_PREVIOUS else None
-    got = sorted((r["a`b"], r["t`s"], r["v`al"]) for r in out.collect())
-    assert got == [("x", 0, 1.0), ("x", STEP, filled), ("x", 2 * STEP, 3.0)]
+    filled = {gf.FILL_NULL: None, gf.FILL_PREVIOUS: 1.0, gf.FILL_LINEAR: 2.0}[fill_type]
+    for chunk_buckets in (gf.CHUNK_BUCKETS, 1):
+        monkeypatch.setattr(gf, "CHUNK_BUCKETS", chunk_buckets)
+        out = gf.gap_fill(
+            df, fill_type, 0, 2 * STEP, STEP, ["a`b"], time_col="t`s", value_col="v`a.l"
+        )
+        got = sorted((r["a`b"], r["t`s"], r["v`a.l"]) for r in out.collect())
+        assert out.columns == ["t`s", "a`b", "v`a.l"]
+        assert got == [("x", 0, 1.0), ("x", STEP, filled), ("x", 2 * STEP, 3.0)], chunk_buckets

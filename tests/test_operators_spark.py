@@ -82,6 +82,32 @@ class TestGapFill:
                gap_fill(self._agg(spark), "linear", 0, 120, 60, ["g"]).collect()}
         assert out[(60, "a")] == 2.0  # midpoint of 1 and 3
 
+    @pytest.mark.parametrize("fill_type", ["null", "previous"])
+    def test_ungrouped_empty_input_is_an_all_null_spine(self, spark, fill_type):
+        """No aggregated row at all: the ungrouped spine still lists every
+        bucket, each NULL (the global aggregate emits one empty row)."""
+        empty = spark.createDataFrame([], "time long, value double")
+        out = gap_fill(empty, fill_type, 0, 120, 60).collect()
+        assert sorted((r["time"], r["value"]) for r in out) == [(0, None), (60, None), (120, None)]
+
+    @pytest.mark.parametrize("chunk_buckets", [1024, 1])
+    @pytest.mark.parametrize("fill_type,mid", [("null", None), ("previous", 5.0), ("linear", 3.5)])
+    def test_null_tag_series_keeps_its_values(self, spark, monkeypatch, fill_type, mid, chunk_buckets):
+        """A series whose tag is NULL is a series of its own: its values
+        stay on the spine and fill like any other (an equi-join on the
+        group would never match NULL and null them all). One bucket per
+        chunk also runs the chunked path's carry join on the NULL key."""
+        import ecollector_spark.gapfill as gf
+
+        monkeypatch.setattr(gf, "CHUNK_BUCKETS", chunk_buckets)
+        df = spark.createDataFrame(
+            [(0, "a", 1.0), (0, None, 5.0), (120, None, 2.0)], "time long, g string, value double"
+        )
+        out = gap_fill(df, fill_type, 0, 120, 60, ["g"]).collect()
+        assert len(out) == 6
+        null_tag = {r["time"]: r["value"] for r in out if r["g"] is None}
+        assert null_tag == {0: 5.0, 60: mid, 120: 2.0}
+
 
 class TestGapFillAcrossChunks:
     """The chunked fill must be value-identical to a naive single-window

@@ -30,6 +30,10 @@ CHECKS = {
         "GreaterThanOrEqual\\(ts,",
         "partial_",
         "FileScan parquet \\[ts#\\d+L?,event_type#\\d+,value#\\d+\\]",
+        # the FILL spine is built from the aggregate's own rows: no
+        # distinct-groups scan crossed with a generated range
+        "!BroadcastNestedLoopJoin",
+        "!CartesianProduct",
     ],
     # enrichment is a broadcast join, never a shuffle of the fact side
     "enrichment_left_join": ["BroadcastHashJoin"],
@@ -212,6 +216,8 @@ CHECKS = {
     ],
     "ts_group_by_time_tag_fill_previous": [
         "!windowspecdefinition\\(time#\\d+L? ASC",
+        "!BroadcastNestedLoopJoin",
+        "!CartesianProduct",
     ],
     # sequence packing: the tiny chunk-offset frame must broadcast back
     # into the per-doc join, the per-doc running offset must be a
@@ -467,7 +473,8 @@ BOUNDED_WINDOWS = {
             r"time#\d+L ASC",
             "single-chunk fast-path fill: gap_fill proved the spine "
             "<= CHUNK_BUCKETS (1024) buckets from the literal from/to/"
-            "step before choosing this window (gapfill.py)",
+            "step before choosing this window, and the spine frame is "
+            "one partition of aggregated rows already (gapfill.py)",
         ),
     ],
     "datapipe_pack_sequences": [

@@ -248,35 +248,40 @@ class EcollectorApi:
                     # template (public InfluxQL) — write the planned
                     # result into the target measurement and report the
                     # written count in InfluxDB's (time, written) shape
-                    if iq.subquery is not None:
-                        df = apply_result_shape(
-                            plan_tree(self.planner, iq, now=now), iq
-                        )
-                    else:
-                        df = apply_result_shape(self._plan_one(iq.request, iq, now), iq)
+                    df = apply_result_shape(plan_tree(self.planner, iq, now=now), iq)
                     n = self._write_into(df, iq, tags)
                     return _report(
                         [{"name": "result", "columns": ["time", "written"], "values": [[0, n]]}]
                     )
-                series = []
-                if iq.subquery is not None:
-                    # FROM (subquery): one composed plan; series named by
-                    # the innermost measurement (InfluxDB's behavior)
-                    df = apply_result_shape(plan_tree(self.planner, iq, now=now), iq)
-                    if iq.alias and iq.alias != "value":
-                        df = df.withColumnRenamed("value", iq.alias)
-                    inner = iq.subquery
-                    while inner.subquery is not None:
-                        inner = inner.subquery
-                    series.extend(to_series_shape(df, inner.measurement, tags))
-                    return _report(series)
-                for name in names:
-                    req = _dc_replace(iq.request, measurement_name=name)
-                    df = apply_result_shape(self._plan_one(req, iq, now), iq)
-                    if iq.alias and iq.alias != "value" and "value" in df.columns:
-                        df = df.withColumnRenamed("value", iq.alias)
-                    series.extend(to_series_shape(df, name, tags))
-                return _report(series)
+
+                # plan + serialize inside the read-retry closure, like
+                # get_data_points: a swap between the plan's file listing
+                # and the collect re-plans instead of failing the query
+                def _run():
+                    if iq.subquery is not None:
+                        # FROM (subquery): one composed plan; series named
+                        # by the innermost measurement (InfluxDB's behavior)
+                        df = apply_result_shape(plan_tree(self.planner, iq, now=now), iq)
+                        if iq.alias and iq.alias != "value":
+                            df = df.withColumnRenamed("value", iq.alias)
+                        inner = iq.subquery
+                        while inner.subquery is not None:
+                            inner = inner.subquery
+                        return to_series_shape(df, inner.measurement, tags)
+                    series = []
+                    for name in names:
+                        # one statement per measurement: plain selector,
+                        # multi-select or selector arithmetic (plan_tree)
+                        one = _dc_replace(
+                            iq, request=_dc_replace(iq.request, measurement_name=name)
+                        )
+                        df = apply_result_shape(plan_tree(self.planner, one, now=now), iq)
+                        if iq.alias and iq.alias != "value" and "value" in df.columns:
+                            df = df.withColumnRenamed("value", iq.alias)
+                        series.extend(to_series_shape(df, name, tags))
+                    return series
+
+                return _report(self.warehouse.with_read_retry(_run))
             df = self.spark.sql(query)
             cols = df.columns
             return _report(
@@ -290,23 +295,6 @@ class EcollectorApi:
             )
         except Exception as e:  # noqa: BLE001 — error envelope is the contract
             return _report(error=str(e))
-
-    def _plan_one(self, req, iq, now):
-        """Plan one measurement's statement: plain single-selector,
-        comma multi-select (plan_multi), or selector arithmetic (public
-        InfluxQL ``mean("value") * 2`` / ``max(v) - min(v)`` /
-        ``"value" * 1000``). Single-leaf arithmetic applies the
-        expression to the normally-planned value column — fills,
-        transforms and tier routing behave exactly as without the
-        arithmetic; multi-leaf rides ONE plan_multi groupBy and combines
-        the aggregate columns per bucket. Delegates to plan_tree's
-        no-subquery branch — the one implementation of the statement →
-        DataFrame mapping."""
-        from dataclasses import replace as _dc_replace
-
-        from ecollector_spark.influxql import plan_tree
-
-        return plan_tree(self.planner, _dc_replace(iq, request=req), now=now)
 
     def _write_into(self, df, iq, tags: list[str]) -> int:
         """Distributed write for ``SELECT ... INTO``: the planned result

@@ -37,6 +37,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ecollector_spark.functions import quote_ident
+
 DEFAULT_LSH_SEED = "ecollector-lsh"
 
 
@@ -81,17 +83,11 @@ def _as_double(c: Column) -> Column:
     return c.cast("array<double>")
 
 
-def cosine_scores(
-    emb: DataFrame, query_vec: Column | str, vec_col: str = "embedding"
-) -> DataFrame:
-    if isinstance(query_vec, str):
-        v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-        q = f"CAST(`{query_vec}` AS ARRAY<DOUBLE>)"
-        return emb.withColumn("cosine", F.expr(_cosine_sql(v, q)))
-    v = _as_double(F.col(vec_col))
-    q = _as_double(query_vec)
-    cos = _dot(v, q) / (F.sqrt(_dot(v, v)) * F.sqrt(_dot(q, q)))
-    return emb.withColumn("cosine", cos)
+def cosine_scores(emb: DataFrame, query_vec: str, vec_col: str = "embedding") -> DataFrame:
+    """``emb`` plus a ``cosine`` column between the named vector columns."""
+    v = f"CAST({quote_ident(vec_col)} AS ARRAY<DOUBLE>)"
+    q = f"CAST({quote_ident(query_vec)} AS ARRAY<DOUBLE>)"
+    return emb.withColumn("cosine", F.expr(_cosine_sql(v, q)))
 
 
 def brute_force_topk(
@@ -99,7 +95,7 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k by cosine against the embedding of ``query_id``.
     Output (vec_id, cosine) ordered desc, ties by vec_id."""
-    q = emb.where(F.col("vec_id") == query_id).select(F.col(vec_col).alias("_q"))
+    q = emb.where(F.col("vec_id") == query_id).select(F.col(quote_ident(vec_col)).alias("_q"))
     scored = cosine_scores(emb.crossJoin(F.broadcast(q)), "_q", vec_col)
     return (
         scored.where(F.col("vec_id") != query_id)
@@ -114,7 +110,7 @@ def cosine_threshold(
 ) -> DataFrame:
     """All vectors with round(cosine,6) >= threshold vs the query vector —
     the deterministic (orderless) form of similarity search."""
-    q = emb.where(F.col("vec_id") == query_id).select(F.col(vec_col).alias("_q"))
+    q = emb.where(F.col("vec_id") == query_id).select(F.col(quote_ident(vec_col)).alias("_q"))
     scored = cosine_scores(emb.crossJoin(F.broadcast(q)), "_q", vec_col)
     # one-element Generate barrier (r13, same class as the near-dup
     # verifies): the threshold filter otherwise pushes below the
@@ -1959,7 +1955,7 @@ def lsh_bucketed_search(
     for t, tp in enumerate(planes):
         c = hyperplane_bucket(F.col("_v"), tp) == F.col(f"_qb{t}")
         match = c if match is None else (match | c)
-    scored = cosine_scores(joined.where(match), F.col("_q"), "_v")
+    scored = cosine_scores(joined.where(match), "_q", "_v")
     return (
         scored.where(F.col("vec_id") != query_id)
         .select("vec_id", F.round("cosine", 6).alias("cosine"))

@@ -33,16 +33,16 @@ EN_STOPWORDS = ("the", "a", "an", "of", "and", "or", "to", "in", "is", "it")
 
 
 def tokens_sql(col: str) -> str:
-    """SQL fragment twin of :func:`tokens_expr` over a named column —
-    one parser call builds the whole tree (the Column-builder form cost
-    ~12 py4j round-trips per invocation; r12 guide §5)."""
+    """SQL fragment of :func:`tokens_expr` over a named column — one
+    parser call builds the whole tree (a Column-builder form cost ~12
+    py4j round-trips per invocation)."""
     return (
         f"transform(regexp_extract_all({_ident(col)}, '[A-Za-z0-9]+', 0),"
         " x -> lower(x))"
     )
 
 
-def tokens_expr(text: Column | str) -> Column:
+def tokens_expr(text: str) -> Column:
     """Lowercased alnum tokens — the DuckDB oracle twin is
     list_filter(string_split_regex(lower(regexp_replace(t,
     '[^A-Za-z0-9 ]',' ','g')), ' +'), x -> x <> '').
@@ -60,10 +60,7 @@ def tokens_expr(text: Column | str) -> Column:
     the tokenize pass over 58k docs) and exceptAll-identical on the
     corpus; this fragment is the per-row floor of the whole text/dedup
     family (quality, curation, shingles, simhash, langid, gopher)."""
-    if isinstance(text, str):
-        return F.expr(tokens_sql(text))
-    toks = F.regexp_extract_all(text, F.lit("[A-Za-z0-9]+"), F.lit(0))
-    return F.transform(toks, lambda x: F.lower(x))
+    return F.expr(tokens_sql(text))
 
 
 def tokens_barrier(
@@ -89,7 +86,7 @@ def tokens_barrier(
 
 
 def shingles_sql(toks_col: str, k: int = 3) -> str:
-    """SQL fragment twin of :func:`shingles_expr` over a named token-array
+    """SQL fragment of :func:`shingles_expr` over a named token-array
     column (same single-parser-call rationale as :func:`tokens_sql`)."""
     t = _ident(toks_col)
     elems = ", ".join(f"element_at({t}, i + {j + 1})" for j in range(k))
@@ -100,24 +97,16 @@ def shingles_sql(toks_col: str, k: int = 3) -> str:
     )
 
 
-def shingles_expr(toks: Column | str, k: int = 3) -> Column:
+def shingles_expr(toks: str, k: int = 3) -> Column:
     """Distinct k-token shingles (space-joined). Empty array when the doc
     has fewer than k tokens (Spark's sequence() would go descending on a
     negative span — guard required)."""
-    if isinstance(toks, str):
-        return F.expr(shingles_sql(toks, k))
-    joined = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        # i + (j+1) as ONE Add, matching the SQL twin's `i + {j+1}` tree
-        # exactly (pinned by tests/test_twin_exprs.py plan equality)
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + (j + 1)) for j in range(k)]),
-    )
-    return F.array_distinct(F.when(F.size(toks) >= k, joined).otherwise(F.array().cast("array<string>")))
+    return F.expr(shingles_sql(toks, k))
 
 
 def lang_score_sql(dt_col: str) -> dict[str, str]:
-    """SQL fragment twins of :func:`lang_score_cols` over a named
-    distinct-token column (single parser call each, r12 guide §5)."""
+    """SQL fragments of :func:`lang_score_cols` over a named
+    distinct-token column (single parser call each)."""
     return {
         lang: (
             f"size(array_intersect({_ident(dt_col)}, array("
@@ -128,26 +117,15 @@ def lang_score_sql(dt_col: str) -> dict[str, str]:
     }
 
 
-def lang_score_cols(dt: Column | str) -> dict[str, Column]:
+def lang_score_cols(dt: str) -> dict[str, Column]:
     """Marker-hit counts per language over a (projected) distinct-token
     array column — one ``size(array_intersect(...))`` per language."""
-    if isinstance(dt, str):
-        return {lang: F.expr(sql) for lang, sql in lang_score_sql(dt).items()}
-    # marker-array literals as one F.expr each (r12 optimization, guide
-    # §5): F.array(*[F.lit(m) ...]) cost ~2 py4j round-trips per marker
-    return {
-        lang: F.size(
-            F.array_intersect(
-                dt, F.expr("array(" + ", ".join(f"'{m}'" for m in markers) + ")")
-            )
-        )
-        for lang, markers in LANG_MARKERS.items()
-    }
+    return {lang: F.expr(sql) for lang, sql in lang_score_sql(dt).items()}
 
 
 def lang_pred_sql(score_cols: dict[str, str]) -> str:
-    """SQL twin of :func:`lang_pred_expr` over named score columns: the
-    same nested when-cascade, one parser call."""
+    """SQL fragment of :func:`lang_pred_expr` over named score columns:
+    a nested CASE cascade, one parser call."""
     best = "greatest(" + ", ".join(_ident(score_cols[lang]) for lang in _LANGS) + ")"
     pred = "'und'"
     for lang in reversed(_LANGS):
@@ -155,18 +133,11 @@ def lang_pred_sql(score_cols: dict[str, str]) -> str:
     return f"CASE WHEN {best} > 0 THEN {pred} ELSE 'und' END"
 
 
-def lang_pred_expr(scores: dict[str, Column] | dict[str, str]) -> Column:
+def lang_pred_expr(scores: dict[str, str]) -> Column:
     """Argmax with the fixed tie-break cascade (en>de>fr>es>zh), 'und'
-    when no marker hits. ``scores`` columns must be projected (each is
-    referenced twice here). A dict of column NAMES takes the
-    single-parser-call SQL path."""
-    if all(isinstance(c, str) for c in scores.values()):
-        return F.expr(lang_pred_sql(scores))
-    best = F.greatest(*scores.values())
-    pred = F.lit("und")
-    for lang in reversed(_LANGS):  # build cascade so earlier langs win ties
-        pred = F.when(scores[lang] == best, lang).otherwise(pred)
-    return F.when(best > 0, pred).otherwise("und")
+    when no marker hits. ``scores`` maps each language to the NAME of a
+    projected score column (each is referenced twice here)."""
+    return F.expr(lang_pred_sql(scores))
 
 
 def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -184,23 +155,16 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return s.select("doc_id", lang_pred_expr(scores).alias("pred_lang"))
 
 
-def _floor6(c: Column) -> Column:
-    # floor-truncation: deterministic across engines where round()'s
-    # half-tie rule is not (dyadic rationals land exactly on .5 ties)
-    return F.floor(c * 1000000.0) / 1000000.0
-
-
 def _floor6_sql(c: str) -> str:
     return f"floor({c} * 1000000.0D) / 1000000.0D"
 
 
 def quality_feature_sql(toks_col: str, text_col: str) -> dict[str, str]:
-    """SQL fragment twins of :func:`quality_feature_cols` over named
-    columns — one parser call per feature instead of ~20 Column-builder
-    py4j round-trips each (r12 guide §5). Same trees: D-suffixed literals
-    are doubles (bare fractional literals would parse as DECIMAL), and
-    the doubled backslashes render the same regex the raw Python string
-    carried."""
+    """SQL fragments of :func:`quality_feature_cols` over named columns
+    — one parser call per feature instead of ~20 Column-builder py4j
+    round-trips each. D-suffixed literals are doubles (bare fractional
+    literals would parse as DECIMAL); the doubled backslashes render the
+    regex ``[^\\w\\s]``."""
     t, x = _ident(toks_col), _ident(text_col)
     nd = f"CAST(size({t}) AS DOUBLE)"
     avg_len = (
@@ -234,40 +198,12 @@ def quality_feature_sql(toks_col: str, text_col: str) -> dict[str, str]:
     }
 
 
-def quality_feature_cols(toks: Column | str, text: Column | str) -> dict[str, Column]:
+def quality_feature_cols(toks: str, text: str) -> dict[str, Column]:
     """The quality features as named Columns over (projected) tokens/text
     columns — shared by ``quality_score`` and the fused curation path so
-    the two produce bit-identical values. String column names take the
-    single-parser-call SQL path (see :func:`quality_feature_sql`)."""
-    if isinstance(toks, str) and isinstance(text, str):
-        return {
-            name: F.expr(sql)
-            for name, sql in quality_feature_sql(toks, text).items()
-        }
-    n = F.size(toks)
-    nd = n.cast("double")
-    avg_len = F.when(
-        n > 0, F.aggregate(toks, F.lit(0.0), lambda acc, x: acc + F.length(x)) / nd
-    ).otherwise(F.lit(0.0))
-    stop_hits = F.size(
-        F.filter(toks, lambda x: x.isin(*EN_STOPWORDS))
-    )
-    stop_ratio = F.when(n > 0, stop_hits / nd).otherwise(F.lit(0.0))
-    punct = F.regexp_count(text, F.lit(r"[^\w\s]"))  # r13: see quality_feature_sql
-    punct_ratio = F.when(F.length(text) > 0, punct / F.length(text).cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    score = (
-        0.4 * F.least(nd / 100.0, F.lit(1.0))
-        + 0.3 * (1.0 - stop_ratio)
-        + 0.3 * F.least(avg_len / 8.0, F.lit(1.0))
-    )
+    the two produce bit-identical values (see :func:`quality_feature_sql`)."""
     return {
-        "n_tokens": n,
-        "avg_token_len": _floor6(avg_len),
-        "stopword_ratio": _floor6(stop_ratio),
-        "punct_ratio": _floor6(punct_ratio),
-        "quality": _floor6(score),
+        name: F.expr(sql) for name, sql in quality_feature_sql(toks, text).items()
     }
 
 

@@ -14,6 +14,8 @@ codegen with no window-struct allocation.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -103,6 +105,17 @@ def _wall_epoch(col: Column, zone: str) -> Column:
     return F.unix_timestamp(F.from_utc_timestamp(F.timestamp_seconds(col), zone))
 
 
+def wall_clock(epoch: int, zone: str) -> int:
+    """Driver-side :func:`_wall_epoch`: epoch seconds -> wall-clock
+    seconds in ``zone``. Raises on an unknown zone name."""
+    from datetime import datetime
+    from zoneinfo import ZoneInfo
+
+    return epoch + int(
+        datetime.fromtimestamp(epoch, tz=ZoneInfo(zone)).utcoffset().total_seconds()
+    )
+
+
 def tz_bucket_expr(ts_col, zone: str, step_seconds: int, offset_seconds: int = 0) -> Column:
     """UTC-instant bucket key for sub-day tz() buckets (see module note)."""
     c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
@@ -121,13 +134,9 @@ def zone_offsets(zone: str, from_epoch: int, to_epoch: int) -> list[int]:
     """Distinct UTC offsets (seconds) of ``zone`` over the padded range —
     driver-side metadata via stdlib zoneinfo (hourly scan is exact: DST
     regimes last months, never less than an hour)."""
-    from datetime import datetime, timezone as _tz
-    from zoneinfo import ZoneInfo
-
-    z = ZoneInfo(zone)
     offs: list[int] = []
     for e in range(from_epoch - 86400, to_epoch + 86400 + 1, 3600):
-        o = int(datetime.fromtimestamp(e, tz=z).utcoffset().total_seconds())
+        o = wall_clock(e, zone) - e
         if o not in offs:
             offs.append(o)
     return offs
@@ -148,15 +157,7 @@ def tz_spine_times(zone: str, from_epoch: int, to_epoch: int,
     covered instant equals ``o``. Its key is w - off(w - o): identical to
     ``tz_bucket_expr``'s normalization, so every data key is on it."""
     offs = zone_offsets(zone, from_epoch, to_epoch)
-    from datetime import datetime
-    from zoneinfo import ZoneInfo
-
-    z = ZoneInfo(zone)
-
-    def _wall(e: int) -> int:
-        return e + int(datetime.fromtimestamp(e, tz=z).utcoffset().total_seconds())
-
-    wall_from, wall_to = _wall(from_epoch), _wall(to_epoch)
+    wall_from, wall_to = wall_clock(from_epoch, zone), wall_clock(to_epoch, zone)
     n_from = (wall_from - offset_seconds) // step_seconds * step_seconds + offset_seconds
     n_labels = max(0, (wall_to - n_from) // step_seconds + 1)
     zone_lit = "'" + zone.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -174,3 +175,52 @@ def tz_spine_times(zone: str, from_epoch: int, to_epoch: int,
         f"_o -> CAST(_w - {off_a} AS BIGINT)))))"
     )
     return sql, n_labels * len(offs)
+
+
+class Bucketing(NamedTuple):
+    """How one request buckets ``ts`` for ``GROUP BY time(step)``."""
+
+    #: bucket key column, aliased ``time``
+    key: Column
+    #: fill range, in the key's space
+    fill_from: int
+    fill_to: int
+    #: non-uniform fill spine ``(sql, bound)`` for sub-day tz() buckets
+    spine: tuple[str, int] | None
+    #: the key as the output's UTC epoch seconds
+    time_out: Column
+
+
+def bucketing(zone: str, step_seconds: int, offset_seconds: int,
+              from_epoch: int, to_epoch: int) -> Bucketing:
+    """Bucket key, fill range, spine and output time for ``step_seconds``
+    buckets, in UTC or aligned to ``zone``'s wall clock (tz()). Two
+    DST-exact tz regimes:
+
+    - step >= 1d: a wall day legitimately spans a DST shift (23 or 25
+      real hours, one row), so the key and the fill range are in
+      uniform wall seconds and the output converts each wall bucket
+      start back to the UTC instant it names (``to_utc_timestamp``
+      applies the zone's offset at that wall time).
+    - step < 1d: the key is the UTC instant of the bucket's wall start
+      (:func:`tz_bucket_expr`), so a fall-back's repeated wall hour
+      yields two rows (InfluxDB parity) and the spring-forward gap none;
+      the fill spine is the matching non-uniform instant set
+      (:func:`tz_spine_times`), and previous/linear fill run on true
+      elapsed time."""
+    time_out = F.col("time").cast("long")
+    if not zone:
+        key = time_bucket("ts", step_seconds, offset_seconds)
+        return Bucketing(key.alias("time"), from_epoch, to_epoch, None, time_out)
+    if step_seconds < 86400:
+        key = tz_bucket_expr("ts", zone, step_seconds, offset_seconds)
+        spine = tz_spine_times(zone, from_epoch, to_epoch, step_seconds, offset_seconds)
+        return Bucketing(key.alias("time"), from_epoch, to_epoch, spine, time_out)
+    key = time_bucket(F.from_utc_timestamp("ts", zone), step_seconds, offset_seconds)
+    return Bucketing(
+        key.alias("time"),
+        wall_clock(from_epoch, zone),
+        wall_clock(to_epoch, zone),
+        None,
+        F.unix_timestamp(F.to_utc_timestamp(F.timestamp_seconds(time_out), zone)),
+    )

@@ -29,10 +29,9 @@ from pyspark.sql import functions as F
 
 from ecollector_spark import tiers
 from ecollector_spark.functions.timeutil import (
+    bucketing,
     parse_relative_duration,
     time_bucket,
-    tz_bucket_expr,
-    tz_spine_times,
 )
 from ecollector_spark.gapfill import gap_fill
 
@@ -632,42 +631,17 @@ class QueryPlanner:
             df = self.tier_reader(choice.tier)
         df = df.where(F.col("measurement") == req.measurement_name)
         ts_epoch = F.unix_timestamp("ts")
-        # Every epoch comparison is paired with its EXACTLY-equivalent
-        # timestamp-literal form (r10): ``unix_timestamp(ts)`` floors to
-        # whole seconds, so ``unix(ts) >= X`` == ``ts >= X`` and
-        # ``unix(ts) <= X`` == ``ts < X+1`` for integer X. The function-
-        # wrapped form can never reach the parquet scan; the literal
-        # form is sargable, so Catalyst pushes it into PushedFilters and
-        # row-group min/max stats prune — the difference between
-        # scanning a day and scanning the tier at 100 TB (plan-audited:
-        # influxql_lone_lower_bound asserts ``ts >=`` in the scan).
+        # the sargable ts literal is the row-exact bound (and is pushed to the scan)
         ts_lit = lambda e: F.timestamp_seconds(F.lit(int(e)))  # noqa: E731
         if req.from_time or req.to_time:
             if req.from_time:
-                df = df.where(
-                    (ts_epoch >= from_epoch) & (F.col("ts") >= ts_lit(from_epoch))
-                )
+                df = df.where(F.col("ts") >= ts_lit(from_epoch))
             if to_abs_epoch is not None:
-                df = df.where(
-                    (ts_epoch <= to_abs_epoch)
-                    & (F.col("ts") < ts_lit(to_abs_epoch + 1))
-                )
-            if rel_to_epoch is not None:
-                df = df.where(
-                    (ts_epoch < rel_to_epoch)
-                    & (F.col("ts") < ts_lit(rel_to_epoch))
-                )
-        else:
-            if req.relative_time or rel_to_epoch is None:
-                df = df.where(
-                    (ts_epoch > from_epoch)
-                    & (F.col("ts") >= ts_lit(from_epoch + 1))
-                )
-            if rel_to_epoch is not None:
-                df = df.where(
-                    (ts_epoch < rel_to_epoch)
-                    & (F.col("ts") < ts_lit(rel_to_epoch))
-                )
+                df = df.where(F.col("ts") < ts_lit(to_abs_epoch + 1))
+        elif req.relative_time or rel_to_epoch is None:
+            df = df.where(F.col("ts") >= ts_lit(from_epoch + 1))
+        if rel_to_epoch is not None:
+            df = df.where(F.col("ts") < ts_lit(rel_to_epoch))
 
         # dir-mangled field (r9): selecting/aggregating "e_import" means
         # the import-direction twin rows of the measurement — ONE pushed
@@ -825,56 +799,21 @@ class QueryPlanner:
                 ts_epoch,
                 from_epoch,
             ))
-        # tz('<zone>') (public InfluxQL): buckets align to the zone's
-        # WALL clock. Two regimes (both DST-exact, closing ADVICE r6's
-        # fall-back deviation):
-        #  - step >= 1d: a wall day legitimately SPANS a DST shift (23 or
-        #    25 real hours, one row), so groupBy + fill spine run in
-        #    uniform wall-second space and the final select converts each
-        #    wall bucket start back to its UTC instant.
-        #  - step < 1d: the bucket KEY is the UTC instant of the bucket's
-        #    wall start (timeutil.tz_bucket_expr), so the repeated wall
-        #    hour of a fall-back yields TWO distinct rows (InfluxDB
-        #    parity) and the spring-forward gap yields zero; the FILL
-        #    spine is the matching NON-uniform instant set
-        #    (timeutil.tz_spine_times), and no final conversion is needed
-        #    — keys are already UTC epochs, and previous/linear fill
-        #    order/interpolation run on true elapsed time.
-        # Raw (unbucketed) shapes are unaffected: tz only moves bucket
-        # boundaries, and our wire format is epoch seconds either way.
-        tz_subday = bool(req.tz) and bool(step) and step < 86400
-        fill_from, fill_to = from_epoch, to_epoch
-        fill_spine = None
-        if req.tz and step:
-            from zoneinfo import ZoneInfo
-
-            zone = ZoneInfo(req.tz)  # raises on an unknown zone name
-            if tz_subday:
-                fill_spine = tz_spine_times(req.tz, from_epoch, to_epoch, step, bucket_off)
-            else:
-                def _wall(e: int) -> int:
-                    return e + int(
-                        datetime.fromtimestamp(e, tz=zone).utcoffset().total_seconds()
-                    )
-
-                fill_from, fill_to = _wall(from_epoch), _wall(to_epoch)
+        # tz('<zone>') (public InfluxQL) aligns buckets to the zone's wall
+        # clock, DST-exact (timeutil.bucketing). Raw (unbucketed) shapes
+        # are unaffected: tz only moves bucket boundaries, and the wire
+        # format is epoch seconds either way.
+        bk = bucketing(req.tz, step, bucket_off, from_epoch, to_epoch) if step else None
         if step:
-            if tz_subday:
-                bucket = tz_bucket_expr("ts", req.tz, step, bucket_off).alias("time")
-            else:
-                bucket_src = (
-                    F.from_utc_timestamp("ts", req.tz) if req.tz else F.col("ts")
-                )
-                bucket = time_bucket(bucket_src, step, bucket_off).alias("time")
             if data_function == "mode":
-                agg = _mode_agg(df, [bucket], group_cols, value_col, ts_epoch)
+                agg = _mode_agg(df, [bk.key], group_cols, value_col, ts_epoch)
             elif data_function == "integral":
-                agg = _integral_agg(df, [bucket], group_cols, value_col, req.function_param)
+                agg = _integral_agg(df, [bk.key], group_cols, value_col, req.function_param)
             else:
                 builder = (
                     _AGG_BUILDERS["last"] if data_function == "difference" else agg_builder
                 )
-                agg = df.groupBy(bucket, *group_cols).agg(
+                agg = df.groupBy(bk.key, *group_cols).agg(
                     builder(value_col, "ts").alias("value")
                 )
             if data_function == "difference":
@@ -920,21 +859,14 @@ class QueryPlanner:
             agg = gap_fill(
                 agg,
                 fill_type,
-                fill_from,
-                fill_to,
+                bk.fill_from,
+                bk.fill_to,
                 step,
                 group_cols,
                 offset_seconds=bucket_off,
-                spine=fill_spine,
+                spine=bk.spine,
             )
-        time_out = F.col("time").cast("long")
-        if req.tz and step and not tz_subday:
-            # daily+ wall bucket start -> the UTC instant it names
-            # (DST-exact: to_utc_timestamp applies the zone's offset AT
-            # that wall time; sub-day keys are already UTC instants)
-            time_out = F.unix_timestamp(
-                F.to_utc_timestamp(F.timestamp_seconds(time_out), req.tz)
-            )
+        time_out = bk.time_out if step else F.col("time").cast("long")
         return agg.select(
             time_out.alias("time"),
             *group_cols,
@@ -1127,31 +1059,8 @@ class QueryPlanner:
             bucket_off = (
                 _parse_signed_duration(req.group_by_offset) if req.group_by_offset else 0
             )
-            # tz('<zone>'): same two-regime bucket space as plan() —
-            # daily+ in wall seconds (convert at the end), sub-day keyed
-            # by the UTC bucket-start instant with a non-uniform spine
-            tz_subday = bool(req.tz) and step < 86400
-            spine_from, spine_to = ctx["from_epoch"], ctx["to_epoch"]
-            spine = None
-            if req.tz and tz_subday:
-                spine = tz_spine_times(req.tz, spine_from, spine_to, step, bucket_off)
-            elif req.tz:
-                from zoneinfo import ZoneInfo
-
-                zone = ZoneInfo(req.tz)
-
-                def _wall(e: int) -> int:
-                    return e + int(
-                        datetime.fromtimestamp(e, tz=zone).utcoffset().total_seconds()
-                    )
-
-                spine_from, spine_to = _wall(spine_from), _wall(spine_to)
-            if tz_subday:
-                bucket = tz_bucket_expr("ts", req.tz, step, bucket_off).alias("time")
-            else:
-                bucket_src = F.from_utc_timestamp("ts", req.tz) if req.tz else F.col("ts")
-                bucket = time_bucket(bucket_src, step, bucket_off).alias("time")
-            agg = df.groupBy(bucket, *tag_cols).agg(*aggs)
+            bk = bucketing(req.tz, step, bucket_off, from_epoch, ctx["to_epoch"])
+            agg = df.groupBy(bk.key, *tag_cols).agg(*aggs)
             # FILL(null) is InfluxQL's default and must not silently
             # change when a second selector is added: every column rides
             # the spine; FILL(0) coalesces each. previous/linear stay
@@ -1161,23 +1070,19 @@ class QueryPlanner:
                 agg = gap_fill(
                     agg,
                     fill_type,
-                    spine_from,
-                    spine_to,
+                    bk.fill_from,
+                    bk.fill_to,
                     step,
                     tag_cols,
                     offset_seconds=bucket_off,
-                    spine=spine,
+                    spine=bk.spine,
                 )
         else:
             agg = df.groupBy(*tag_cols).agg(*aggs)
             agg = agg.select(
                 F.lit(from_epoch).cast("long").alias("time"), *tag_cols, *names
             )
-        time_out = F.col("time").cast("long")
-        if req.tz and step and not tz_subday:
-            time_out = F.unix_timestamp(
-                F.to_utc_timestamp(F.timestamp_seconds(time_out), req.tz)
-            )
+        time_out = bk.time_out if step else F.col("time").cast("long")
         return agg.select(
             time_out.alias("time"),
             *tag_cols,

@@ -392,12 +392,9 @@ class Warehouse:
         ``spark.sql.parquet.aggregatePushdown`` is enabled (off by
         default), so at scale the sidecar is the path that matters.
         """
-        sidecar = os.path.join(self.tier_path(tier), "_hwm")
-        try:
-            with open(sidecar) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            pass
+        hwm = self._read_hwm_sidecar(tier)
+        if hwm is not None:
+            return hwm
         df = self.read_tier(tier)
         if df is None:
             return None

@@ -932,6 +932,32 @@ class TestConcurrentReadDuringSwap:
             t.join(timeout=60)
         assert errors == []
 
+    def test_influxql_read_retries_across_swap(self, spark, wh, monkeypatch):
+        """An InfluxQL series read plans and collects inside the read
+        retry too: one swap lands between the first tier read and the
+        collect, and the statement returns the post-swap rows."""
+        api = EcollectorApi(spark, wh)
+        cut = int(datetime(2024, 1, 1, 0, 5, 30, tzinfo=timezone.utc).timestamp())
+        real_read = wh.read_tier
+        swapped = []
+
+        def read_then_swap(*args, **kwargs):
+            df = real_read(*args, **kwargs)
+            if not swapped:
+                swapped.append(True)
+                wh.replace_points_from(self._replacement(spark), "gen_raw", cut)
+            return df
+
+        monkeypatch.setattr(wh, "read_tier", read_then_swap)
+        rep = api.run_query(
+            'SELECT "value" FROM "electricity_meter_power" WHERE '
+            "time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-01T01:00:00Z'",
+            now=datetime(2024, 1, 1, 1, tzinfo=timezone.utc),
+        )
+        assert swapped and not rep["val"].get("error"), rep["val"]
+        (series,) = rep["val"]["Results"][0]["Series"]
+        assert [v[1] for v in series["values"]] == [100.0, 999.0]
+
     def test_recovery_mid_swap_does_not_break_writer(self, spark, wh, monkeypatch):
         """ADVICE r6: a reader's recovery pass landing between _swap_in's
         rename(dst, old) and rename(tmp, dst) must not rename the .old
@@ -988,6 +1014,26 @@ class TestConcurrentReadDuringSwap:
         assert not os.path.isdir(mdir + ".old")
         # and the live data is untouched
         assert wh.read_tier("gen_raw").count() == 4
+
+
+class TestTimePredicates:
+    """The planner bounds ``ts`` by sargable literals only: no
+    ``unix_timestamp(ts)`` comparison is evaluated per row."""
+
+    def test_relative_range_filters_only_on_ts_literals(self, wh):
+        req = DataPointsRequest(
+            measurement_name="electricity_meter_power",
+            relative_time="1h",
+            group_by_time="10m",
+            data_function="max",
+        )
+        now = datetime(2024, 1, 1, 1, tzinfo=timezone.utc)
+        qe = EcollectorApi(wh.spark, wh).planner.plan(req, now=now)._jdf.queryExecution()
+        filters = [
+            line for line in qe.optimizedPlan().toString().splitlines() if "Filter " in line
+        ]
+        assert filters and not any("unix_timestamp" in line for line in filters), filters
+        assert "GreaterThanOrEqual(ts," in qe.executedPlan().toString()
 
 
 class TestCanonicalSchema:

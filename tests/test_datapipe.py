@@ -113,6 +113,13 @@ class TestSimilarity:
         assert [r["vec_id"] for r in out] == [1, 4, 2]
         assert out[0]["cosine"] > 0.99
 
+    def test_topk_backtick_vector_column(self, emb):
+        # a backtick in the vector column's name must not break the
+        # cosine fragment's parse
+        named = emb.withColumnRenamed("embedding", "e`mb")
+        out = similarity.brute_force_topk(named, query_id=0, k=3, vec_col="e`mb").collect()
+        assert [r["vec_id"] for r in out] == [1, 4, 2]
+
     def test_threshold(self, emb):
         out = {r["vec_id"] for r in similarity.cosine_threshold(emb, 0, 0.5).collect()}
         assert out == {1, 4}

@@ -28,6 +28,9 @@ CHECKS = {
         # r10: the time range reaches the scan as a sargable timestamp
         # literal (unix_timestamp() alone could never push)
         "GreaterThanOrEqual\\(ts,",
+        # ... and is the only time bound: no per-row unix_timestamp(ts)
+        # comparison in any Filter (the bucket key's sits in the aggregate)
+        "!Filter[^\\n]*unix_timestamp",
         "partial_",
         "FileScan parquet \\[ts#\\d+L?,event_type#\\d+,value#\\d+\\]",
         # the FILL spine is built from the aggregate's own rows: no

@@ -22,6 +22,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecollector_spark.functions import barriers
 from ecollector_spark.functions.timeutil import parse_relative_duration, time_bucket
 from ecollector_spark.gapfill import gap_fill
 from ecollector_spark.query import (
@@ -309,7 +310,7 @@ class EcollectorApi:
             if iq.into_rp not in known:
                 raise ValueError(f"unknown retention policy {iq.into_rp!r}")
         target = iq.into_measurement
-        rows = df.where(F.col("value").isNotNull()).localCheckpoint(eager=False)
+        rows = barriers.materialize(df.where(F.col("value").isNotNull()))
         tag_cols = {
             c.name: F.col(c.name) if c.name in tags else F.lit(None).cast("string")
             for c in DATAPOINT_SCHEMA

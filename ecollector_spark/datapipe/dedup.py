@@ -26,14 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ecollector_spark.datapipe.text import shingles_expr, tokens_expr
-
-
-def _floor6(c):
-    """Truncate to 6 decimals. floor is a deterministic function of the
-    double (unlike round, whose half-tie rule differs across engines on
-    decimal-exact dyadic rationals like 2**-7)."""
-    return F.floor(c * 1000000.0) / 1000000.0
+from ecollector_spark.datapipe.text import floor6_sql, shingles_expr, tokens_expr
+from ecollector_spark.functions import barriers
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -60,10 +54,10 @@ def _doc_shingles(docs: DataFrame, text_col: str, k: int, materialize: bool = Fa
         # The shingle table feeds the signature aggregate, both sides of
         # the verification intersection join, and the two size joins —
         # five evaluations of tokenize+shingle+explode without a
-        # materialization barrier. Lazy localCheckpoint computes it once
-        # on first use; at cluster scale this is the standard
-        # persist-the-exploded-index step of an LSH pipeline.
-        sh = sh.localCheckpoint(eager=False)
+        # barrier. materialize computes it once on first use; at cluster
+        # scale this is the standard persist-the-exploded-index step of
+        # an LSH pipeline.
+        sh = barriers.materialize(sh)
     return sh
 
 
@@ -156,8 +150,8 @@ def _verify_jaccard(
         F.count("*").alias("n_sh"),
     )
     if cand_docs is None:
-        # r13 (exact path only): the per-doc set table behind a lazy
-        # localCheckpoint — the a/b sides of the pair join otherwise
+        # r13 (exact path only): the per-doc set table behind
+        # barriers.materialize — the a/b sides of the pair join otherwise
         # each replay the xxhash64 + collect_set aggregate over the
         # full shingle table (plan-verified: the ObjectHashAggregate +
         # Exchange subtree appeared twice; the branches canonicalize
@@ -169,30 +163,29 @@ def _verify_jaccard(
         # bounded to candidate docs (a small table by construction —
         # duplication there is cheap, and the pinned audit contract
         # keeps the semi-join visible in the final plan frame).
-        sets = sets.localCheckpoint(eager=False)
+        sets = barriers.materialize(sets)
     a = sets.select(
         F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a"), F.col("n_sh").alias("na")
     )
     b = sets.select(
         F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("set_b"), F.col("n_sh").alias("nb")
     )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    jac = inter / (F.col("na") + F.col("nb") - inter)
-    # jaccard through a one-element Generate barrier (r13, the repo's
-    # standard shape): the threshold filter otherwise pushes INTO the
-    # join condition with alias substitution, so array_intersect — the
-    # verify's per-pair compute — ran once per candidate in the
-    # condition AND again per surviving pair in the projection. Behind
-    # the Generate it runs exactly once per candidate; on dup-heavy
-    # corpora (most candidates survive) that halves the verify compute.
-    # Row multiset unchanged (the array always has one element).
+    inter = "size(array_intersect(set_a, set_b))"
+    jac = F.expr(floor6_sql(f"{inter} / (na + nb - {inter})"))
+    # jaccard behind a fence (functions.barriers): the threshold filter
+    # otherwise pushes INTO the join condition with alias substitution,
+    # so array_intersect — the verify's per-pair compute — ran once per
+    # candidate in the condition AND again per surviving pair in the
+    # projection. Behind the fence it runs exactly once per candidate;
+    # on dup-heavy corpora (most candidates survive) that halves the
+    # verify compute.
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
         .select(
             "doc_a",
             "doc_b",
-            F.explode(F.array(_floor6(jac))).alias("jaccard"),
+            barriers.fence(jac).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -324,13 +317,13 @@ def minhash_lsh_pairs(
         # join land in the already-spill-bound regime, and on a
         # dup-heavy corpus they filter nothing); it pays only inside
         # hybrid, where the border is small.
-        # r13: signatures behind a lazy localCheckpoint (the hybrid
+        # r13: signatures behind barriers.materialize (the hybrid
         # path's shape) — the band self-join's two branches otherwise
         # each replay the full shingle aggregate (plan-verified: the
         # Sort/HashAggregate subtree appeared twice). Per-doc fixed
         # width (num_hashes longs), same scale class the hybrid path
         # already checkpoints.
-        sig = _signatures_from_shingles(sh, num_hashes).localCheckpoint(eager=False)
+        sig = barriers.materialize(_signatures_from_shingles(sh, num_hashes))
         cand = minhash_lsh_candidates(sh, num_hashes, bands, sig=sig)
         return _verify_jaccard(sh, cand, threshold)
     if verify != "hybrid":
@@ -342,7 +335,7 @@ def minhash_lsh_pairs(
     # hot-bucket aggregate, the candidate-doc semi-join) then replays a
     # cheap explode over the cached signatures instead of re-running
     # the shingle aggregate.
-    sig = _signatures_from_shingles(sh, num_hashes).localCheckpoint(eager=False)
+    sig = barriers.materialize(_signatures_from_shingles(sh, num_hashes))
     bl = _bands_long(sig, num_hashes, bands)
     cand = _pairs_from_bands(bl)
     # docs that can appear in any pair = members of a >=2-doc bucket —
@@ -391,7 +384,7 @@ def _verify_hybrid(
     )
     hi, lo = min(1.0, threshold + margin), max(0.0, threshold - margin)
     sure = scored.where(F.col("est") >= hi).select(
-        "doc_a", "doc_b", _floor6(F.col("est")).alias("jaccard")
+        "doc_a", "doc_b", F.expr(floor6_sql("est")).alias("jaccard")
     )
     border = scored.where((F.col("est") < hi) & (F.col("est") > lo)).select(
         "doc_a", "doc_b"
@@ -482,7 +475,7 @@ def connected_components(
     O(component diameter) rounds (dup clusters are shallow). Each round
     is one join + one aggregate on node id — all hash-partitioned, no
     driver-side graph. Lineage is truncated per round with a lazy
-    localCheckpoint so plan depth stays O(1) instead of O(iterations)
+    materialize (functions.barriers) so plan depth stays O(1) instead of O(iterations)
     (the classic iterative-algorithm trap at scale); convergence is
     detected by a count of changed labels. If the label propagation has
     not converged after ``max_iter`` rounds (component diameter >
@@ -492,11 +485,10 @@ def connected_components(
     sym = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-    labels = (
+    labels = barriers.materialize(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(max_iter):
         neigh = (
@@ -504,13 +496,11 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nlabel"))
         )
-        new_labels = (
-            labels.join(neigh, labels["node"] == neigh["src"], "left")
-            .select(
+        new_labels = barriers.materialize(
+            labels.join(neigh, labels["node"] == neigh["src"], "left").select(
                 "node",
                 F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
             )
-            .localCheckpoint(eager=False)
         )
         changed = (
             new_labels.alias("n")

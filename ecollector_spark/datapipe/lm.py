@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ecollector_spark.datapipe.text import tokens_expr
+from ecollector_spark.functions import barriers
 
 #: sentence padding: the tokenizer strips non-alnum characters, so no
 #: real token can ever collide with these markers
@@ -148,8 +149,8 @@ def score_perplexity(
         raise ValueError("total_tokens must be positive (empty reference?)")
     k = order
     # the lookups read the counts table — materialize the training job
-    # once (lazy checkpoint) instead of re-running it per join branch
-    c = lm.localCheckpoint(eager=False)
+    # once instead of re-running it per join branch
+    c = barriers.materialize(lm)
     p = docs.select("doc_id", _padded(text_col, k).alias("_p"))
 
     def hashes(i):

@@ -37,19 +37,16 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecollector_spark.functions import quote_ident
+from ecollector_spark.functions import barriers, quote_ident
 
 DEFAULT_LSH_SEED = "ecollector-lsh"
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product (deterministic order)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def _dot_sql(a: str, b: str) -> str:
-    """SQL fragment twin of :func:`_dot` (same sequential left-fold) —
-    one parser call instead of ~50 py4j round-trips (r12 guide §5)."""
+    """Dot product of two double-array SQL fragments as a sequential
+    left fold (deterministic order, bit-identical to the DuckDB
+    oracle's list_reduce) — one parser call instead of ~50 py4j
+    round-trips as a Column."""
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
@@ -112,13 +109,13 @@ def cosine_threshold(
     the deterministic (orderless) form of similarity search."""
     q = emb.where(F.col("vec_id") == query_id).select(F.col(quote_ident(vec_col)).alias("_q"))
     scored = cosine_scores(emb.crossJoin(F.broadcast(q)), "_q", vec_col)
-    # one-element Generate barrier (r13, same class as the near-dup
+    # behind a fence (functions.barriers, same class as the near-dup
     # verifies): the threshold filter otherwise pushes below the
     # projection with alias substitution and the dim-length cosine fold
     # evaluates twice for every surviving row
     return (
         scored.where(F.col("vec_id") != query_id)
-        .select("vec_id", F.explode(F.array(F.round("cosine", 6))).alias("cosine"))
+        .select("vec_id", barriers.fence(F.round("cosine", 6)).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -147,16 +144,14 @@ def hyperplanes(
     ]
 
 
-def _dot_lit(v: Column, ws: list[float]) -> Column:
-    return _dot(v, F.array(*[F.lit(float(w)) for w in ws]))
-
-
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Bucket id for one LSH table: bit j set iff dot(vec, plane_j) >= 0."""
-    b = F.lit(0)
-    for j, ws in enumerate(planes):
-        b = b + F.when(_dot_lit(vec, ws) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return b.cast("int")
+def hyperplane_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Bucket id for one LSH table over the named double-array column:
+    bit j set iff dot(vec, plane_j) >= 0."""
+    bits = "".join(
+        f" + CASE WHEN {_dot_sql(vec, _lit_vec_sql(ws))} >= 0 THEN {1 << j} ELSE 0 END"
+        for j, ws in enumerate(planes)
+    )
+    return F.expr(f"CAST(0{bits} AS INT)")
 
 
 def sign_bucket(vec: Column, bits: int = 4) -> Column:
@@ -176,19 +171,18 @@ def _embedding_dim(emb: DataFrame, vec_col: str) -> int:
 
 
 def _table_buckets(
-    base: DataFrame, planes: list[list[list[float]]]
+    base: DataFrame, planes: list[list[list[float]]], vec: str = "_v", keep: tuple = ()
 ) -> DataFrame:
-    """(vec_id, _t, _b): each vector's bucket in every LSH table — the
-    slim index frame (ids only, vectors stay behind) that all candidate
+    """(vec_id, *keep, _t, _b): the bucket of ``base``'s named vector in
+    every LSH table, one row per table. With no ``keep`` it is the slim
+    index frame (ids only, vectors stay behind) that candidate
     generation joins on."""
     structs = [
-        F.struct(
-            F.lit(t).alias("t"), hyperplane_bucket(F.col("_v"), tp).alias("b")
-        )
+        F.struct(F.lit(t).alias("t"), hyperplane_bucket(vec, tp).alias("b"))
         for t, tp in enumerate(planes)
     ]
-    return base.select("vec_id", F.explode(F.array(*structs)).alias("_tb")).select(
-        "vec_id", F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b")
+    return base.select("vec_id", *keep, F.explode(F.array(*structs)).alias("_tb")).select(
+        "vec_id", *keep, F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b")
     )
 
 
@@ -229,31 +223,17 @@ def embedding_near_dup_pairs(
         dim = _embedding_dim(emb, vec_col)
     planes = hyperplanes(dim, bits, tables, seed)
     base = emb.select(F.col("vec_id"), _as_double(F.col(vec_col)).alias("_v"))
-    structs = [
-        F.struct(
-            F.lit(t).alias("t"), hyperplane_bucket(F.col("_v"), tp).alias("b")
-        )
-        for t, tp in enumerate(planes)
-    ]
-    bk = (
-        base.select("vec_id", "_v", F.explode(F.array(*structs)).alias("_tb"))
-        .select(
-            "vec_id",
-            "_v",
-            F.sqrt(_dot(F.col("_v"), F.col("_v"))).alias("_n"),
-            F.col("_tb.t").alias("_t"),
-            F.col("_tb.b").alias("_b"),
-        )
+    bk = _table_buckets(base, planes, keep=("_v",)).select(
+        "vec_id", "_v", F.expr(f"sqrt({_dot_sql('_v', '_v')})").alias("_n"), "_t", "_b"
     )
     a, b = bk.alias("a"), bk.alias("b")
-    cos = _dot(F.col("a._v"), F.col("b._v")) / (F.col("a._n") * F.col("b._n"))
-    # cosine through a one-element Generate barrier (r13, same shape as
-    # the minhash verify): the threshold filter otherwise pushes into
-    # the bucket join's condition with alias substitution, so the
+    cos = F.expr(f"round({_dot_sql('a._v', 'b._v')} / (a._n * b._n), 6)")
+    # cosine behind a fence (functions.barriers, same shape as the
+    # minhash verify): the threshold filter otherwise pushes into the
+    # bucket join's condition with alias substitution, so the
     # dim-length dot-product fold ran once per candidate in the
     # condition AND again per surviving pair in the projection. Behind
-    # the Generate it runs exactly once per candidate; row multiset
-    # unchanged (one-element array).
+    # the fence it runs exactly once per candidate.
     return (
         a.join(
             b,
@@ -264,7 +244,7 @@ def embedding_near_dup_pairs(
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.explode(F.array(F.round(cos, 6))).alias("cosine"),
+            barriers.fence(cos).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
         .distinct()
@@ -351,14 +331,14 @@ def semantic_dedup(
     # r13 (guide §5): the normed assignment table feeds BOTH sides of
     # the within-cluster self-join AND the survivor anti-join — three
     # evaluations of the full clustering lineage (each itself several
-    # corpus passes) without a barrier. One lazy localCheckpoint
-    # computes it once; corpus-sized, same storage class as the dedup
-    # family's checkpointed shingle table.
-    withn = a.select(
-        "vec_id", "cid", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("_n")
-    ).localCheckpoint(eager=False)
+    # corpus passes) without a barrier. materialize computes it once;
+    # corpus-sized, same storage class as the dedup family's
+    # checkpointed shingle table.
+    withn = barriers.materialize(
+        a.select("vec_id", "cid", "v", F.expr(f"sqrt({_dot_sql('v', 'v')})").alias("_n"))
+    )
     lo, hi = withn.alias("lo"), withn.alias("hi")
-    cos = _dot(F.col("lo.v"), F.col("hi.v")) / (F.col("lo._n") * F.col("hi._n"))
+    cos = F.expr(f"{_dot_sql('lo.v', 'hi.v')} / (lo._n * hi._n)")
     drops = (
         lo.join(
             hi,
@@ -495,10 +475,10 @@ def ivf_centroids(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
             ).alias("ncvec")
         )
-        cents = (
-            cents.join(new, "cid", "left")
-            .select("cid", F.coalesce("ncvec", "cvec").alias("cvec"))
-            .localCheckpoint(eager=False)
+        cents = barriers.materialize(
+            cents.join(new, "cid", "left").select(
+                "cid", F.coalesce("ncvec", "cvec").alias("cvec")
+            )
         )
     return cents
 
@@ -597,13 +577,11 @@ def hierarchical_centroids(
     # r13 (guide §5, iterative algorithms): the coarse assignment is
     # consumed by the seed window, EVERY sub-Lloyd iteration, and the
     # caller's final assignment — each consumer otherwise replays the
-    # full corpus scan + broadcast argmin. One lazy localCheckpoint
-    # computes it once; corpus-sized, the same storage class the dedup
-    # pipeline already checkpoints for its shingle table.
-    e1 = (
-        _assign_to_centroids(e, coarse)
-        .select("vec_id", "v", F.col("cid").alias("cid1"))
-        .localCheckpoint(eager=False)
+    # full corpus scan + broadcast argmin. materialize computes it
+    # once; corpus-sized, the same storage class the dedup pipeline
+    # already checkpoints for its shingle table.
+    e1 = barriers.materialize(
+        _assign_to_centroids(e, coarse).select("vec_id", "v", F.col("cid").alias("cid1"))
     )
     rn = F.row_number().over(Window.partitionBy("cid1").orderBy("vec_id"))
     subc = (
@@ -624,12 +602,10 @@ def hierarchical_centroids(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
             ).alias("ncvec")
         )
-        subc = (
-            subc.join(new, ["cid1", "cid2"], "left")
-            .select(
+        subc = barriers.materialize(
+            subc.join(new, ["cid1", "cid2"], "left").select(
                 "cid1", "cid2", F.coalesce("ncvec", "cvec").alias("cvec")
             )
-            .localCheckpoint(eager=False)
         )
     return coarse, subc, level1, fanout, e1
 
@@ -1764,9 +1740,7 @@ def ivf_topk(
     )
     assigned = _assign_to_centroids(e, cents)
     probed = assigned.join(F.broadcast(probes), "cid").crossJoin(F.broadcast(q))
-    cos = _dot(F.col("v"), F.col("qv")) / (
-        F.sqrt(_dot(F.col("v"), F.col("v"))) * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-    )
+    cos = F.expr(_cosine_sql("v", "qv"))
     return (
         probed.where(F.col("vec_id") != query_id)
         .select("vec_id", F.round(cos, 6).alias("cosine"))
@@ -1806,13 +1780,7 @@ def lsh_build(
         dim = _embedding_dim(emb, vec_col)
     planes = hyperplanes(dim, bits, tables, seed)
     base = emb.select(F.col("vec_id"), _as_double(F.col(vec_col)).alias("v"))
-    structs = [
-        F.struct(F.lit(t).alias("t"), hyperplane_bucket(F.col("v"), tp).alias("b"))
-        for t, tp in enumerate(planes)
-    ]
-    rows = base.select(
-        "vec_id", "v", F.explode(F.array(*structs)).alias("_tb")
-    ).select("vec_id", "v", F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
+    rows = _table_buckets(base, planes, "v", keep=("v",))
     tmp = f"{index_path}.building.{os.getpid()}"
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
@@ -1841,13 +1809,7 @@ def lsh_append(emb_new: DataFrame, index_path: str, vec_col: str = "embedding") 
         p = json.load(f)
     planes = hyperplanes(p["dim"], p["bits"], p["tables"], p["seed"])
     base = emb_new.select(F.col("vec_id"), _as_double(F.col(vec_col)).alias("v"))
-    structs = [
-        F.struct(F.lit(t).alias("t"), hyperplane_bucket(F.col("v"), tp).alias("b"))
-        for t, tp in enumerate(planes)
-    ]
-    rows = base.select(
-        "vec_id", "v", F.explode(F.array(*structs)).alias("_tb")
-    ).select("vec_id", "v", F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
+    rows = _table_buckets(base, planes, "v", keep=("v",))
     n = rows.count() // max(p["tables"], 1)
     rows.write.mode("append").partitionBy("_t", "_b").parquet(
         os.path.join(index_path, "buckets")
@@ -1901,8 +1863,7 @@ def lsh_search_indexed(
     # a vector colliding in several tables appears once per collision:
     # keep one copy before scoring
     cand = scan.groupBy("vec_id").agg(F.first("v").alias("v"))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(F.col("v"), q) / (F.sqrt(_dot(F.col("v"), F.col("v"))) * F.sqrt(_dot(q, q)))
+    cos = F.expr(_cosine_sql("v", _lit_vec_sql(query_vec)))
     if exclude_vec_id is not None:
         cand = cand.where(F.col("vec_id") != exclude_vec_id)
     return (
@@ -1946,14 +1907,14 @@ def lsh_bucketed_search(
     q = base.where(F.col("vec_id") == query_id).select(
         F.col("_v").alias("_q"),
         *[
-            hyperplane_bucket(F.col("_v"), tp).alias(f"_qb{t}")
+            hyperplane_bucket("_v", tp).alias(f"_qb{t}")
             for t, tp in enumerate(planes)
         ],
     )
     joined = base.crossJoin(F.broadcast(q))
     match = None
     for t, tp in enumerate(planes):
-        c = hyperplane_bucket(F.col("_v"), tp) == F.col(f"_qb{t}")
+        c = hyperplane_bucket("_v", tp) == F.col(f"_qb{t}")
         match = c if match is None else (match | c)
     scored = cosine_scores(joined.where(match), "_q", "_v")
     return (

@@ -49,6 +49,7 @@ from ecollector_spark.datapipe.similarity import (
     _publish_dir,
     _recover_crashed_publish,
 )
+from ecollector_spark.functions import barriers
 
 
 class StreamingCorpusIngest:
@@ -197,8 +198,8 @@ class StreamingCorpusIngest:
         the corpus. Returns the per-status decision counts (also usable
         directly on a static frame for batch backfills)."""
         seen_exact, seen_sigs = self.manifests()
-        batch_df = batch_df.localCheckpoint(eager=True)  # source read once
-        decisions = dedup.dedup_incremental(
+        batch_df = barriers.snapshot(batch_df)  # source read once
+        decisions = barriers.snapshot(dedup.dedup_incremental(
             batch_df,
             seen_exact,
             seen_sigs,
@@ -207,7 +208,7 @@ class StreamingCorpusIngest:
             num_hashes=self.num_hashes,
             bands=self.bands,
             min_sig_agree=self.min_sig_agree,
-        ).localCheckpoint(eager=True)
+        ))
         counts = {
             r["status"]: r["n"]
             for r in decisions.groupBy("status").agg(F.count("*").alias("n")).collect()
@@ -227,7 +228,7 @@ class StreamingCorpusIngest:
                     counts["healed"] = healed
             return counts
         kept = decisions.where(F.col("status") == "kept").select("doc_id")
-        kept_docs = batch_df.join(kept, "doc_id").localCheckpoint(eager=True)
+        kept_docs = barriers.snapshot(batch_df.join(kept, "doc_id"))
         new_exact, new_sigs = dedup.fold_manifests(
             seen_exact,
             seen_sigs,
@@ -241,10 +242,10 @@ class StreamingCorpusIngest:
         # swap (they can never drift apart), then append the corpus
         tmp = self._path("manifests.next")
         shutil.rmtree(tmp, ignore_errors=True)
-        new_exact.localCheckpoint(eager=True).write.mode("overwrite").parquet(
+        barriers.snapshot(new_exact).write.mode("overwrite").parquet(
             os.path.join(tmp, "exact")
         )
-        new_sigs.localCheckpoint(eager=True).write.mode("overwrite").parquet(
+        barriers.snapshot(new_sigs).write.mode("overwrite").parquet(
             os.path.join(tmp, "sigs")
         )
         _publish_dir(tmp, self._path("manifests"))
@@ -301,10 +302,10 @@ class StreamingCorpusIngest:
         # one keeper per lost hash (min doc_id, like the batch dedup);
         # text_hash stays when the corpus carries the column
         keeper = missing.groupBy("text_hash").agg(F.min("doc_id").alias("doc_id"))
-        lost = (
-            missing.join(keeper, ["text_hash", "doc_id"])
-            .select(*batch_df.columns, "text_hash")
-            .localCheckpoint(eager=True)
+        lost = barriers.snapshot(
+            missing.join(keeper, ["text_hash", "doc_id"]).select(
+                *batch_df.columns, "text_hash"
+            )
         )
         n = lost.count()
         if n:

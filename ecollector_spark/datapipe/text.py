@@ -16,6 +16,7 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ecollector_spark.functions import barriers
 from ecollector_spark.functions import quote_ident as _ident
 
 #: small stopword/marker sets for the language-ID heuristic. Order of
@@ -66,23 +67,18 @@ def tokens_expr(text: str) -> Column:
 def tokens_barrier(
     docs: DataFrame, text_col: str = "text", keep_text: bool = True
 ) -> DataFrame:
-    """(doc_id[, _text], _toks) with the token array produced through a
-    one-element ``explode`` (Generate barrier). A downstream filter over
-    columns derived from a plain ``tokens_expr`` alias gets pushed below
-    the projections with full alias substitution — the physical plans of
-    the composed consumers re-derived the regexp tokenizer 6-11 times
-    inside ONE pushed Filter condition (r12 measured: datapipe_curation
-    1.82 -> 0.91 s after the barrier). Predicates cannot cross a
-    Generate whose output they reference, so tokenization runs exactly
-    once per row. Row multiset unchanged: the array always has exactly
-    one element (a null text yields one row with a null token array,
-    same as the plain alias)."""
+    """(doc_id[, _text], _toks) with the token array produced behind a
+    fence (:func:`ecollector_spark.functions.barriers.fence`). A
+    downstream filter over columns derived from a plain ``tokens_expr``
+    alias gets pushed below the projections with full alias
+    substitution — the physical plans of the composed consumers
+    re-derived the regexp tokenizer 6-11 times inside ONE pushed Filter
+    condition (r12 measured: datapipe_curation 1.82 -> 0.91 s after the
+    fence). Behind the fence tokenization runs exactly once per row."""
     cols = ["doc_id", F.col(text_col).alias("_text")]
     d = docs.select(*cols)
     out = ["doc_id", "_text"] if keep_text else ["doc_id"]
-    return d.select(
-        *out, F.explode(F.array(tokens_expr("_text"))).alias("_toks")
-    )
+    return d.select(*out, barriers.fence(tokens_expr("_text")).alias("_toks"))
 
 
 def shingles_sql(toks_col: str, k: int = 3) -> str:
@@ -155,7 +151,10 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return s.select("doc_id", lang_pred_expr(scores).alias("pred_lang"))
 
 
-def _floor6_sql(c: str) -> str:
+def floor6_sql(c: str) -> str:
+    """``c`` truncated to 6 decimals. floor is a deterministic function
+    of the double, unlike round, whose half-tie rule differs across
+    engines on decimal-exact dyadic rationals like 2**-7."""
     return f"floor({c} * 1000000.0D) / 1000000.0D"
 
 
@@ -191,10 +190,10 @@ def quality_feature_sql(toks_col: str, text_col: str) -> dict[str, str]:
     )
     return {
         "n_tokens": f"size({t})",
-        "avg_token_len": _floor6_sql(avg_len),
-        "stopword_ratio": _floor6_sql(stop_ratio),
-        "punct_ratio": _floor6_sql(punct_ratio),
-        "quality": _floor6_sql(f"({score})"),
+        "avg_token_len": floor6_sql(avg_len),
+        "stopword_ratio": floor6_sql(stop_ratio),
+        "punct_ratio": floor6_sql(punct_ratio),
+        "quality": floor6_sql(f"({score})"),
     }
 
 
@@ -297,12 +296,6 @@ def gopher_rules(
     )
 
 
-def _floor6(c: Column) -> Column:
-    # floor-truncation: deterministic across engines where round()'s
-    # half-tie rule is not (dyadic rationals land exactly on .5 ties)
-    return F.floor(c * 1000000.0) / 1000000.0
-
-
 def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Repetition filters in the Gopher/MassiveText style: per doc, the
     fraction of non-empty lines that repeat an earlier line, and the
@@ -318,11 +311,12 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # explode-side size/notnull guards otherwise re-derive the tokenizer
     # ~7x inside one pushed Filter condition
     d = tokens_barrier(docs, text_col)
-    lines = F.filter(
-        F.transform(F.split(F.col("_text"), "\n"), lambda s: F.trim(s)),
-        lambda s: s != "",
+    lines = "filter(transform(split(_text, '\\n'), s -> trim(s)), s -> s != '')"
+    nl = f"size({lines})"
+    dup_frac = (
+        f"CASE WHEN {nl} > 0 THEN"
+        f" 1.0D - size(array_distinct({lines})) / CAST({nl} AS DOUBLE) ELSE 0.0D END"
     )
-    nl = F.size(lines)
     toks = F.col("_toks")
     bigrams = F.when(
         F.size(toks) >= 2,
@@ -333,12 +327,8 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).otherwise(F.array().cast("array<string>"))
     base = d.select(
         "doc_id",
-        nl.alias("n_lines"),
-        _floor6(
-            F.when(
-                nl > 0, 1.0 - F.size(F.array_distinct(lines)) / nl.cast("double")
-            ).otherwise(F.lit(0.0))
-        ).alias("dup_line_frac"),
+        F.expr(nl).alias("n_lines"),
+        F.expr(floor6_sql(dup_frac)).alias("dup_line_frac"),
         bigrams.alias("_big"),
     )
     top = (
@@ -355,7 +345,7 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "doc_id",
             "n_lines",
             "dup_line_frac",
-            _floor6(F.coalesce(F.col("_tb"), F.lit(0.0))).alias("top_bigram_frac"),
+            F.expr(floor6_sql("coalesce(_tb, 0.0D)")).alias("top_bigram_frac"),
         )
     )
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ecollector_spark.aggregate import hour_reattribution
 from ecollector_spark.downsample import downsample_step
 from ecollector_spark.driver_queries import register
+from ecollector_spark.functions import barriers
 from ecollector_spark.sources.events_adapter import read_events
 
 
@@ -223,10 +224,10 @@ def lifecycle_tiered_query(spark, sf_dir):
         if choice.tier != "gen_week":
             raise RuntimeError(f"expected gen_week routing, got {choice.tier}")
         planner = QueryPlanner(w.tier_reader())
-        pre = (
-            planner.plan(req, now=now_dt)
-            .withColumn("value", F.round(F.col("value") + 1e-9, 4))
-            .localCheckpoint(eager=True)  # materialize BEFORE expiry
+        pre = barriers.snapshot(  # computed BEFORE expiry
+            planner.plan(req, now=now_dt).withColumn(
+                "value", F.round(F.col("value") + 1e-9, 4)
+            )
         )
 
         # TTL expiry: raw + day fully expired (their youngest point is
@@ -236,10 +237,10 @@ def lifecycle_tiered_query(spark, sf_dir):
         )
         if w.read_tier("gen_raw") is not None or w.read_tier("gen_day") is not None:
             raise RuntimeError("retention did not empty the raw/day tiers")
-        post = (
-            planner.plan(req, now=now_dt)
-            .withColumn("value", F.round(F.col("value") + 1e-9, 4))
-            .localCheckpoint(eager=True)  # materialize before rmtree
+        post = barriers.snapshot(  # computed before rmtree
+            planner.plan(req, now=now_dt).withColumn(
+                "value", F.round(F.col("value") + 1e-9, 4)
+            )
         )
         return (
             pre.select(F.lit("pre").alias("phase"), "time", "value")

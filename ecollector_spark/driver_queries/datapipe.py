@@ -22,6 +22,7 @@ from ecollector_spark.datapipe.multimodal import (
     sample_frames,
 )
 from ecollector_spark.driver_queries import register
+from ecollector_spark.functions import barriers
 from ecollector_spark.session import read_parquet
 
 # ---------------------------------------------------------------------------
@@ -542,9 +543,9 @@ def datapipe_warc_response(spark, sf_dir):
     # would each re-run synthesize + gunzip + record walk + HTTP split
     # through lazy lineage — exactly the multi-consumer re-walk
     # read_warc_responses' own scale note warns about
-    recs = read_warc_responses(
-        attach_synthetic_response_warc_media(docs)
-    ).localCheckpoint(eager=False)
+    recs = barriers.materialize(
+        read_warc_responses(attach_synthetic_response_warc_media(docs))
+    )
     imgs = recs.where(F.col("content_type") == "image/png").select(
         "doc_id",
         "rec_idx",
@@ -607,7 +608,7 @@ def dedup_jaccard_pairs(spark, sf_dir):
     df-capped against stop-shingle blowup)."""
     pairs = dedup.jaccard_pairs(dedup_corpus(spark, sf_dir), threshold=0.5, max_df=100)
     # lazy checkpoint: the sort's range sampling must not re-run the joins
-    return pairs.localCheckpoint(eager=False)
+    return barriers.materialize(pairs)
 
 
 _BANDS_SQL = """mh AS (
@@ -653,7 +654,7 @@ def dedup_minhash_lsh(spark, sf_dir):
         threshold=0.5,
         verify="exact",
     )
-    return pairs.localCheckpoint(eager=False)
+    return barriers.materialize(pairs)
 
 
 _AGREE_SQL = " + ".join(f"CAST(a.mh_{i} = b.mh_{i} AS INT)" for i in range(8))
@@ -706,7 +707,7 @@ def dedup_minhash_hybrid(spark, sf_dir):
         threshold=0.5,
         verify="hybrid",
     )
-    return pairs.localCheckpoint(eager=False)
+    return barriers.materialize(pairs)
 
 
 @register(
@@ -734,15 +735,17 @@ def dedup_clusters(spark, sf_dir):
     step of a dedup pipeline (keep doc_id == cluster_id). Iterative
     min-label propagation in Spark, transitive-closure recursive CTE in
     the oracle — an iterative algorithm inside the value gate."""
-    pairs = dedup.minhash_lsh_pairs(
-        dedup_corpus(spark, sf_dir),
-        num_hashes=8,
-        bands=4,
-        threshold=0.5,
-        verify="exact",
-    ).localCheckpoint(eager=False)
+    pairs = barriers.materialize(
+        dedup.minhash_lsh_pairs(
+            dedup_corpus(spark, sf_dir),
+            num_hashes=8,
+            bands=4,
+            threshold=0.5,
+            verify="exact",
+        )
+    )
     cc = dedup.connected_components(pairs)
-    return cc.localCheckpoint(eager=False)
+    return barriers.materialize(cc)
 
 
 _SIMHASH_BITS = 16
@@ -768,7 +771,7 @@ def dedup_simhash(spark, sf_dir):
     """16-bit SimHash per document (signed projection over md5 token
     hashes); equal values = near-dup candidates."""
     sh = dedup.simhash(dedup_corpus(spark, sf_dir), bits=_SIMHASH_BITS)
-    return sh.localCheckpoint(eager=False)
+    return barriers.materialize(sh)
 
 
 # ---------------------------------------------------------------------------
@@ -903,7 +906,7 @@ def dedup_incremental(spark, sf_dir):
         dedup.exact_manifest(old),
         dedup.minhash_signatures(old),
     )
-    return out.localCheckpoint(eager=False)
+    return barriers.materialize(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1090,7 +1093,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     pairs = similarity.embedding_near_dup_pairs(
         emb, threshold=0.3, bits=_LSH_BITS, tables=_LSH_TABLES, dim=_EMB_DIM
     )
-    return pairs.localCheckpoint(eager=False)
+    return barriers.materialize(pairs)
 
 
 def _ivf_sql(
@@ -3087,6 +3090,6 @@ def datapipe_streaming_ingest(spark, sf_dir):
     ing.process_batch(incremental_batch(spark, sf_dir), 1)
     # materialize before deleting the state dir the frame lazily reads —
     # a full corpus tree per gate run must not accumulate under /tmp
-    out = ing.corpus().select("doc_id").localCheckpoint(eager=True)
+    out = barriers.snapshot(ing.corpus().select("doc_id"))
     shutil.rmtree(root, ignore_errors=True)
     return out

@@ -46,7 +46,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ecollector_spark.functions import quote_ident
+from ecollector_spark.functions import barriers, quote_ident
 
 FILL_NULL = "null"
 FILL_PREVIOUS = "previous"
@@ -241,9 +241,7 @@ def _chunked_fill(
     keys = [*gk, "_ck"]
     # materialized once (lazily): the spine feeds both the edge aggregate
     # and the fill windows — without this it would execute twice
-    joined = joined.selectExpr(*out_cols, f"floor({t} / {span}) AS _ck").localCheckpoint(
-        eager=False
-    )
+    joined = barriers.materialize(joined.selectExpr(*out_cols, f"floor({t} / {span}) AS _ck"))
 
     nn_struct = f"CASE WHEN {v} IS NOT NULL THEN struct({t}, {v}) END"
     # stage 2: per-chunk non-null edges (struct order = time order)

@@ -609,39 +609,33 @@ class QueryPlanner:
             # starting strictly before the relative upper bound
             to_epoch = rel_to_epoch - 1
 
+        # Inclusive epoch bounds of the row predicate (None = open). The
+        # plain relative shape is `time > now()-rel` with NO upper bound
+        # (influxdb_v1.go:138), so future-stamped points (clock skew,
+        # replay) stay in; a windowed relative range adds the exclusive
+        # `time < now()-B`, and a lone `time < now()-B` has no lower.
+        lo = hi = None
+        if req.from_time or req.to_time:
+            lo = from_epoch if req.from_time else None
+            hi = to_abs_epoch
+        elif req.relative_time or rel_to_epoch is None:
+            lo = from_epoch + 1
+        if rel_to_epoch is not None:
+            hi = rel_to_epoch - 1 if hi is None else min(hi, rel_to_epoch - 1)
         if self._reader_takes_bounds:
-            # Only pass bounds the planner's own row predicate applies:
-            # the plain relative-time shape is `time > now()-rel` with NO
-            # upper bound (influxdb_v1.go:138), so a bounds-aware reader
-            # must not add ts <= now — future-stamped points (clock skew,
-            # replay) would silently differ between reader kinds. A
-            # windowed relative range DOES have an upper row predicate,
-            # so its bound flows through for day pruning.
-            if req.from_time or req.to_time:
-                lower = from_epoch if req.from_time else None
-                upper = (
-                    to_abs_epoch if to_abs_epoch is not None else rel_to_epoch
-                )
-            else:
-                # a lone `time < now()-B` has no lower row predicate
-                lower = from_epoch if (req.relative_time or rel_to_epoch is None) else None
-                upper = rel_to_epoch  # None for the open-ended shape
-            df = self.tier_reader(choice.tier, lower, upper)
+            # a bounds-aware reader gets exactly the row bounds, so its
+            # ts conjuncts and the planner's fold into one per side
+            df = self.tier_reader(choice.tier, lo, hi)
         else:
             df = self.tier_reader(choice.tier)
         df = df.where(F.col("measurement") == req.measurement_name)
         ts_epoch = F.unix_timestamp("ts")
         # the sargable ts literal is the row-exact bound (and is pushed to the scan)
         ts_lit = lambda e: F.timestamp_seconds(F.lit(int(e)))  # noqa: E731
-        if req.from_time or req.to_time:
-            if req.from_time:
-                df = df.where(F.col("ts") >= ts_lit(from_epoch))
-            if to_abs_epoch is not None:
-                df = df.where(F.col("ts") < ts_lit(to_abs_epoch + 1))
-        elif req.relative_time or rel_to_epoch is None:
-            df = df.where(F.col("ts") >= ts_lit(from_epoch + 1))
-        if rel_to_epoch is not None:
-            df = df.where(F.col("ts") < ts_lit(rel_to_epoch))
+        if lo is not None:
+            df = df.where(F.col("ts") >= ts_lit(lo))
+        if hi is not None:
+            df = df.where(F.col("ts") < ts_lit(hi + 1))
 
         # dir-mangled field (r9): selecting/aggregating "e_import" means
         # the import-direction twin rows of the measurement — ONE pushed

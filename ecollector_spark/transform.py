@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ecollector_spark.functions import barriers
+
 MAX_ALLOWED_POWER = 30000.0  # transform.go:22
 
 M_POWER = "electricity_meter_power"
@@ -164,17 +166,13 @@ def _build_exprs():
         F.when(_need_smap, F.from_json("val", "map<string,string>")).alias("_smap"),
         F.when(_need_prices, F.from_json("val", _PRICE_SCHEMA)).alias("_prices"),
     ]
-    # ...and behind a one-element explode (Generate barrier, r12): the
-    # row filter below references the error verdict, which references
-    # these parses — PushDownPredicates substitutes project aliases into
-    # the pushed condition unconditionally, so without the barrier the
-    # physical Filter re-derived try_cast 6x and from_json 4x per row
-    # (and the fan-out projection parsed again for the survivors).
-    # Predicates cannot cross a Generate whose output they reference, so
-    # the parse runs exactly once; the filter lands directly above it,
-    # operating on the cheap extracted fields. Row multiset unchanged
-    # (the array always has exactly one element).
-    parse_gen = F.explode(F.array(F.struct(*parse_cols))).alias("_parsed")
+    # ...and behind a fence (functions.barriers): the row filter below
+    # references the error verdict, which references these parses, so
+    # without it the physical Filter re-derived try_cast 6x and
+    # from_json 4x per row (and the fan-out projection parsed again for
+    # the survivors). Behind the fence the parse runs exactly once and
+    # the filter lands directly above it, on the cheap extracted fields.
+    parse_gen = barriers.fence(F.struct(*parse_cols)).alias("_parsed")
     unpack_cols = [
         F.col("_parsed._fval").alias("_fval"),
         F.col("_parsed._fmap").alias("_fmap"),

@@ -2,13 +2,14 @@
 (reference §2.10 admin commands, S4/S7 sinks, RP TTL enforcement)."""
 
 import os
+import re
 from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
 from ecollector_spark.api import EcollectorApi, ProcessManager, to_series_shape
-from ecollector_spark.query import DataPointsFilter, DataPointsRequest
+from ecollector_spark.query import DataPointsFilter, DataPointsRequest, QueryPlanner
 from ecollector_spark.schema import DATAPOINT_SCHEMA
 from ecollector_spark.warehouse import Warehouse, write_csv
 
@@ -1034,6 +1035,37 @@ class TestTimePredicates:
         ]
         assert filters and not any("unix_timestamp" in line for line in filters), filters
         assert "GreaterThanOrEqual(ts," in qe.executedPlan().toString()
+
+    @pytest.mark.parametrize("relative_to_time", ["", "10m"])
+    def test_reader_bounds_equal_row_bounds(self, spark, tmp_path, relative_to_time):
+        """The bounds-aware reader gets the planner's own row bounds, so
+        the optimized plan carries one ``ts >=`` and at most one ``ts <``
+        comparison, and the rows equal a bounds-less reader's."""
+        w = Warehouse(spark, str(tmp_path / "w"))
+        # values are powers of two, so the bucket sums name the rows kept
+        edges = ["00:00:00", "00:00:01", "00:30:00", "00:49:59", "00:50:00", "01:00:00"]
+        w.write_points(_mk_points(spark, [
+            ("electricity_meter_power", f"2024-01-01T{t}", "7", float(1 << i))
+            for i, t in enumerate(edges)
+        ]))
+        req = DataPointsRequest(
+            measurement_name="electricity_meter_power",
+            relative_time="1h",
+            relative_to_time=relative_to_time,
+            group_by_time="10m",
+            data_function="sum",
+        )
+        now = datetime(2024, 1, 1, 1, tzinfo=timezone.utc)
+        bounded = QueryPlanner(w.tier_reader()).plan(req, now=now)
+        plan = bounded._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"\bts#\d+ >= ", plan)) == 1, plan
+        assert len(re.findall(r"\bts#\d+ < ", plan)) <= 1, plan
+        unbounded = QueryPlanner(lambda tier: w.read_tier(tier)).plan(req, now=now)
+        rows = sorted(map(tuple, bounded.collect()))
+        assert rows == sorted(map(tuple, unbounded.collect()))
+        # (now-1h, now] for the relative shape; (now-1h, now-10m) windowed
+        kept = 2 + 4 + 8 + (0 if relative_to_time else 16 + 32)
+        assert sum(r[-1] for r in rows if r[-1] is not None) == kept
 
 
 class TestCanonicalSchema:

@@ -10,9 +10,11 @@ pytest session's local[4]/shuffle=4 conf could not honestly do) and
 fails the suite whenever the audit would fail.
 """
 
+import ast
 import os
 import subprocess
 import sys
+import weakref
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -44,6 +46,74 @@ def test_audit_registry_builders_resolve():
     from tools import explain_audit as ea
 
     builders = ea.audit_builders()
-    missing = [k for k in ea.CHECKS if k not in builders]
+    missing = [k for k in (*ea.CHECKS, *ea.FENCES) if k not in builders]
     missing += [k for k in ea.BOUNDED_WINDOWS if k not in builders]
     assert not missing, f"audit entries without builders: {missing}"
+
+
+def _call_name(node) -> str:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+
+def hand_rolled_barriers(root: str) -> list[str]:
+    """``.localCheckpoint(`` calls and one-element ``explode(array(x))``
+    Column fences under ``root``, outside ``functions/barriers.py``."""
+    found = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            if not fn.endswith(".py") or path.endswith(os.path.join("functions", "barriers.py")):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                name = _call_name(node)
+                one = node.args[0] if len(node.args) == 1 else None
+                if name == "localCheckpoint" or (
+                    name == "explode"
+                    and isinstance(one, ast.Call)
+                    and _call_name(one) == "array"
+                    and len(one.args) == 1
+                    and not isinstance(one.args[0], ast.Starred)
+                ):
+                    found.append(f"{os.path.relpath(path, root)}:{node.lineno} {name}")
+    return found
+
+
+def test_every_barrier_goes_through_the_barriers_module():
+    """A checkpoint or a one-element explode fence written by hand would
+    escape the fence audit below; ``functions.barriers`` is the only
+    place either may appear."""
+    assert hand_rolled_barriers(os.path.join(REPO, "ecollector_spark")) == []
+
+
+def test_fence_checks_catch_a_reverted_fence(spark, monkeypatch):
+    """Each FENCES check passes with the real fence and fails when the
+    fence is swapped for a plain projection (what Catalyst inlining a
+    one-element explode would leave)."""
+    sys.path.insert(0, REPO)
+    from ecollector_spark import transform
+    from ecollector_spark.functions import barriers
+    from tools import explain_audit as ea
+
+    builders = ea.audit_builders()
+
+    def failures():
+        return {
+            name: ea.fence_failures(
+                builders[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString(),
+                *fence,
+            )
+            for name, fence in ea.FENCES.items()
+        }
+
+    assert len(ea.FENCES) == 6
+    assert failures() == {name: [] for name in ea.FENCES}
+    monkeypatch.setattr(barriers, "fence", lambda expr: expr)
+    # default_transform caches its expression fragments per SparkContext
+    monkeypatch.setattr(transform, "_PREPARED", weakref.WeakKeyDictionary())
+    reverted = failures()
+    assert all(reverted.values()), reverted

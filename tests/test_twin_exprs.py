@@ -1,11 +1,10 @@
-"""Value pins for the text SQL fragments, and the remaining twin pairs.
+"""Value pins for the text and similarity SQL fragments.
 
 Each text builder in ``datapipe.text`` is one ``F.expr`` over its
 ``*_sql`` fragment; the pins below fix that fragment's values on an
 adversarial micro-corpus (nulls, empties, punct-only, unicode case
 edges). The other cases pin a rewritten expression to its historical
-form, and ``similarity._dot`` (Column) to ``_dot_sql`` by canonicalized
-analyzed-plan equality.
+form, and ``similarity._dot_sql``/``_cosine_sql`` to literal values.
 """
 
 from __future__ import annotations
@@ -14,10 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ecollector_spark.datapipe import text
-
-
-def _canon(df):
-    return df._jdf.queryExecution().analyzed().canonicalized().toString()
 
 
 #: adversarial texts: None, empty, spaces, punct-only, mixed, unicode
@@ -124,14 +119,21 @@ class TestQualityTwins:
         assert d.where(F.col("a") != F.col("b")).count() == 0
 
 
-class TestDotCosineTwins:
-    def test_dot_sql_matches_column(self, spark):
+class TestDotCosineValues:
+    def test_dot_and_cosine(self, spark):
+        """``_dot_sql`` and ``_cosine_sql`` on two rows, values captured
+        when the Column twin of ``_dot`` still existed."""
         from ecollector_spark.datapipe import similarity as sim
 
         df = spark.createDataFrame(
             [(1, [1.0, 2.0, 3.0], [0.5, -1.0, 2.0]), (2, [0.0, 0.0, 0.0], [1.0, 1.0, 1.0])],
             "id long, a array<double>, b array<double>",
         )
-        a = df.select(F.expr(sim._dot_sql("a", "b")).alias("d"))
-        b = df.select(sim._dot(F.col("a"), F.col("b")).alias("d"))
-        assert _canon(a) == _canon(b)
+        rows = df.select(
+            "id",
+            F.expr(sim._dot_sql("a", "b")).alias("ab"),
+            F.expr(sim._dot_sql("b", "b")).alias("bb"),
+        ).orderBy("id").collect()
+        assert [tuple(r) for r in rows] == [(1, 4.5, 5.25), (2, 0.0, 3.0)]
+        cos = df.where("id = 1").select(F.expr(sim._cosine_sql("a", "b"))).first()[0]
+        assert cos == 0.524890659167824

@@ -464,6 +464,81 @@ CHECKS = {
 
 FORBIDDEN_EVERYWHERE = ["BatchEvalPython", "InMemoryTableScan"]  # row-UDFs / stray caches
 
+#: The fences (``functions.barriers.fence``), one gate per fenced path:
+#: gate -> (fenced output column, regex for the fenced expression). Each
+#: must plan as a Filter reading the column directly above the
+#: one-element Generate that produces it, with the expression evaluated
+#: in ONE plan node, at or below that Generate. If Catalyst ever inlined
+#: a one-element explode, the Generate would vanish and the expression
+#: would be re-derived in the Filter (or a join condition) above.
+FENCES = {
+    # transform: the payload parses under the error-verdict row filter
+    "_raw_transform": ("_parsed", r"from_json\("),
+    # fimp adapter: the JSON-synthesis struct under the self-traffic filter
+    "fimp_transform_pipeline": ("_r", r"CASE WHEN \(event_type#\d+ = purchase\) THEN meter_elec"),
+    # curation: the tokenizer under the quality filter
+    "datapipe_curation": ("_toks", r"regexp_extract_all\("),
+    # minhash verify: the pair Jaccard under the threshold filter
+    "_raw_minhash": ("jaccard", r"size\(array_intersect\(set_a"),
+    # threshold search: the cosine fold under the threshold filter
+    "ann_cosine_threshold": ("cosine", r"aggregate\(zip_with\(cast\(embedding"),
+    # embedding near-dup verify: the pair (not norm) dot-product fold
+    "_raw_embedding_near_dup": ("cosine", r"aggregate\(zip_with\(_v#(\d+), _v#(?!\1\b)\d+"),
+}
+
+
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, node text) per line of a physical-plan tree string; the
+    depth is the column where the node starts after the tree drawing."""
+    nodes = []
+    for line in plan.splitlines():
+        depth = re.match(r"[ :+-]*", line).end()
+        nodes.append((depth, re.sub(r"^\*\(\d+\) ", "", line[depth:])))
+    return nodes
+
+
+def _array_arity(text: str) -> int:
+    """Top-level element count of the first ``explode(array(...))``."""
+    i = text.index("explode(array(") + len("explode(array(")
+    depth, n = 0, 1
+    for ch in text[i:]:
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            if depth == 0:
+                return n
+            depth -= 1
+        elif ch == "," and depth == 0:
+            n += 1
+    return n
+
+
+def fence_failures(plan: str, col: str, expr: str) -> list[str]:
+    """Why ``plan`` lacks a working fence for ``col`` (empty: it has one)."""
+    nodes = _plan_nodes(plan)
+    gens = [
+        (i, m.group(1))
+        for i, (_, t) in enumerate(nodes)
+        if t.startswith("Generate explode(array(")
+        and _array_arity(t) == 1
+        and (m := re.search(rf", \[{re.escape(col)}#(\d+)L?\]$", t))
+    ]
+    hits = [i for i, (_, t) in enumerate(nodes) if re.search(expr, t)]
+    out = []
+    if len(hits) != 1:
+        out.append(f"the fenced expression /{expr}/ is evaluated in {len(hits)} plan nodes (want 1)")
+    if len(gens) != 1:
+        return out + [f"{len(gens)} one-element Generates produce {col} (want 1)"]
+    g, attr = gens[0]
+    depth = nodes[g][0]
+    parent = next((t for d, t in reversed(nodes[:g]) if d < depth), "")
+    if not (parent.startswith("Filter ") and f"{col}#{attr}" in parent):
+        out.append(f"the node above the {col} Generate is not a Filter reading it")
+    end = next((j for j in range(g + 1, len(nodes)) if nodes[j][0] <= depth), len(nodes))
+    if len(hits) == 1 and not g <= hits[0] < end:
+        out.append(f"the fenced expression /{expr}/ is evaluated above the {col} Generate")
+    return out
+
 #: Unpartitioned WindowExec allowlist: (order-spec regex, why the input is
 #: provably bounded). An unpartitioned window funnels its whole input
 #: through ONE task — only acceptable over inputs whose size is bounded by
@@ -680,7 +755,8 @@ def run_audit(spark, sf_dir, verbose=False, out=print):
             failures += 1
         else:
             out(f"OK session-conf (AQE wide-start, initialPartitionNum={_init})")
-    for name, patterns in CHECKS.items():
+    for name in dict.fromkeys([*CHECKS, *FENCES]):
+        patterns = CHECKS.get(name, [])
         df = builders[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         if verbose:
@@ -697,6 +773,10 @@ def run_audit(spark, sf_dir, verbose=False, out=print):
         for pat in FORBIDDEN_EVERYWHERE:
             if re.search(pat, plan):
                 out(f"FAIL {name}: plan contains forbidden {pat}")
+                failures += 1
+        if name in FENCES:
+            for why in fence_failures(plan, *FENCES[name]):
+                out(f"FAIL {name}: fence: {why}")
                 failures += 1
         allowed = BOUNDED_WINDOWS.get(name, [])
         for spec in unpartitioned_windows(plan):

@@ -4,7 +4,7 @@ Usage:
     python tools/explain_dump.py before            # all main-gate queries
     python tools/explain_dump.py after q1 q2 ...   # just the named ones
 
-Writes plans/r12/<query>_<tag>.txt next to the repo root. The optimization
+Writes plans/r13/<query>_<tag>.txt next to the repo root. The optimization
 judge reads these files to check plan claims (Exchange counts, join
 strategies, PushedFilters) against the code — capture them from the same
 session config the bench uses (ecollector_spark.session.get_spark).
@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROUND = os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r12")
+ROUND = os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r13")
 
 
 def main() -> None:

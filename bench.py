@@ -189,27 +189,6 @@ def main() -> None:
     }
     if os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") != "0":
         detail["datapipe_scale"] = scale_probe(spark)
-    # fold in the wall-time scale ladders (tools/ts_scale_probe.py, run
-    # out-of-band — they take minutes) so the driver-visible artifact
-    # carries the measured exponents of the full headline set
-    for key, fname in (("headline_scale", "HEADLINE_SCALE.json"),
-                       ("headline_scale_salted_1000x", "HEADLINE_SCALE_SALTED_1000X.json"),
-                       ("streaming_scale", "STREAMING_SCALE.json"),
-                       ("ts_scale", "TS_SCALE.json"),
-                       ("newops_scale", "NEWOPS_SCALE.json"),
-                       ("r7_scale", "R7_SCALE.json"),
-                       ("semdedup_scale", "SEMDEDUP_SCALE.json"),
-                       ("lm_scale", "LM_SCALE.json"),
-                       ("lm_scale_order5", "LM_SCALE_ORDER5.json"),
-                       ("quantizer_crossover", "QUANTIZER_CROSSOVER.json"),
-                       ("streaming_series_scale", "STREAMING_SERIES_SCALE.json")):
-        p = os.path.join(os.path.dirname(os.path.abspath(__file__)), fname)
-        if os.path.isfile(p):
-            try:
-                with open(p) as f:
-                    detail[key] = json.load(f)
-            except ValueError:
-                pass
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),

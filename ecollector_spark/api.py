@@ -17,14 +17,16 @@ results — the driver-side loop is the API boundary, never an operator.
 
 from __future__ import annotations
 
+import re
+from dataclasses import replace as _dc_replace
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecollector_spark.functions import barriers
-from ecollector_spark.functions.timeutil import parse_relative_duration, time_bucket
-from ecollector_spark.gapfill import gap_fill
+from ecollector_spark.functions.timeutil import parse_relative_duration
+from ecollector_spark.gapfill import gap_fill  # noqa: F401 - perfbench --trace 1 wraps api.gap_fill
 from ecollector_spark.query import (
     DataPointsRequest,
     QueryPlanner,
@@ -37,8 +39,6 @@ from ecollector_spark.warehouse import Warehouse
 
 #: energy rollup validation (influxdb_v1.go:36): 1-2 digits + m/h/d/w,
 #: else fall back to 1h
-import re
-
 _ENERGY_GROUP_RE = re.compile(r"^\d{1,2}[mhdw]$")
 
 
@@ -110,7 +110,7 @@ class EcollectorApi:
             # planner's resolved time bounds flow through so a dated
             # warehouse prunes day partitions before the ts row filter
             df = warehouse.read_tier(tier, from_epoch, to_epoch)
-            return df if df is not None else spark.createDataFrame([], DATAPOINT_SCHEMA)
+            return df if df is not None else self._no_points()
 
         self.planner = QueryPlanner(reader, profile=profile)
         #: custom / altered RP TTLs (add/update_retention_policy)
@@ -119,6 +119,9 @@ class EcollectorApi:
         #: delete_object("cq", name) removes a stage, and cascade runs
         #: wired through :meth:`cascade_stages` stop executing it
         self.cq_stages: dict[str, tuple] = dict(CQ_STAGES)
+
+    def _no_points(self) -> DataFrame:
+        return self.spark.createDataFrame([], DATAPOINT_SCHEMA)
 
     # -- Q1: cmd.tsdb.query ------------------------------------------------
     def run_query(self, query: str, now: datetime | None = None) -> dict:
@@ -226,74 +229,66 @@ class EcollectorApi:
             iq = parse_influxql(query)
         except InfluxQLParseError:
             iq = None
+        if iq is not None and iq.into_measurement is None:
+            tags = split_group_tags(iq.request.group_by_tag)
+
+            def _run():
+                # one statement per result series: list FROM and regex
+                # FROM (expanded against the catalog, a directory
+                # listing) run one per measurement; FROM (subquery) is
+                # one composed plan, its series named by the innermost
+                # measurement (InfluxDB's behavior)
+                if iq.subquery is not None:
+                    inner = iq.subquery
+                    while inner.subquery is not None:
+                        inner = inner.subquery
+                    statements = [(inner.measurement, iq)]
+                else:
+                    if iq.measurement_regex is not None:
+                        pat = re.compile(iq.measurement_regex)
+                        names = [m for m in self.warehouse.measurements() if pat.search(m)]
+                    else:
+                        names = iq.measurement_list or [iq.measurement]
+                    statements = [
+                        (n, _dc_replace(iq, request=_dc_replace(iq.request, measurement_name=n)))
+                        for n in names
+                    ]
+                series = []
+                for name, one in statements:
+                    df = apply_result_shape(plan_tree(self.planner, one, now=now), iq)
+                    if iq.alias and iq.alias != "value" and "value" in df.columns:
+                        df = df.withColumnRenamed("value", iq.alias)
+                    series.extend(to_series_shape(df, name, tags))
+                return series
+
+            return self._answer(_run)
         try:
             if iq is not None:
-                import re as _re
-                from dataclasses import replace as _dc_replace
-
-                if iq.measurement_regex is not None:
-                    # FROM /re/: expand against the catalog (a directory
-                    # listing) — one planner run + result series per
-                    # matching measurement, like InfluxDB's regex FROM
-                    pat = _re.compile(iq.measurement_regex)
-                    names = [
-                        m for m in self.warehouse.measurements() if pat.search(m)
-                    ]
-                else:
-                    # FROM "a", "b" lists ride the same per-measurement
-                    # loop as regex FROM (one series per measurement)
-                    names = iq.measurement_list or [iq.measurement]
-                tags = split_group_tags(iq.request.group_by_tag)
-                if iq.into_measurement is not None:
-                    # SELECT ... INTO: the one-off twin of the CQ
-                    # template (public InfluxQL) — write the planned
-                    # result into the target measurement and report the
-                    # written count in InfluxDB's (time, written) shape
-                    df = apply_result_shape(plan_tree(self.planner, iq, now=now), iq)
-                    n = self._write_into(df, iq, tags)
-                    return _report(
-                        [{"name": "result", "columns": ["time", "written"], "values": [[0, n]]}]
-                    )
-
-                # plan + serialize inside the read-retry closure, like
-                # get_data_points: a swap between the plan's file listing
-                # and the collect re-plans instead of failing the query
-                def _run():
-                    if iq.subquery is not None:
-                        # FROM (subquery): one composed plan; series named
-                        # by the innermost measurement (InfluxDB's behavior)
-                        df = apply_result_shape(plan_tree(self.planner, iq, now=now), iq)
-                        if iq.alias and iq.alias != "value":
-                            df = df.withColumnRenamed("value", iq.alias)
-                        inner = iq.subquery
-                        while inner.subquery is not None:
-                            inner = inner.subquery
-                        return to_series_shape(df, inner.measurement, tags)
-                    series = []
-                    for name in names:
-                        # one statement per measurement: plain selector,
-                        # multi-select or selector arithmetic (plan_tree)
-                        one = _dc_replace(
-                            iq, request=_dc_replace(iq.request, measurement_name=name)
-                        )
-                        df = apply_result_shape(plan_tree(self.planner, one, now=now), iq)
-                        if iq.alias and iq.alias != "value" and "value" in df.columns:
-                            df = df.withColumnRenamed("value", iq.alias)
-                        series.extend(to_series_shape(df, name, tags))
-                    return series
-
-                return _report(self.warehouse.with_read_retry(_run))
+                # SELECT ... INTO: the one-off twin of the CQ template
+                # (public InfluxQL) — write the planned result into the
+                # target measurement and report the written count in
+                # InfluxDB's (time, written) shape
+                df = apply_result_shape(plan_tree(self.planner, iq, now=now), iq)
+                n = self._write_into(df, iq, split_group_tags(iq.request.group_by_tag))
+                return _report(
+                    [{"name": "result", "columns": ["time", "written"], "values": [[0, n]]}]
+                )
             df = self.spark.sql(query)
             cols = df.columns
-            return _report(
-                [
-                    {
-                        "name": "query",
-                        "columns": cols,
-                        "values": [[r[c] for c in cols] for r in df.collect()],
-                    }
-                ]
-            )
+            values = [[r[c] for c in cols] for r in df.collect()]
+            return _report([{"name": "query", "columns": cols, "values": values}])
+        except Exception as e:  # noqa: BLE001 — error envelope is the contract
+            return _report(error=str(e))
+
+    def _answer(self, build_and_run) -> dict:
+        """Report of ``build_and_run() -> series``, planned and serialized
+        inside the read-retry closure: a rename-aside swap
+        (replace_points_from / delete_points) landing between the plan's
+        file listing and the collect re-plans against the fresh listing
+        instead of failing the query — reads stay live across writes,
+        like the reference. Any failure is the error envelope."""
+        try:
+            return _report(self.warehouse.with_read_retry(build_and_run))
         except Exception as e:  # noqa: BLE001 — error envelope is the contract
             return _report(error=str(e))
 
@@ -348,23 +343,13 @@ class EcollectorApi:
 
     # -- Q2: cmd.tsdb.get_data_points -------------------------------------
     def get_data_points(self, req: DataPointsRequest, now: datetime | None = None) -> dict:
-        try:
-            # plan + serialize inside the read-retry closure: a
-            # rename-aside swap (replace_points_from / delete_points)
-            # landing between the plan's file listing and the collect
-            # re-plans against the fresh listing instead of failing the
-            # query — reads stay live across writes, like the reference
-            def _run():
-                df = self.planner.plan(req, now=now)
-                return to_series_shape(
-                    df,
-                    req.measurement_name,
-                    split_group_tags(req.group_by_tag),
-                )
-
-            return _report(self.warehouse.with_read_retry(_run))
-        except Exception as e:  # noqa: BLE001
-            return _report(error=str(e))
+        return self._answer(
+            lambda: to_series_shape(
+                self.planner.plan(req, now=now),
+                req.measurement_name,
+                split_group_tags(req.group_by_tag),
+            )
+        )
 
     # -- cmd.tsdb.get_energy_data_points (A17) -----------------------------
     def get_energy_data_points(
@@ -376,34 +361,39 @@ class EcollectorApi:
         now: datetime | None = None,
     ) -> dict:
         """Energy rollup (influxdb_v1.go:203-264): windowed sum over the
-        sampled energy table in gen_year; group_by_time regex-validated
-        with 1h fallback (influxdb_v1.go:36, 233)."""
+        sampled energy table in gen_year, FILL(null); group_by_time
+        regex-validated with 1h fallback (influxdb_v1.go:36, 233). The
+        request plans like any other; only its reader is pinned to
+        gen_year (with the planner's ts bounds, pushed to the scan)."""
         if not _ENERGY_GROUP_RE.match(group_by_time):
             group_by_time = "1h"
-        try:
-            def _run():
-                from_e = rfc3339_epoch(from_time)
-                to_e = rfc3339_epoch(to_time)
-                # the tier reader's sargable ts bounds (from_e <= ts <=
-                # to_e on integer epochs) reach the parquet scan
-                df = self.warehouse.read_tier("gen_year", from_e, to_e)
-                if df is None:
-                    return []
-                step = parse_relative_duration(group_by_time)
-                base = df.where(F.col("measurement") == "electricity_meter_energy_sampled")
-                groups = split_group_tags(group_by_tag)
-                agg = base.groupBy(time_bucket("ts", step).alias("time"), *groups).agg(
-                    F.sum("value_f").alias("value")
-                )
-                agg = gap_fill(agg, "null", from_e, to_e, step, groups)
-                out = agg.select(
-                    F.col("time").cast("long").alias("time"), *groups, "value"
-                ).orderBy("time", *groups)
-                return to_series_shape(out, "electricity_meter_energy_sampled", groups)
+        req = DataPointsRequest(
+            "electricity_meter_energy_sampled",
+            data_function="sum",
+            from_time=from_time,
+            to_time=to_time,
+            group_by_time=group_by_time,
+            group_by_tag=group_by_tag,
+            fill_type="null",
+        )
 
-            return _report(self.warehouse.with_read_retry(_run))
-        except Exception as e:  # noqa: BLE001
-            return _report(error=str(e))
+        def _run():
+            if not (from_time and to_time):
+                raise ValueError("the energy rollup needs both from_time and to_time")
+            scans = []
+
+            def gen_year(tier, from_epoch, to_epoch):
+                scans.append(self.warehouse.read_tier("gen_year", from_epoch, to_epoch))
+                return scans[0] if scans[0] is not None else self._no_points()
+
+            df = QueryPlanner(gen_year).plan(req, now=now)
+            # an empty gen_year answers with no series (an ungrouped
+            # FILL(null) would otherwise spine all-null buckets)
+            if scans[0] is None:
+                return []
+            return to_series_shape(df, req.measurement_name, split_group_tags(group_by_tag))
+
+        return self._answer(_run)
 
     # -- cmd.tsdb.write_data_points ----------------------------------------
     def write_data_points(self, points: list[dict], now: datetime | None = None) -> dict:
@@ -609,7 +599,7 @@ class EcollectorApi:
 
     def cascade_stages(self) -> tuple:
         """The live cascade, minus any CQs removed via delete_object —
-        pass to :func:`ecollector_spark.downsample.run_cascade[_incremental]`
+        pass to :func:`ecollector_spark.downsample.run_cascade_incremental`
         as ``stages``."""
         return tuple(self.cq_stages.values())
 
@@ -621,7 +611,7 @@ class EcollectorApi:
         set, time(interval) bucket) into ``target_rp``. The reference
         sends InfluxDB the generated CREATE CONTINUOUS QUERY string; here
         the stage joins ``cascade_stages()`` so the scheduled
-        ``run_cascade[_incremental]`` job executes it. Re-creating an
+        ``run_cascade_incremental`` job executes it. Re-creating an
         identical CQ is a no-op (ok); a same-name CQ with a different
         definition errors, like InfluxDB."""
         known = set(TIER_TTL_SECONDS) | set(self.ttl_overrides)

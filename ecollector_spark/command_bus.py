@@ -369,7 +369,7 @@ class CommandDispatcher:
         "cmd.log.set_level": _cmd_set_log_level,
     }
 
-    # -- paho transport (optional) -----------------------------------------
+    # -- live transport (paho when installed, stdlib client otherwise) ------
     def connect(
         self,
         host: str,
@@ -379,28 +379,20 @@ class CommandDispatcher:
         client_id: str = "ec_api",
         qos: int = 1,
     ):
-        """Connect with paho-mqtt, subscribe the command topic, and wire
-        replies back through the same client (the AdminApi transport,
-        admin.go:28-41). Returns the connected client; run it with
-        ``loop_forever()`` / ``loop_start()``. ImportError when paho-mqtt
-        is absent — the core still works via ``handle_message``."""
-        import paho.mqtt.client as mqtt  # gated: optional dependency
+        """Connect to a live broker, subscribe the command topic, and
+        wire replies back through the same client (the AdminApi
+        transport, admin.go:28-41), via
+        :func:`~ecollector_spark.sources.mqtt_broker.connect_client`:
+        paho-mqtt when installed (run the returned client with
+        ``loop_forever()`` / ``loop_start()``), else the stdlib client
+        with its read loop started."""
+        from ecollector_spark.sources.mqtt_broker import connect_client
 
-        client = mqtt.Client(client_id=client_id, clean_session=False)
-        if username:
-            client.username_pw_set(username, password)
+        client = connect_client(
+            host, port, [COMMAND_TOPIC], self.handle_message, username, password, client_id, qos
+        )
         if self._publish is None:
             self._publish = lambda t, env: client.publish(
                 t, json.dumps(env, separators=(",", ":")), qos=qos
             )
-
-        def on_connect(cl, _userdata, _flags, _rc):
-            cl.subscribe(COMMAND_TOPIC, qos=qos)
-
-        def on_message(_cl, _userdata, msg):
-            self.handle_message(msg.topic, msg.payload)
-
-        client.on_connect = on_connect
-        client.on_message = on_message
-        client.connect(host, port)
         return client

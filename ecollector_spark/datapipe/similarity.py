@@ -71,9 +71,14 @@ def _lit_vec_sql(vec) -> str:
     return "array(" + ", ".join(one(x) for x in vec) + ")"
 
 
-def _cosine_sql(v: str, q: str) -> str:
-    """cosine(v, q) fragment over already-double array fragments."""
-    return f"{_dot_sql(v, q)} / (sqrt({_dot_sql(v, v)}) * sqrt({_dot_sql(q, q)}))"
+def _cosine_sql(v: str, q: str, v_norm: str = "", q_norm: str = "") -> str:
+    """cosine(v, q) fragment over already-double array fragments; the
+    norms default to ``sqrt(dot(x, x))`` (pass precomputed ones). NULL
+    when either norm is 0: a zero vector has no direction, and under
+    ANSI the division would fail the whole query."""
+    v_norm = v_norm or f"sqrt({_dot_sql(v, v)})"
+    q_norm = q_norm or f"sqrt({_dot_sql(q, q)})"
+    return f"try_divide({_dot_sql(v, q)}, {v_norm} * {q_norm})"
 
 
 def _as_double(c: Column) -> Column:
@@ -154,15 +159,6 @@ def hyperplane_bucket(vec: str, planes: list[list[float]]) -> Column:
     return F.expr(f"CAST(0{bits} AS INT)")
 
 
-def sign_bucket(vec: Column, bits: int = 4) -> Column:
-    """Axis-aligned LSH bucket (sign of the first ``bits`` dimensions) —
-    the degenerate hyperplane family; kept for comparison/tests."""
-    b = F.lit(0)
-    for i in range(bits):
-        b = b + F.when(F.element_at(vec, i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return b.cast("int")
-
-
 def _embedding_dim(emb: DataFrame, vec_col: str) -> int:
     row = emb.select(F.size(vec_col).alias("d")).first()
     if row is None:
@@ -227,7 +223,7 @@ def embedding_near_dup_pairs(
         "vec_id", "_v", F.expr(f"sqrt({_dot_sql('_v', '_v')})").alias("_n"), "_t", "_b"
     )
     a, b = bk.alias("a"), bk.alias("b")
-    cos = F.expr(f"round({_dot_sql('a._v', 'b._v')} / (a._n * b._n), 6)")
+    cos = F.expr(f"round({_cosine_sql('a._v', 'b._v', 'a._n', 'b._n')}, 6)")
     # cosine behind a fence (functions.barriers, same shape as the
     # minhash verify): the threshold filter otherwise pushes into the
     # bucket join's condition with alias substitution, so the
@@ -338,7 +334,7 @@ def semantic_dedup(
         a.select("vec_id", "cid", "v", F.expr(f"sqrt({_dot_sql('v', 'v')})").alias("_n"))
     )
     lo, hi = withn.alias("lo"), withn.alias("hi")
-    cos = F.expr(f"{_dot_sql('lo.v', 'hi.v')} / (lo._n * hi._n)")
+    cos = F.expr(_cosine_sql("lo.v", "hi.v", "lo._n", "hi._n"))
     drops = (
         lo.join(
             hi,

@@ -55,25 +55,6 @@ def downsample_step(
     return out
 
 
-def run_cascade(tier_reader, tier_writer, stages: Sequence[tuple] = CASCADE) -> None:
-    """Run all cascade steps (gen_raw->gen_day->...->gen_year).
-
-    ``tier_reader(tier) -> DataFrame``; ``tier_writer(df, tier)`` appends.
-    In production this is a scheduled job per step (the CQ cadence); steps
-    are independent given their source tier. For append-only sources use
-    ``run_cascade_incremental`` — this full variant recomputes every
-    bucket (idempotent only with an overwrite writer). ``stages``
-    defaults to the full reference cascade; pass the API's live CQ set
-    (``EcollectorApi.cq_stages``) so deleted CQs stop running
-    (admin.go:363-364).
-    """
-    for src_tier, dst_tier, step in stages:
-        src = tier_reader(src_tier)
-        if src is None:
-            continue
-        tier_writer(downsample_step(src, step, target_tier=dst_tier), dst_tier)
-
-
 def run_cascade_incremental(
     tier_reader,
     tier_writer,
@@ -117,6 +98,10 @@ def run_cascade_incremental(
     contract as before (``RESAMPLE FOR``-style bounded lateness). The
     re-read is bounded to N buckets of source per step — the incremental
     property survives.
+
+    ``stages`` defaults to the full reference cascade; pass the API's
+    live CQ set (``EcollectorApi.cascade_stages()``) so deleted CQs stop
+    running (admin.go:363-364).
     """
     if now_epoch is None:
         now_epoch = int(time.time())

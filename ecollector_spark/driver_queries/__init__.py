@@ -38,134 +38,6 @@ def register(name: str, oracle: Optional[str] = None, shelved: bool = False):
 #: Gate ordering: one representative per operator family first, so even a
 #: truncated check run still touches every family. Names absent from this
 #: list keep their registration order after it.
-#:
-#: Round-5 rotation (VERDICT r4 #1/#2): a fixed 50 means the driver never
-#: re-proves shelved oracles, so each round swaps gates whose operators
-#: keep a second green gate for shelved twins that have never been on the
-#: hard signal. This round 9 slots rotated in: routing_branches (A11 —
-#: the last oracle-expressible component without a main-gate row),
-#: ts_agg_min/ts_agg_first (for median/last/max — one _AGG_BUILDERS code
-#: path held four slots), tpch_q9 (5-way join, for q18's semi-join-agg
-#: which overlaps the shelved Q3/Q10 family), text_rolling_fingerprint
-#: (for text_fingerprint), ann_ivf_append_topk (the r4 append path, for
-#: the 4-rounds-green brute-force baseline), sketch_stratified_sample
-#: (for sampled_quantiles), dedup_decontaminate (for jaccard_pairs) and
-#: mm_resize_metadata (for mm_binary_metadata). Every rotated-out gate
-#: stays green via tools/check.py --shelved.
-#: Round-6 rotation (VERDICT r5 #2), executed: six never-on-driver gates
-#: swapped in, one per new code path — ts_agg_percentile95 (the
-#: parameterized extended-function builder), ts_raw_difference (the
-#: chunked raw window with O(1) boundary seeds), influxql_subquery
-#: (plan_tree composition), influxql_select_into (the query-endpoint
-#: write path), datapipe_pack_sequences (the two-level distributed
-#: prefix sum) and dedup_incremental (the cross-batch manifest path,
-#: carrying the new dup_near_batch in-batch pass). Rotated out to
-#: shelved, each with a same-family main-gate twin still on the signal:
-#: ts_agg_min/ts_agg_first (percentile95 + count/mean/linear keep A14),
-#: dedup_decontaminate, ann_ivf_append_topk (ann_ivf_topk stays),
-#: text_rolling_fingerprint, sketch_stratified_sample (kmv stays).
-#: Round-7 rotation (VERDICT r6 #3), executed: six never-on-driver gates
-#: onto the hard signal — influxql_selector_arith (plan_multi arithmetic
-#: combine), influxql_tz_clause (wall-clock bucketing + fill spine),
-#: influxql_group_by_star (tag-set expansion), lifecycle_tiered_query
-#: (the composed ingest->preagg->cascade->tiered-query->TTL flow, never
-#: on driver budget before), ts_raw_derivative_by_tag (per-tag chunked
-#: raw window) and datapipe_mix_weights (weighted corpus mixing).
-#: Rotated out to shelved, each with a same-family main twin remaining:
-#: ts_transform_difference_max (ts_raw_difference + the arith gate keep
-#: A15), ts_agg_mean_fill_linear (count_fill_zero + tag_fill_previous +
-#: tz keep A16), dedup_simhash (five dedup main gates remain),
-#: downsample_cascade_10m (lifecycle_tiered_query runs the full cascade
-#: inside it), text_token_counts (langid + quality keep the text family),
-#: events_top3_users_per_type (asof/interval/tpch keep §2.6; the top-n
-#: window twin ts_selector_top3 stays in the shelved sweep).
-#: Round-8 rotation (VERDICT r7 #3), executed: six never-on-driver gates
-#: onto the hard signal — the three r7 real-decode gates mm_real_decode /
-#: mm_audio_features / mm_video_frames (each proves a pure-stdlib codec
-#: end-to-end against an analytic oracle), influxql_multi_from (multi-
-#: measurement UNION plan), ts_scalar_sqrt (scalar transform wrap) and
-#: datapipe_streaming_ingest (the corpus ingest + compaction + replay
-#: heal flow). Rotated out to shelved, each with a same-family main twin
-#: remaining: mm_resize_metadata (mm_feature_hist + the three decode
-#: gates carry the family), dedup_clusters (exact/minhash/incremental/
-#: embedding stay), text_quality (text_langid stays), streaming_session_
-#: replay (preagg + counter-diff replays keep §2.8), influxql_subquery
-#: (multi_from + select_into keep plan_tree composition), ts_raw_
-#: difference (selector_arith + derivative_by_tag keep A15's window
-#: family).
-#: Round-9 rotation (VERDICT r8 #2), executed: the three r8-proven gates
-#: onto the hard signal — mm_jpeg_decode (the from-scratch T.81 baseline
-#: codec, exact-to-the-unit value gate), dedup_minhash_hybrid (the
-#: measured-in verify path: signature-agreement primary + border exact),
-#: influxql_tz_fallback_hour (the DST repeated-hour fix, two rows) —
-#: plus three never-on-driver veterans: text_pii_scrub (regex scrub +
-#: counts), ann_lsh_indexed (the materialized (_t,_b)-partitioned bucket
-#: store probe) and datapipe_export_shards (md5-sharded export + XOR
-#: manifest). Rotated out to shelved, each with a same-family main twin
-#: remaining: dedup_exact (minhash/hybrid/incremental/embedding stay;
-#: incremental's manifest path IS the md5 groupBy), mm_feature_hist (the
-#: four real-decode gates carry §2.9), sink_csv_canonical
-#: (sink_parquet_roundtrip keeps S4/S7/S8's write path), topic_wildcard_
-#: match (filter_engine_chain + routing_branches + fimp pipeline keep
-#: the filter/topic family; the pure function stays pytest-pinned),
-#: ts_agg_percentile95 (same _AGG_BUILDERS dispatch as mean/count gates),
-#: tpch_q9_profit_by_nation (q1 + asof + interval keep §2.6 on signal).
-#: Remaining never-on-driver candidates for round 10+:
-#: ts_agg_{stddev_by_tag,spread,mode,integral_1h,count_distinct,distinct},
-#: ts_transform_{cumulative_sum,nn_derivative,moving_average,elapsed},
-#: ts_selector_top3, ts_raw_cumulative_sum,
-#: influxql_{multi_select,field_predicate,delete_window,value_scale,
-#: multi_field}, ts_group_by_time_offset,
-#: datapipe_{pack_manifest,leakage_safe_split,epoch_order}.
-#: Round-10 rotation, executed: four gates carrying THIS round's changed
-#: code paths rotate in — mm_tiff_decode (now 4 compression arms incl.
-#: the new TIFF-LZW + Predictor-2 path), dedup_urls (normalize_url's
-#: r10 scheme-less pass-through + userinfo strip), influxql_select_star_
-#: field (the *::field narrowing) and influxql_lone_lower_bound (the
-#: open-ended absolute-bound fix). Plus two gates NEW in r10 on the
-#: signal from birth: dedup_semantic_hier (the two-level quantizer,
-#: VERDICT r9 #1) and mm_png_palette (palette/Adam7/tRNS decode).
-#: Rotated out, each with family twins still on signal: dedup_semantic
-#: (hier gate shares the Lloyd head + drop rule; flat assignment stays
-#: via ann_ivf_topk), mm_jpeg_decode (mm_real_decode + mm_png_palette +
-#: mm_tiff_decode keep image decode; the progressive twin stays
-#: shelved-green), influxql_tz_fallback_hour (influxql_tz_clause keeps
-#: tz()), influxql_multi_from (raw_sql_query + influxql_select_into
-#: keep §2.10).
-#: Round-11 rotation (VERDICT r10 #2/#10), executed: the four veterans
-#: r9 asked for finally get driver exposure — mm_jpeg_progressive,
-#: mm_gif_decode, dedup_span_removal, datapipe_curation_text — plus the
-#: two r10-built gates datapipe_warc_ingest and ann_ivf_hier_topk (whose
-#: oracle now also mirrors the r11 empty-cell sub-codebook backfill),
-#: influxql_select_star (the star family head, oracle ORDER BY aligned
-#: in r10), and datapipe_warc_response NEW on the signal from birth (the
-#: raw-crawl response-record path, VERDICT r10 #1). Rotated out, each
-#: with a same-family main twin remaining: dedup_urls + dedup_minhash_
-#: hybrid (span_removal/minhash_lsh/incremental/semantic_hier keep
-#: dedup), text_pii_scrub (gopher_rules + perplexity + curation_text
-#: keep text), mm_real_decode (real PNG decode runs e2e inside
-#: datapipe_warc_response; palette/tiff/jpeg-prog/gif keep image
-#: decode), mm_flac_decode (video_frames + probes keep §2.9),
-#: influxql_select_star_field + influxql_lone_lower_bound (select_star
-#: keeps the star path; every ts_* gate keeps F5), and
-#: ts_raw_derivative_by_tag (selector_arith keeps A15; raw-window twins
-#: shelved-green).
-#: Round-12 rotation (VERDICT r11 #5), executed: the r11 newborns with
-#: driver exposure pending — ann_ivf_pq_topk (the composed IVF-PQ
-#: stack) and mm_jpeg_exif_orientation (the 8-transform EXIF table) —
-#: plus the multi-field veterans never on the hard signal:
-#: influxql_multi_field (the dir-mangled pivot), influxql_multi_field_agg
-#: (per-mangled-field aggregates) and influxql_agg_star_fields (r11's
-#: fn(*) expansion over the mangled shape). Rotated out, each with a
-#: same-family main twin remaining: ann_lsh_indexed (ivf/hier/pq probes
-#: keep ANN), mm_video_frames (exif/png/tiff/jpeg-prog/gif keep decode),
-#: influxql_group_by_star (select_star keeps the star family),
-#: influxql_selector_arith (agg_star_fields + multi_field_agg keep A15),
-#: datapipe_mix_weights (pack_sequences keeps assembly).
-#: Round-12 OPTIMIZATION amendment: the optimization driver re-runs every
-#: query declared in round 11 — a main gate that disappears counts as a
-#: regression — so the five r12 rotation-outs above are restored to main
-#: alongside the five rotation-ins (main = 55 for this round).
 _PRIORITY = [
     # flagship + core time-series planner (S9, F4/F5, A12-A16, A19)
     "ts_group_by_time_mean",

@@ -40,12 +40,3 @@ def enrich_with_metadata(
     )
     ev = events.withColumn("_addr", topic_to_address(topic_col))
     return ev.join(dim, on="_addr", how="left").drop("_addr")
-
-
-def devices_grouped_by(metadata: DataFrame, by: str = "location_id") -> DataFrame:
-    """J2 helper (metadata/vinc_store.go:63-109): dev_id -> group id, used
-    by the two-level energy regroup (A18)."""
-    return metadata.select(
-        F.col("device_id").cast("string").alias("dev_id"),
-        F.col(by).cast("string").alias("group_id"),
-    ).distinct()

@@ -23,26 +23,6 @@ def topic_to_address(topic: Column | str) -> Column:
     return F.regexp_replace(c, r"^pt:j1/mt:(evt|cmd)", "")
 
 
-def parse_topic(topic: Column | str) -> dict[str, Column]:
-    """Extract address components as named columns
-    (fimpgo/address.go:78-115). Missing segments -> empty string."""
-    c = F.col(topic) if isinstance(topic, str) else topic
-
-    def seg(prefix: str) -> Column:
-        return F.regexp_extract(c, rf"(?:^|/){prefix}:([^/]*)", 1)
-
-    return {
-        "payload_type": seg("pt"),
-        "msg_type": seg("mt"),
-        "resource_type": seg("rt"),
-        "resource_name": seg("rn"),
-        "service_name": seg("sv"),
-        # last ad: segment is the service address, first is resource address
-        "resource_address": seg("ad"),
-        "service_address": F.regexp_extract(c, r"ad:([^/]*)$", 1),
-    }
-
-
 def route_to_regex(route: str) -> str:
     """Compile an MQTT route with ``+``/``#`` wildcards to an anchored
     regex with the same accept-language as the reference's recursive

@@ -1,8 +1,6 @@
 from ecollector_spark.functions.timeutil import (  # noqa: F401
     parse_relative_duration,
-    duration_seconds,
     time_bucket,
-    epoch_seconds,
 )
 
 

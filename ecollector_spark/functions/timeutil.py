@@ -37,16 +37,6 @@ def parse_relative_duration(rtime: str) -> int:
     return 0
 
 
-def duration_seconds(rtime: str) -> int:
-    return parse_relative_duration(rtime)
-
-
-def epoch_seconds(col) -> Column:
-    """Timestamp -> epoch seconds (bigint). The reference's query API emits
-    epoch seconds (influxdb_v1.go:191 precision "s")."""
-    return F.unix_timestamp(F.col(col) if isinstance(col, str) else col)
-
-
 def time_bucket(col, step_seconds: int, offset_seconds: int = 0) -> Column:
     """Tumbling-bucket start in epoch seconds (bigint).
 
@@ -63,18 +53,6 @@ def time_bucket(col, step_seconds: int, offset_seconds: int = 0) -> Column:
             + offset_seconds
         ).cast("long")
     return (F.floor(e / F.lit(step_seconds)) * step_seconds).cast("long")
-
-
-def time_bucket_sql(col_sql: str, step_seconds: int, offset_seconds: int = 0) -> str:
-    """The DuckDB-side twin of :func:`time_bucket` (same arithmetic)."""
-    if offset_seconds:
-        # parenthesized: a negative offset must not render `--N`, which
-        # SQL parses as a line comment
-        return (
-            f"CAST(floor((epoch({col_sql})-({offset_seconds}))/{step_seconds}) AS BIGINT)"
-            f"*{step_seconds}+({offset_seconds})"
-        )
-    return f"CAST(floor(epoch({col_sql})/{step_seconds}) AS BIGINT)*{step_seconds}"
 
 
 # ---------------------------------------------------------------------------
@@ -180,7 +158,8 @@ def tz_spine_times(zone: str, from_epoch: int, to_epoch: int,
 class Bucketing(NamedTuple):
     """How one request buckets ``ts`` for ``GROUP BY time(step)``."""
 
-    #: bucket key column, aliased ``time``
+    #: bucket key column (unaliased: aggregates alias it ``time``,
+    #: window partitions use it as is)
     key: Column
     #: fill range, in the key's space
     fill_from: int
@@ -211,14 +190,14 @@ def bucketing(zone: str, step_seconds: int, offset_seconds: int,
     time_out = F.col("time").cast("long")
     if not zone:
         key = time_bucket("ts", step_seconds, offset_seconds)
-        return Bucketing(key.alias("time"), from_epoch, to_epoch, None, time_out)
+        return Bucketing(key, from_epoch, to_epoch, None, time_out)
     if step_seconds < 86400:
         key = tz_bucket_expr("ts", zone, step_seconds, offset_seconds)
         spine = tz_spine_times(zone, from_epoch, to_epoch, step_seconds, offset_seconds)
-        return Bucketing(key.alias("time"), from_epoch, to_epoch, spine, time_out)
+        return Bucketing(key, from_epoch, to_epoch, spine, time_out)
     key = time_bucket(F.from_utc_timestamp("ts", zone), step_seconds, offset_seconds)
     return Bucketing(
-        key.alias("time"),
+        key,
         wall_clock(from_epoch, zone),
         wall_clock(to_epoch, zone),
         None,

@@ -1189,43 +1189,14 @@ def plan_tree(planner, iq: InfluxQLQuery, now=None):
     statement plans against THAT frame — one composed Catalyst plan, no
     materialization between levels. Multi-selector outer statements ride
     the same path via plan_multi."""
-    from ecollector_spark.query import QueryPlanner, split_group_tags
+    from pyspark.sql import functions as F
 
-    def _with_arith(df, req):
-        """Apply the statement's MULTI-leaf selector arithmetic to a
-        planned frame: the plan_multi columns combine per bucket into
-        ONE value column (fill is FILL(none) for multi-select, so
-        post-combining is fill-exact). Single-leaf arithmetic does NOT
-        ride this wrapper — it goes through plan(post_agg=...) so it
-        applies BEFORE gap fill, like the scalar-transform path:
-        FILL(0) buckets must carry the literal 0, not expr(0)
-        (ADVICE r6)."""
-        if iq.value_arith is None:
-            return df
-        from pyspark.sql import functions as F
-
-        if iq.selectors is not None:
-            tags = split_group_tags(req.group_by_tag)
-            cols = [F.col(s.alias) for s in iq.selectors]
-            return df.select(
-                "time",
-                *tags,
-                arith_column(iq.value_arith, cols).cast("double").alias("value"),
-            )
-        return df.withColumn(
-            "value", arith_column(iq.value_arith, [F.col("value")]).cast("double")
-        )
-
-    def _single_leaf_post_agg():
-        """plan(post_agg=...) hook for single-leaf arithmetic
-        (mean("value") * 2 + 1, "value" * 1000)."""
-        if iq.value_arith is None or iq.selectors is not None:
-            return None
-        from pyspark.sql import functions as F
-
-        return lambda d: d.withColumn(
-            "value", arith_column(iq.value_arith, [F.col("value")]).cast("double")
-        )
+    from ecollector_spark.query import (
+        MANGLED_MEASUREMENT_FIELDS,
+        QueryPlanner,
+        Selector,
+        split_group_tags,
+    )
 
     if iq.subquery is None:
         if iq.star_aggregate is not None:
@@ -1237,11 +1208,6 @@ def plan_tree(planner, iq: InfluxQLQuery, now=None):
             # in ONE plan_multi groupBy (conditional columns, no join).
             # Single-field measurements were already rewritten to
             # fn("value") at parse time and fall through unchanged.
-            from ecollector_spark.query import (
-                MANGLED_MEASUREMENT_FIELDS,
-                Selector,
-            )
-
             flds = MANGLED_MEASUREMENT_FIELDS.get(iq.request.measurement_name)
             if flds:
                 fn, base = iq.star_aggregate
@@ -1283,8 +1249,6 @@ def plan_tree(planner, iq: InfluxQLQuery, now=None):
             # FIELD arithmetic (r9 late): combine the pivoted twin
             # columns per point; null results (a missing operand field
             # at that point) drop, InfluxDB's null-result rule
-            from pyspark.sql import functions as F
-
             colmap = dict(iq.multi_fields)
             leaf_cols = [F.col(colmap[f]) for f in iq.arith_fields]
             return (
@@ -1297,26 +1261,45 @@ def plan_tree(planner, iq: InfluxQLQuery, now=None):
                 .where(F.col("value").isNotNull())
                 .orderBy("time", "value")
             )
-        if iq.selectors is not None:
-            return _with_arith(planner.plan_multi(iq.request, iq.selectors, now=now), iq.request)
-        return planner.plan(iq.request, now=now, post_agg=_single_leaf_post_agg())
-    # the inner statement's OWN result clauses (ORDER/LIMIT/SLIMIT)
-    # apply before the outer statement sees its rows
-    inner = apply_result_shape(plan_tree(planner, iq.subquery, now=now), iq.subquery)
-    from pyspark.sql import functions as F
-
-    outer_req = _align_inherited_range(iq, now)
-    tags = split_group_tags(iq.subquery.request.group_by_tag)
-    src = inner.select(
-        F.lit(outer_req.measurement_name).alias("measurement"),
-        F.timestamp_seconds(F.col("time")).alias("ts"),
-        *tags,
-        F.col("value").alias("value_f"),
-    )
-    sub_planner = QueryPlanner(lambda tier: src, profile=getattr(planner, "profile", None) or "optimized")
+        req = iq.request
+    else:
+        # the inner statement's OWN result clauses (ORDER/LIMIT/SLIMIT)
+        # apply before the outer statement sees its rows
+        inner = apply_result_shape(plan_tree(planner, iq.subquery, now=now), iq.subquery)
+        req = _align_inherited_range(iq, now)
+        tags = split_group_tags(iq.subquery.request.group_by_tag)
+        src = inner.select(
+            F.lit(req.measurement_name).alias("measurement"),
+            F.timestamp_seconds(F.col("time")).alias("ts"),
+            *tags,
+            F.col("value").alias("value_f"),
+        )
+        planner = QueryPlanner(lambda tier: src, profile=planner.profile)
     if iq.selectors is not None:
-        return _with_arith(sub_planner.plan_multi(outer_req, iq.selectors, now=now), outer_req)
-    return sub_planner.plan(outer_req, now=now, post_agg=_single_leaf_post_agg())
+        df = planner.plan_multi(req, iq.selectors, now=now)
+        if iq.value_arith is None:
+            return df
+        # MULTI-leaf selector arithmetic: the plan_multi columns combine
+        # per bucket into ONE value column (fill is FILL(none) for
+        # multi-select, so post-combining is fill-exact)
+        return df.select(
+            "time",
+            *split_group_tags(req.group_by_tag),
+            arith_column(iq.value_arith, [F.col(s.alias) for s in iq.selectors])
+            .cast("double")
+            .alias("value"),
+        )
+    # single-leaf arithmetic (mean("value") * 2 + 1, "value" * 1000)
+    # rides plan(post_agg=...) so it applies BEFORE gap fill, like the
+    # scalar-transform path: FILL(0) buckets must carry the literal 0,
+    # not expr(0) (ADVICE r6)
+    post_agg = None
+    if iq.value_arith is not None:
+        def post_agg(d):
+            return d.withColumn(
+                "value", arith_column(iq.value_arith, [F.col("value")]).cast("double")
+            )
+    return planner.plan(req, now=now, post_agg=post_agg)
 
 
 def _align_inherited_range(iq: InfluxQLQuery, now):

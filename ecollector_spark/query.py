@@ -28,11 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ecollector_spark import tiers
-from ecollector_spark.functions.timeutil import (
-    bucketing,
-    parse_relative_duration,
-    time_bucket,
-)
+from ecollector_spark.functions.timeutil import bucketing, parse_relative_duration
 from ecollector_spark.gapfill import gap_fill
 
 
@@ -129,6 +125,14 @@ MANGLED_MEASUREMENT_FIELDS: dict[str, tuple[str, ...]] = {
     "electricity_meter_energy_sampled": ("e_import", "e_export"),
     "electricity_meter_power": ("p_import", "p_export"),
 }
+
+
+def _field_col(field_name: str) -> str:
+    """The stored column a field reads: the canonical ``value`` and
+    every dir-mangled name (its twin rows' value) read ``value_f``."""
+    if field_name == "value" or _mangled_dir(field_name) is not None:
+        return "value_f"
+    return field_name
 
 
 _AGG_BUILDERS = {
@@ -394,8 +398,7 @@ def _cardinality_select(
     df,
     fn: str,
     param: str,
-    step: int,
-    bucket_off: int,
+    bucket_key,
     group_cols,
     value_col: str,
     ts_epoch,
@@ -406,15 +409,14 @@ def _cardinality_select(
     ``top/bottom(field, N)`` (the N extreme POINTS per bucket, each
     keeping its own timestamp; ties break by earliest point — a
     deterministic rank over a bucket-partitioned window, bounded by
-    bucket contents, never a global sort)."""
+    bucket contents, never a global sort). ``bucket_key`` is the
+    bucket start column, None with no GROUP BY time."""
+    keys = [bucket_key] if bucket_key is not None else []
     if fn == "distinct":
-        keys = (
-            [time_bucket("ts", step, bucket_off).alias("time")] if step else []
-        )
-        agg = df.groupBy(*keys, *group_cols).agg(
+        agg = df.groupBy(*[k.alias("time") for k in keys], *group_cols).agg(
             F.array_sort(F.collect_set(F.col(value_col).cast("double"))).alias("_vals")
         )
-        if not step:
+        if not keys:
             agg = agg.select(
                 F.lit(from_epoch).cast("long").alias("time"), *group_cols, "_vals"
             )
@@ -429,9 +431,7 @@ def _cardinality_select(
         raise ValueError(f"{fn} needs an integer N >= 1: {param!r}")
     v = F.col(value_col).cast("double")
     order = [v.desc() if fn == "top" else v.asc(), ts_epoch.asc()]
-    part = ([time_bucket("ts", step, bucket_off)] if step else []) + [
-        F.col(c) for c in group_cols
-    ]
+    part = keys + [F.col(c) for c in group_cols]
     if part:
         w = Window.partitionBy(*part).orderBy(*order)
         sel = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= n)
@@ -491,21 +491,17 @@ def _apply_window_transform(agg, tf: str, param: str, group_cols, step: int):
     return out
 
 
-def _parse_rfc3339(s: str) -> datetime:
-    """InfluxQL treats offset-less time literals ('2024-01-08',
-    '2024-01-08 00:00:00') as UTC, so a naive parse gets UTC attached —
-    never the host's local zone (``.timestamp()`` on a naive datetime
-    would shift the boundary by the host's UTC offset)."""
-    dt = datetime.fromisoformat(s.replace("Z", "+00:00"))
+def rfc3339_epoch(s: str) -> int:
+    """Epoch seconds of an InfluxQL time literal. The one helper every
+    read/write/delete boundary uses. InfluxQL treats offset-less
+    literals ('2024-01-08', '2024-01-08 00:00:00') as UTC, so a naive
+    parse gets UTC attached — never the host's local zone
+    (``.timestamp()`` on a naive datetime would shift the boundary by
+    the host's UTC offset)."""
+    dt = datetime.fromisoformat(str(s).replace("Z", "+00:00"))
     if dt.tzinfo is None:
         dt = dt.replace(tzinfo=timezone.utc)
-    return dt
-
-
-def rfc3339_epoch(s: str) -> int:
-    """Epoch seconds of an InfluxQL time literal, bare-timestamps-are-UTC
-    semantics. The one helper every read/write/delete boundary uses."""
-    return int(_parse_rfc3339(str(s)).timestamp())
+    return int(dt.timestamp())
 
 
 def split_group_tags(group_by_tag: str) -> list[str]:
@@ -551,7 +547,6 @@ class QueryPlanner:
 
         # defaults (influxdb_v1.go:102-114)
         group_by_time = "" if req.group_by_time == "auto" else req.group_by_time
-        field_name = req.field_name or "value"
         data_function = req.data_function
         if (req.group_by_tag or group_by_time) and not data_function:
             data_function = "mean"
@@ -563,16 +558,8 @@ class QueryPlanner:
         # pre-r10 it silently fell into the relative branch with rel=0
         # and returned an EMPTY result.
         if req.from_time or req.to_time:
-            from_epoch = (
-                int(_parse_rfc3339(req.from_time).timestamp())
-                if req.from_time
-                else 0
-            )
-            to_abs_epoch = (
-                int(_parse_rfc3339(req.to_time).timestamp())
-                if req.to_time
-                else None
-            )
+            from_epoch = rfc3339_epoch(req.from_time) if req.from_time else 0
+            to_abs_epoch = rfc3339_epoch(req.to_time) if req.to_time else None
             # the fill spine needs a finite upper; open-ended ends now,
             # like the relative shape
             to_epoch = to_abs_epoch if to_abs_epoch is not None else now_epoch
@@ -637,16 +624,6 @@ class QueryPlanner:
         if hi is not None:
             df = df.where(F.col("ts") < ts_lit(hi + 1))
 
-        # dir-mangled field (r9): selecting/aggregating "e_import" means
-        # the import-direction twin rows of the measurement — ONE pushed
-        # dir predicate, then the query is an ordinary single-field plan
-        # over the canonical value column (every downstream shape —
-        # aggregates, transforms, fills, tags — works unchanged)
-        mangled = _mangled_dir(field_name)
-        if mangled is not None:
-            df = df.where(F.col("dir") == mangled)
-            field_name = "value"
-
         # tag predicates (influxdb_v1.go:145-156; list bug fixed to IN)
         flt = req.filters
         for k, v in flt.tags.items():
@@ -666,8 +643,9 @@ class QueryPlanner:
             df = df.where(F.col("location_id").isin(flt.locations))
         if flt.dev_types:
             df = df.where(F.col("dev_type").isin(flt.dev_types))
+        value_col = _field_col(req.field_name or "value")
         if flt.field_predicates:
-            fcol = F.col({"value": "value_f"}.get(field_name, field_name))
+            fcol = F.col(value_col)
             ops = {
                 ">": fcol.__gt__,
                 ">=": fcol.__ge__,
@@ -681,13 +659,25 @@ class QueryPlanner:
                     raise ValueError(f"unsupported field predicate op: {op!r}")
                 df = df.where(ops[op](F.lit(float(num))))
 
+        step = _parse_group_interval(group_by_time)
+        bucket_off = (
+            _parse_signed_duration(req.group_by_offset) if req.group_by_offset else 0
+        )
         return df, {
             "ts_epoch": ts_epoch,
             "from_epoch": from_epoch,
             "to_epoch": to_epoch,
-            "value_col": {"value": "value_f"}.get(field_name, field_name),
+            "value_col": value_col,
             "tag_cols": split_group_tags(req.group_by_tag),
-            "step": _parse_group_interval(group_by_time),
+            "step": step,
+            "bucket_off": bucket_off,
+            # tz('<zone>') (public InfluxQL) aligns buckets to the zone's
+            # wall clock, DST-exact (timeutil.bucketing). Raw (unbucketed)
+            # shapes are unaffected: tz only moves bucket boundaries, and
+            # the wire format is epoch seconds either way.
+            "bk": (
+                bucketing(req.tz, step, bucket_off, from_epoch, to_epoch) if step else None
+            ),
             "data_function": data_function,
             "fill_type": fill_type,
         }
@@ -707,14 +697,17 @@ class QueryPlanner:
         path rides this hook."""
         _post = post_agg if post_agg is not None else (lambda d: d)
         df, ctx = self._prepare(req, now)
+        # dir-mangled field (r9): selecting/aggregating "e_import" means
+        # the import-direction twin rows of the measurement — ONE pushed
+        # dir predicate, then the query is an ordinary single-field plan
+        # over the canonical value column (every downstream shape —
+        # aggregates, transforms, fills, tags — works unchanged)
+        mangled = _mangled_dir(req.field_name)
+        if mangled is not None:
+            df = df.where(F.col("dir") == mangled)
         ts_epoch = ctx["ts_epoch"]
-        from_epoch, to_epoch = ctx["from_epoch"], ctx["to_epoch"]
         value_col, tag_cols = ctx["value_col"], ctx["tag_cols"]
-        step, data_function, fill_type = (
-            ctx["step"],
-            ctx["data_function"],
-            ctx["fill_type"],
-        )
+        step, data_function = ctx["step"], ctx["data_function"]
 
         # selector shapes (influxdb_v1.go:159-188). NB the reference's
         # tag-only shape selects the RAW field (series organized by tag,
@@ -733,16 +726,9 @@ class QueryPlanner:
             tf = req.transform_function or (
                 "difference" if req.data_function == "difference" else ""
             )
-            if tf in _SCALAR_TRANSFORMS:
-                out = df.select(
-                    ts_epoch.alias("time"),
-                    *[F.col(t) for t in tag_cols],
-                    _SCALAR_TRANSFORMS[tf](F.col(value_col)).cast("double").alias("value"),
-                )
-                return _post(out).orderBy("time", *tag_cols)
             if tf == "moving_average":
                 raise ValueError("moving_average requires GROUP BY time or an aggregate")
-            if tf:
+            if tf and tf not in _SCALAR_TRANSFORMS:
                 return _post(
                     _raw_window_transform(
                         df,
@@ -751,18 +737,16 @@ class QueryPlanner:
                         tag_cols,
                         ts_epoch,
                         value_col,
-                        from_epoch,
-                        to_epoch,
+                        ctx["from_epoch"],
+                        ctx["to_epoch"],
                     )
                 )
-            out = df.select(
-                ts_epoch.alias("time"),
-                *[F.col(t) for t in tag_cols],
-                F.col(value_col).alias("value"),
-            )
+            value = F.col(value_col)
+            if tf:
+                value = _SCALAR_TRANSFORMS[tf](value).cast("double")
+            out = df.select(ts_epoch.alias("time"), *tag_cols, value.alias("value"))
             return _post(out).orderBy("time", *tag_cols)
 
-        group_cols = tag_cols
         if data_function == "percentile":
             agg_builder = _percentile_builder(req.function_param)
         else:
@@ -772,9 +756,6 @@ class QueryPlanner:
         ):
             raise ValueError(f"unsupported data_function: {data_function!r}")
 
-        bucket_off = (
-            _parse_signed_duration(req.group_by_offset) if req.group_by_offset else 0
-        )
         if data_function in _CARDINALITY_FUNCS:
             if req.transform_function:
                 raise ValueError(
@@ -786,86 +767,92 @@ class QueryPlanner:
                 df,
                 data_function,
                 req.function_param,
-                step,
-                bucket_off,
-                group_cols,
+                ctx["bk"].key if step else None,
+                tag_cols,
                 value_col,
                 ts_epoch,
-                from_epoch,
+                ctx["from_epoch"],
             ))
-        # tz('<zone>') (public InfluxQL) aligns buckets to the zone's wall
-        # clock, DST-exact (timeutil.bucketing). Raw (unbucketed) shapes
-        # are unaffected: tz only moves bucket boundaries, and the wire
-        # format is epoch seconds either way.
-        bk = bucketing(req.tz, step, bucket_off, from_epoch, to_epoch) if step else None
-        if step:
-            if data_function == "mode":
-                agg = _mode_agg(df, [bk.key], group_cols, value_col, ts_epoch)
-            elif data_function == "integral":
-                agg = _integral_agg(df, [bk.key], group_cols, value_col, req.function_param)
-            else:
-                builder = (
-                    _AGG_BUILDERS["last"] if data_function == "difference" else agg_builder
-                )
-                agg = df.groupBy(bk.key, *group_cols).agg(
-                    builder(value_col, "ts").alias("value")
-                )
+        if data_function == "mode":
+            def grouped(keys):
+                return _mode_agg(df, keys, tag_cols, value_col, ts_epoch)
+        elif data_function == "integral":
+            def grouped(keys):
+                return _integral_agg(df, keys, tag_cols, value_col, req.function_param)
+        else:
+            builder = (
+                _AGG_BUILDERS["last"] if data_function == "difference" and step else agg_builder
+            )
+
+            def grouped(keys):
+                return df.groupBy(*keys, *tag_cols).agg(builder(value_col, "ts").alias("value"))
+
+        def shape(agg):
             if data_function == "difference":
-                w = Window.partitionBy(*group_cols).orderBy("time")
+                w = Window.partitionBy(*tag_cols).orderBy("time")
                 agg = agg.withColumn("value", F.col("value") - F.lag("value").over(w)).where(
                     F.col("value").isNotNull()
                 )
+            # an aggregate that has no defined value for a bucket (stddev
+            # of a single sample, percentile whose nearest-rank index
+            # rounds to 0) emits NO row, like InfluxDB — FILL then re-adds
+            # the bucket per the spine, so the point is absent, not
+            # present-but-null
+            if data_function in ("percentile", "stddev"):
+                agg = agg.where(F.col("value").isNotNull())
+            # transform wrap (influxdb_v1.go:184-186): f(g(field)). abs
+            # and difference are the reference's own surface; the rest of
+            # the window family is the hand-written InfluxQL set (public
+            # docs)
+            if req.transform_function in _SCALAR_TRANSFORMS:
+                agg = agg.withColumn(
+                    "value", _SCALAR_TRANSFORMS[req.transform_function](F.col("value"))
+                )
+            elif req.transform_function in _WINDOW_TRANSFORMS:
+                agg = _apply_window_transform(
+                    agg, req.transform_function, req.transform_param, tag_cols, step
+                )
+            elif req.transform_function:
+                raise ValueError(f"unsupported transform_function: {req.transform_function!r}")
+            return _post(agg)
+
+        fill = req.transform_function not in _WINDOW_TRANSFORMS and data_function != "difference"
+        return self._finish(grouped, ctx, ["value"], fill, shape)
+
+    def _finish(self, grouped, ctx, names: list[str], fill: bool, shape=None) -> DataFrame:
+        """Shared back half of :meth:`plan` and :meth:`plan_multi`.
+        ``grouped(bucket_keys)`` aggregates the filtered frame per bucket
+        key and group tag; with no GROUP BY time the one row per tag set
+        is stamped with the range start, like InfluxQL. ``shape`` runs
+        on the aggregate before gap fill (``fill``: spine the buckets
+        per the request's fill type); the result is the wire shape
+        (epoch-second ``time``, tags, double ``names``) sorted by time."""
+        bk, tag_cols = ctx["bk"], ctx["tag_cols"]
+        if bk is not None:
+            agg = grouped([bk.key.alias("time")])
         else:
-            # aggregate over the whole range (optionally per tag); like
-            # InfluxQL, the result row is stamped with the range start
-            if data_function == "mode":
-                agg = _mode_agg(df, [], group_cols, value_col, ts_epoch)
-            elif data_function == "integral":
-                agg = _integral_agg(df, [], group_cols, value_col, req.function_param)
-            else:
-                agg = df.groupBy(*group_cols).agg(agg_builder(value_col, "ts").alias("value"))
-            agg = agg.select(F.lit(from_epoch).cast("long").alias("time"), *group_cols, "value")
-
-        # an aggregate that has no defined value for a bucket (stddev of
-        # a single sample, percentile whose nearest-rank index rounds to
-        # 0) emits NO row, like InfluxDB — FILL then re-adds the bucket
-        # per the spine, so the point is absent, not present-but-null
-        if data_function in ("percentile", "stddev"):
-            agg = agg.where(F.col("value").isNotNull())
-
-        # transform wrap (influxdb_v1.go:184-186): f(g(field)). abs and
-        # difference are the reference's own surface; the rest of the
-        # window family is the hand-written InfluxQL set (public docs)
-        if req.transform_function in _SCALAR_TRANSFORMS:
-            agg = agg.withColumn(
-                "value", _SCALAR_TRANSFORMS[req.transform_function](F.col("value"))
+            agg = grouped([]).select(
+                F.lit(ctx["from_epoch"]).cast("long").alias("time"), *tag_cols, *names
             )
-        elif req.transform_function in _WINDOW_TRANSFORMS:
-            agg = _apply_window_transform(
-                agg, req.transform_function, req.transform_param, group_cols, step
-            )
-        elif req.transform_function:
-            raise ValueError(f"unsupported transform_function: {req.transform_function!r}")
-
-        agg = _post(agg)
-
-        if step and req.transform_function not in _WINDOW_TRANSFORMS and data_function != "difference":
+        if shape is not None:
+            agg = shape(agg)
+        if bk is not None and fill:
             agg = gap_fill(
                 agg,
-                fill_type,
+                ctx["fill_type"],
                 bk.fill_from,
                 bk.fill_to,
-                step,
-                group_cols,
-                offset_seconds=bucket_off,
+                ctx["step"],
+                tag_cols,
+                offset_seconds=ctx["bucket_off"],
                 spine=bk.spine,
             )
-        time_out = bk.time_out if step else F.col("time").cast("long")
+        time_out = bk.time_out if bk is not None else F.col("time").cast("long")
         return agg.select(
             time_out.alias("time"),
-            *group_cols,
-            F.col("value").cast("double").alias("value"),
-        ).orderBy("time", *group_cols)
+            *tag_cols,
+            *[F.col(n).cast("double").alias(n) for n in names],
+        ).orderBy("time", *tag_cols)
 
     def plan_fields(
         self,
@@ -915,12 +902,7 @@ class QueryPlanner:
                 raise ValueError(f"duplicate output column {name!r}")
             seen.add(name)
             mapped.append((name, d))
-        from dataclasses import replace as _dc_replace
-
-        # neutralize the request's field_name (the FIRST mangled name)
-        # before _prepare — the raw pivot reads BOTH directions itself;
-        # _prepare's single-dir mangled-field shortcut must not fire
-        df, ctx = self._prepare(_dc_replace(req, field_name="value"), now)
+        df, ctx = self._prepare(req, now)
         ts_epoch = ctx["ts_epoch"]
         value_col = "value_f"
         df = df.where(F.col("dir").isin(sorted({d for _, d in mapped})))
@@ -959,11 +941,9 @@ class QueryPlanner:
         ``*::field`` narrowing (r10): time + value, no tag columns.
         One pruned scan, a projection, and the result sort — nothing
         else."""
-        from dataclasses import replace as _dc_replace
-
         from ecollector_spark.schema import DATAPOINT_TAG_COLUMNS
 
-        df, ctx = self._prepare(_dc_replace(req, field_name="value"), now)
+        df, ctx = self._prepare(req, now)
         keys = (
             []
             if fields_only
@@ -999,14 +979,7 @@ class QueryPlanner:
         # request handed to routing carries a non-upgrading function.
         if not all(s.data_function == "mean" for s in selectors):
             req = _dc_replace(req, data_function="last")
-        # per-selector fields handle their own dir below — _prepare's
-        # single-dir mangled-field shortcut must not fire on the first
-        # selector's field and starve the others (r9)
-        if _mangled_dir(req.field_name) is not None:
-            req = _dc_replace(req, field_name="value")
         df, ctx = self._prepare(req, now)
-        tag_cols = ctx["tag_cols"]
-        step, from_epoch = ctx["step"], ctx["from_epoch"]
 
         # dir-mangled selector fields (r9): mean("e_import"),
         # mean("e_export") side by side — each aggregates ITS direction's
@@ -1037,7 +1010,7 @@ class QueryPlanner:
                 sel_col = f"_f_{fld}"
                 proj[sel_col] = F.when(F.col("dir") == d, F.col("value_f"))
             else:
-                sel_col = {"value": "value_f"}.get(fld, fld)
+                sel_col = _field_col(fld)
             base = sel.alias or fn
             name = base
             i = 0
@@ -1049,36 +1022,13 @@ class QueryPlanner:
         if proj:
             df = df.withColumns(proj)
 
-        if step:
-            bucket_off = (
-                _parse_signed_duration(req.group_by_offset) if req.group_by_offset else 0
-            )
-            bk = bucketing(req.tz, step, bucket_off, from_epoch, ctx["to_epoch"])
-            agg = df.groupBy(bk.key, *tag_cols).agg(*aggs)
-            # FILL(null) is InfluxQL's default and must not silently
-            # change when a second selector is added: every column rides
-            # the spine; FILL(0) coalesces each. previous/linear stay
-            # rejected by the parser for multi-select.
-            fill_type = ctx["fill_type"]
-            if fill_type in ("null", "0"):
-                agg = gap_fill(
-                    agg,
-                    fill_type,
-                    bk.fill_from,
-                    bk.fill_to,
-                    step,
-                    tag_cols,
-                    offset_seconds=bucket_off,
-                    spine=bk.spine,
-                )
-        else:
-            agg = df.groupBy(*tag_cols).agg(*aggs)
-            agg = agg.select(
-                F.lit(from_epoch).cast("long").alias("time"), *tag_cols, *names
-            )
-        time_out = bk.time_out if step else F.col("time").cast("long")
-        return agg.select(
-            time_out.alias("time"),
-            *tag_cols,
-            *[F.col(n).cast("double").alias(n) for n in names],
-        ).orderBy("time", *tag_cols)
+        # FILL(null) is InfluxQL's default and must not silently change
+        # when a second selector is added: every column rides the spine;
+        # FILL(0) coalesces each. previous/linear stay rejected by the
+        # parser for multi-select.
+        return self._finish(
+            lambda keys: df.groupBy(*keys, *ctx["tag_cols"]).agg(*aggs),
+            ctx,
+            names,
+            ctx["fill_type"] in ("null", "0"),
+        )

@@ -138,36 +138,8 @@ class MqttBridge:
         — no authentication support), so the live path works with zero
         external dependencies. Returns the connected client with its
         read loop started; messages land via ``handle_message``."""
-        try:
-            import paho.mqtt.client as mqtt  # gated: optional dependency
-        except ImportError:
-            if username:
-                raise NotImplementedError(
-                    "broker authentication needs paho-mqtt (not installed)"
-                )
-            from ecollector_spark.sources.mqtt_broker import MiniMqttClient
+        from ecollector_spark.sources.mqtt_broker import connect_client
 
-            client = MiniMqttClient(
-                host, port, client_id=client_id, clean_session=False
-            )
-            client.on_message = self.handle_message
-            client.loop_start()
-            for t in self.topics:
-                client.subscribe(t, qos=qos)
-            return client
-
-        client = mqtt.Client(client_id=client_id, clean_session=False)
-        if username:
-            client.username_pw_set(username, password)
-
-        def on_connect(cl, _userdata, _flags, _rc):
-            for t in self.topics:
-                cl.subscribe(t, qos=qos)
-
-        def on_message(_cl, _userdata, msg):
-            self.handle_message(msg.topic, msg.payload)
-
-        client.on_connect = on_connect
-        client.on_message = on_message
-        client.connect(host, port)
-        return client
+        return connect_client(
+            host, port, list(self.topics), self.handle_message, username, password, client_id, qos
+        )

@@ -12,10 +12,10 @@ real socket-level implementation instead of a recorded replay:
   the engine uses for S2 topic routing), PUBLISH at QoS 0/1 (PUBACK to
   the publisher; delivery QoS = min(publish, subscription) per spec
   §3.8.4), UNSUBSCRIBE, PINGREQ/PINGRESP, DISCONNECT.
-- :class:`MiniMqttClient` — blocking client used by
-  ``MqttBridge.connect`` as the paho fallback: connect, subscribe,
-  publish (QoS 1 waits for PUBACK), a reader loop dispatching inbound
-  PUBLISH to a callback.
+- :class:`MiniMqttClient` — blocking client, the paho fallback of
+  :func:`connect_client` (the one live connect path of ``MqttBridge``
+  and ``CommandDispatcher``): connect, subscribe, publish (QoS 1 waits
+  for PUBACK), a reader loop dispatching inbound PUBLISH to a callback.
 
 Scope is deliberately the reference transport's footprint (QoS 1,
 clean or persistent session flag, no retained messages, no wills, no
@@ -30,7 +30,7 @@ import re
 import socket
 import struct
 import threading
-from typing import Callable, Iterator
+from typing import Callable
 
 from ecollector_spark.fimp import route_to_regex
 
@@ -319,7 +319,10 @@ class MiniMqttClient:
             body += struct.pack(">H", pid)
             self._puback.clear()
         self._send(_packet(PUBLISH, flags, body + payload))
-        if qos:
+        if qos and threading.current_thread() is not self._reader:
+            # a publish from inside on_message (a command reply) runs on
+            # the reader thread, which is the one that reads the PUBACK:
+            # waiting for it there would stall the loop
             if self._reader is None:
                 ack = self._read_until_inline(PUBACK)
                 if struct.unpack(">H", ack)[0] != pid:
@@ -369,19 +372,44 @@ class MiniMqttClient:
             pass
 
 
-def iter_messages(
-    client: MiniMqttClient, stop: threading.Event
-) -> Iterator[tuple[str, bytes]]:  # pragma: no cover - convenience shim
-    """Adapter yielding (topic, payload) until ``stop`` is set — lets
-    ``MqttBridge.replay_session`` consume a live client if a pull shape
-    is ever preferred over the callback."""
-    import queue
+def connect_client(
+    host: str,
+    port: int,
+    topics: list[str],
+    on_message: Callable[[str, bytes], None],
+    username: str | None = None,
+    password: str | None = None,
+    client_id: str = "ec_mini",
+    qos: int = 1,
+):
+    """Connect to a live broker, subscribe ``topics`` and deliver every
+    inbound message as ``on_message(topic, payload)``. Uses paho-mqtt
+    when it can be imported (run the returned client with
+    ``loop_forever()`` / ``loop_start()``); otherwise the stdlib
+    :class:`MiniMqttClient` (no authentication), returned with its read
+    loop started. Either client's ``publish(topic, payload, qos=)``
+    sends on the same connection."""
+    try:
+        import paho.mqtt.client as mqtt  # gated: optional dependency
+    except ImportError:
+        if username:
+            raise NotImplementedError("broker authentication needs paho-mqtt (not installed)")
+        client = MiniMqttClient(host, port, client_id=client_id, clean_session=False)
+        client.on_message = on_message
+        client.loop_start()
+        for t in topics:
+            client.subscribe(t, qos=qos)
+        return client
 
-    q: "queue.Queue[tuple[str, bytes]]" = queue.Queue()
-    client.on_message = lambda t, p: q.put((t, p))
-    client.loop_start()
-    while not stop.is_set():
-        try:
-            yield q.get(timeout=0.2)
-        except queue.Empty:
-            continue
+    client = mqtt.Client(client_id=client_id, clean_session=False)
+    if username:
+        client.username_pw_set(username, password)
+
+    def on_connect(cl, _userdata, _flags, _rc):
+        for t in topics:
+            cl.subscribe(t, qos=qos)
+
+    client.on_connect = on_connect
+    client.on_message = lambda _cl, _userdata, msg: on_message(msg.topic, msg.payload)
+    client.connect(host, port)
+    return client

@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from ecollector_spark.api import EcollectorApi
-from ecollector_spark.downsample import run_cascade
+from ecollector_spark.downsample import run_cascade_incremental
 from ecollector_spark.query import DataPointsFilter, DataPointsRequest
 from ecollector_spark.session import get_spark
 from ecollector_spark.streaming.pipeline import build_points, route_points
@@ -62,7 +62,12 @@ def main() -> None:
             wh.write_points(df)
 
     # -- 4. the CQ cascade (scheduled job in production)
-    run_cascade(wh.read_tier, lambda df, tier: wh.write_points(df))
+    run_cascade_incremental(
+        wh.read_tier,
+        lambda df, tier: wh.write_points(df),
+        wh.high_water_mark,
+        now_epoch=float("inf"),
+    )
 
     # -- 5. query: structured API (Q2) and raw SQL (Q1)
     api = EcollectorApi(spark, wh)

@@ -150,9 +150,14 @@ class TestApi:
         """Full loop: raw write -> CQ cascade -> the planner's tier upgrade
         (10m mean over a 1d range -> gen_week) answers from the
         pre-aggregated tier, like the reference's RP routing."""
-        from ecollector_spark.downsample import run_cascade
+        from ecollector_spark.downsample import run_cascade_incremental
 
-        run_cascade(wh.read_tier, lambda df, tier: wh.write_points(df))
+        run_cascade_incremental(
+            wh.read_tier,
+            lambda df, tier: wh.write_points(df),
+            wh.high_water_mark,
+            now_epoch=float("inf"),
+        )
         api = EcollectorApi(wh.spark, wh)
         req = DataPointsRequest(
             measurement_name="electricity_meter_power",
@@ -227,6 +232,48 @@ class TestApi:
         )
         assert "error" not in rep["val"]
 
+    def test_energy_rollup_empty_gen_year_has_no_series(self, wh):
+        # the fixture writes nothing to gen_year: no series, grouped or
+        # not (no all-null FILL(null) spine for the ungrouped rollup)
+        assert wh.read_tier("gen_year") is None
+        api = EcollectorApi(wh.spark, wh)
+        for tag in ("", "dev_id"):
+            rep = api.get_energy_data_points(
+                "2024-01-01T00:00:00Z", "2024-01-01T01:59:59Z", group_by_tag=tag
+            )
+            assert rep["val"]["Results"][0]["Series"] == []
+
+    def test_energy_rollup_is_the_planned_sum(self, wh, spark):
+        """The rollup answers exactly what QueryPlanner.plan answers for
+        the same sum/FILL(null) request over gen_year."""
+        wh.write_points(_mk_points(spark, [
+            ("electricity_meter_energy_sampled", "2024-01-01T00:10:00", "7", 1.5),
+            ("electricity_meter_energy_sampled", "2024-01-01T00:20:00", "8", 2.5),
+            ("electricity_meter_energy_sampled", "2024-01-01T02:10:00", "7", 4.0),
+            ("electricity_meter_energy_sampled", "2024-01-01T05:00:00", "8", 8.0),
+        ]))
+        api = EcollectorApi(spark, wh)
+        planner = QueryPlanner(lambda tier, lo, hi: wh.read_tier("gen_year", lo, hi))
+        for tag in ("", "dev_id"):
+            req = DataPointsRequest(
+                "electricity_meter_energy_sampled",
+                data_function="sum",
+                fill_type="null",
+                from_time="2024-01-01T00:00:00Z",
+                to_time="2024-01-01T03:59:59Z",
+                group_by_time="1h",
+                group_by_tag=tag,
+            )
+            want = to_series_shape(planner.plan(req), req.measurement_name, [tag] if tag else [])
+            rep = api.get_energy_data_points(req.from_time, req.to_time, "1h", tag)
+            assert rep["val"]["Results"][0]["Series"] == want
+            if not tag:
+                assert want[0]["values"] == [
+                    [1704067200, 4.0], [1704070800, None], [1704074400, 4.0], [1704078000, None]
+                ]
+            else:
+                assert [s["tags"]["dev_id"] for s in want] == ["7", "8"]
+
     def test_catalog_endpoints(self, wh):
         api = EcollectorApi(wh.spark, wh)
         ms = api.get_measurements()["val"]["Results"][0]["Series"][0]["values"]
@@ -275,7 +322,7 @@ class TestApi:
         assert api.ttl_overrides == {}
 
     def test_delete_object_cq_removes_cascade_stage(self, wh):
-        from ecollector_spark.downsample import run_cascade
+        from ecollector_spark.downsample import run_cascade_incremental
         from ecollector_spark.tiers import CQ_STAGES
 
         api = EcollectorApi(wh.spark, wh)
@@ -284,14 +331,20 @@ class TestApi:
         assert "raw_to_day" not in api.cq_stages
         assert len(api.cascade_stages()) == len(CQ_STAGES) - 1
         # a cascade wired through the live stage set skips the deleted CQ
-        run_cascade(wh.read_tier, lambda df, tier: wh.write_points(df), api.cascade_stages())
+        run_cascade_incremental(
+            wh.read_tier,
+            lambda df, tier: wh.write_points(df),
+            wh.high_water_mark,
+            now_epoch=float("inf"),
+            stages=api.cascade_stages(),
+        )
         assert wh.read_tier("gen_day") is None  # raw_to_day no longer runs
 
     def test_add_cq_registers_stage_that_runs(self, wh):
         """AddCQ twin (influxdb_v1.go:333-348): a newly registered CQ
         over a user-added retention policy executes in the next cascade
         run, writing mean-per-bucket rows into its target tier."""
-        from ecollector_spark.downsample import run_cascade
+        from ecollector_spark.downsample import run_cascade_incremental
 
         api = EcollectorApi(wh.spark, wh)
         api.add_retention_policy("custom", 30 * 86400)
@@ -299,10 +352,12 @@ class TestApi:
         assert ("gen_raw", "custom", "10m") in api.cascade_stages()
         # unknown RPs are rejected before they can poison the cascade
         assert api.add_cq("bad", "nope", "custom", "10m")["status"] == "error"
-        run_cascade(
+        run_cascade_incremental(
             wh.read_tier,
             lambda df, tier: wh.write_points(df.withColumn("tier", F.lit(tier))),
-            [s for s in api.cascade_stages() if s[1] == "custom"],
+            wh.high_water_mark,
+            now_epoch=float("inf"),
+            stages=[s for s in api.cascade_stages() if s[1] == "custom"],
         )
         out = wh.read_tier("custom")
         assert out is not None

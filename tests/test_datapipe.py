@@ -124,6 +124,36 @@ class TestSimilarity:
         out = {r["vec_id"] for r in similarity.cosine_threshold(emb, 0, 0.5).collect()}
         assert out == {1, 4}
 
+    @pytest.fixture(scope="class")
+    def zero_emb(self, spark):
+        rows = [
+            (0, [1.0, 0.0, 0.0]),
+            (1, [0.0, 0.0, 0.0]),  # no direction: no cosine with anything
+            (2, [1.0, 1.0, 0.0]),
+            (3, [0.0, 0.0, 0.0]),  # shares every LSH bucket with vec 1
+            (4, [1.0, 0.01, 0.0]),
+        ]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def test_zero_vector_topk(self, zero_emb):
+        # the zero vectors' cosine is NULL (sorted last), not an ANSI
+        # divide-by-zero failing the whole query
+        out = similarity.brute_force_topk(zero_emb, query_id=0, k=4).collect()
+        assert [(r["vec_id"], r["cosine"]) for r in out] == [
+            (4, 0.99995), (2, 0.707107), (1, None), (3, None)
+        ]
+        out = similarity.brute_force_topk(zero_emb, query_id=1, k=4).collect()
+        assert [r["cosine"] for r in out] == [None] * 4
+
+    def test_zero_vector_threshold(self, zero_emb):
+        out = {r["vec_id"] for r in similarity.cosine_threshold(zero_emb, 0, 0.5).collect()}
+        assert out == {2, 4}
+
+    def test_zero_vector_near_dup_pairs(self, zero_emb):
+        pairs = {(r["vec_a"], r["vec_b"])
+                 for r in similarity.embedding_near_dup_pairs(zero_emb, 0.9, bits=2).collect()}
+        assert pairs == {(0, 4)}
+
     def test_lsh_bucket_restricts_scan(self, emb):
         # vec 3 has opposite sign on dim 1 -> different bucket -> excluded
         # even if we lower the threshold to -1

@@ -180,3 +180,43 @@ class TestLiveBrokerE2E:
             assert [e["uid"] for e in lines] == ["u1", "u1"]
             pub.disconnect()
             client.disconnect()
+
+
+class TestLiveCommandBus:
+    def test_get_measurements_over_live_broker(self, spark, tmp_path):
+        """A command published to the command topic reaches a connected
+        CommandDispatcher (paho absent -> the stdlib client, the same
+        connect path as the bridge) and its report arrives on the
+        request's resp_to topic — published from inside the delivery
+        callback, so the reply's QoS-1 send must not stall the reader."""
+        from ecollector_spark.api import EcollectorApi
+        from ecollector_spark.command_bus import COMMAND_TOPIC, CommandDispatcher
+        from ecollector_spark.warehouse import Warehouse
+
+        api = EcollectorApi(spark, Warehouse(spark, str(tmp_path / "wh")))
+        resp_to = "pt:j1/mt:rsp/rt:app/rn:test/ad:1"
+        with MiniMqttBroker() as broker:
+            bus = CommandDispatcher(api)
+            client = bus.connect(broker.host, broker.port)
+            assert isinstance(client, MiniMqttClient)
+            app = MiniMqttClient(broker.host, broker.port, client_id="app")
+            got: list[tuple[str, dict]] = []
+            app.on_message = lambda t, p: got.append((t, json.loads(p)))
+            app.loop_start()
+            app.subscribe(resp_to, qos=1)
+            for uid in ("m1", "m2"):
+                app.publish(
+                    COMMAND_TOPIC,
+                    json.dumps({
+                        "type": "cmd.tsdb.get_measurements", "serv": "ecollector",
+                        "val_t": "null", "val": None, "uid": uid, "resp_to": resp_to,
+                    }),
+                    qos=1,
+                )
+            assert _wait(lambda: len(got) == 2)
+            assert [(t, e["type"], e["corid"], e["val"]) for t, e in got] == [
+                (resp_to, "evt.tsdb.measurements_report", "m1", []),
+                (resp_to, "evt.tsdb.measurements_report", "m2", []),
+            ]
+            app.disconnect()
+            client.disconnect()

@@ -46,9 +46,9 @@ class CommandDispatcher:
     api: the command surface (query/DDL/catalog/write).
     process_manager: the ecprocess registry; a fresh one by default.
     publish: optional ``(topic, envelope_dict) -> None`` transport hook
-        (e.g. a paho ``client.publish`` wrapper). Every publish is also
-        appended to :attr:`published` so tests and replay harnesses can
-        assert the outbound traffic without a broker.
+        (e.g. a paho ``client.publish`` wrapper); tests and replay
+        harnesses pass a collector to see the outbound traffic without a
+        broker. Nothing else keeps the replies.
     start_fn: ``start_fn(config) -> list[StreamingQuery]`` used by
         ``cmd.ecprocess.ctrl`` start; defaults to a no-op pipeline (the
         state machine still transitions).
@@ -66,7 +66,6 @@ class CommandDispatcher:
         self._publish = publish
         self._start_fn = start_fn or (lambda config: [])
         self._uid = 0
-        self.published: list[tuple[str, dict]] = []
         self.dropped = 0  #: malformed payloads skipped (counted, not fatal)
 
     # -- envelope helpers --------------------------------------------------
@@ -88,7 +87,6 @@ class CommandDispatcher:
         """Route one report: the request's ``resp_to`` topic when set,
         else the app event address (admin.go:391-399)."""
         topic = request_env.get("resp_to") or EVENT_TOPIC
-        self.published.append((topic, envelope))
         if self._publish is not None:
             self._publish(topic, envelope)
         return envelope

@@ -31,13 +31,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecollector_spark.functions import barriers, quote_ident
+from ecollector_spark.functions import barriers, publish, quote_ident
 
 DEFAULT_LSH_SEED = "ecollector-lsh"
 
@@ -371,40 +370,6 @@ def lsh_candidate_pairs(
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-
-
-def _publish_dir(tmp: str, dst: str) -> None:
-    """Publish a freshly built index directory with a rename-aside swap:
-    the live index is renamed out of the way, the replacement renamed in,
-    and only then is the old copy deleted. The index-missing window is
-    two renames — there is never a half-deleted live index, and a reader
-    that grabbed the old path keeps a complete (stale) index. Single-host
-    filesystem semantics; on an object store this becomes a manifest
-    pointer flip."""
-    old = dst + ".old"
-    _recover_crashed_publish(dst)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(dst):
-        os.rename(dst, old)
-    os.rename(tmp, dst)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _recover_crashed_publish(dst: str) -> None:
-    """If a previous publish died between renames, ``.old`` holds the
-    only complete index — restore it as the live directory instead of
-    deleting the last good copy. Called from every index entry point so
-    a crashed publish heals on the next touch; no-op when healthy."""
-    old = dst + ".old"
-    if os.path.isdir(old) and not os.path.isdir(dst):
-        os.rename(old, dst)
-    elif os.path.isdir(old) and os.path.isdir(dst):
-        # died after rename(tmp, dst), before rmtree(old): the live dir
-        # is the published replacement — drop the stale copy now instead
-        # of carrying it until the next publish (same fix as the
-        # warehouse's measurement-swap recovery, r6)
-        shutil.rmtree(old, ignore_errors=True)
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -1056,7 +1021,7 @@ def ivf_index_exists(index_path: str) -> bool:
     sidecar only appears after the atomic publish rename). Heals a
     crashed publish first (restores ``.old`` when it is the only
     complete copy)."""
-    _recover_crashed_publish(index_path)
+    publish.recover(index_path)
     return os.path.isdir(os.path.join(index_path, "centroids"))
 
 
@@ -1110,13 +1075,15 @@ def ivf_build(
       :func:`ivf_append` compares incoming batches against it to decide
       when the centroids have drifted enough to warrant a retrain.
 
-    The build lands in a scratch directory and is published with a
-    rename-aside swap (:func:`_publish_dir`): the live index is renamed
-    aside, the replacement renamed in, the old copy deleted last — no
-    window with a half-deleted index. At 100 TB this runs as a periodic
-    batch job; queries go through :func:`ivf_topk_indexed` and touch only
-    ``nprobe / n_centroids`` of the data; corpus growth goes through
-    :func:`ivf_append` (assign-only) until drift forces a retrain.
+    The build lands in a staging directory and is published with the
+    rename-aside swap of :mod:`ecollector_spark.functions.publish`: the
+    live index is renamed aside, the replacement renamed in, the old
+    copy deleted last — no window with a half-deleted index, and a
+    concurrent reader's heal-on-touch waits for the swap to finish. At
+    100 TB this runs as a periodic batch job; queries go through
+    :func:`ivf_topk_indexed` and touch only ``nprobe / n_centroids`` of
+    the data; corpus growth goes through :func:`ivf_append`
+    (assign-only) until drift forces a retrain.
 
     ``n_centroids > flat_cap`` (r10) builds the HIERARCHICAL layout —
     the same two-level quantizer as :func:`hierarchical_assignments`,
@@ -1165,9 +1132,7 @@ def ivf_build(
         # is the hierarchical ceiling (2^24 lists), not the flat
         # broadcast cap — past flat_cap the layout switches below
         n_centroids = default_n_centroids(e.count(), cap=1 << 24)
-    tmp = f"{index_path}.building.{os.getpid()}"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
+    tmp = publish.staging(index_path)
     pq_cb = None
     if pq_m is not None:
         # train the PQ codebooks ONCE and land them in the scratch dir
@@ -1279,7 +1244,7 @@ def ivf_build(
             },
             f,
         )
-    _publish_dir(tmp, index_path)
+    publish.publish(tmp, index_path)
     return index_path
 
 
@@ -1299,7 +1264,7 @@ def ivf_append(
     lists; the centroid sidecar is untouched, so an appended index is
     definitionally identical to one whose assignment pass had included
     the batch from the start (parity-tested). ``stats.json`` is updated
-    with the running count/mean atomically (tmp + ``os.replace``).
+    with the running count/mean atomically (``publish.write_atomic``).
 
     Drift guard: when the batch's mean squared assignment distance
     exceeds ``drift_factor ×`` the index's running mean, the centroids no
@@ -1455,10 +1420,10 @@ def ivf_append(
                 (stats["mean_d2"] or 0.0) * stats["n"]
                 + (batch_mean or 0.0) * n_new
             ) / total
-        tmp = os.path.join(index_path, "stats.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({**stats, "n": total, "mean_d2": new_mean}, f)
-        os.replace(tmp, os.path.join(index_path, "stats.json"))
+        publish.write_atomic(
+            os.path.join(index_path, "stats.json"),
+            json.dumps({**stats, "n": total, "mean_d2": new_mean}),
+        )
     return out
 
 
@@ -1554,7 +1519,7 @@ def ivf_probe_cids(
     the driver in the same sequential order as :func:`_l2sq`, so the
     probed lists are bit-identical to the in-plan variant (ties to the
     lowest cid)."""
-    _recover_crashed_publish(index_path)
+    publish.recover(index_path)
     rows = _sidecar_collect(spark, os.path.join(index_path, "centroids"))
 
     def d2(cvec) -> float:
@@ -1594,7 +1559,7 @@ def ivf_topk_indexed(
     the ncoarse ``cid1=`` partition directories AND filters the probed
     global ``cid`` cells — the sorted-by-cid2 layout lets parquet
     row-group stats skip straight to them."""
-    _recover_crashed_publish(index_path)
+    publish.recover(index_path)
     st = _index_stats(index_path)
     if nprobe is None:
         nprobe = int(st.get("default_nprobe") or 2)
@@ -1674,7 +1639,7 @@ def ivf_pq_topk_indexed(
     in-plan gate. Output: ``(vec_id, d2_adc)`` ascending, or
     ``(vec_id, d2)`` ascending with ``rerank=``, rounded 6, ties by
     vec_id."""
-    _recover_crashed_publish(index_path)
+    publish.recover(index_path)
     st = _index_stats(index_path)
     if not st.get("pq"):
         raise ValueError(
@@ -1769,7 +1734,7 @@ def lsh_build(
     trade (each table is an independent recall chance)."""
     import json
 
-    _recover_crashed_publish(index_path)
+    publish.recover(index_path)
     if os.path.isfile(os.path.join(index_path, "params.json")) and not overwrite:
         return index_path
     if dim is None:
@@ -1777,15 +1742,13 @@ def lsh_build(
     planes = hyperplanes(dim, bits, tables, seed)
     base = emb.select(F.col("vec_id"), _as_double(F.col(vec_col)).alias("v"))
     rows = _table_buckets(base, planes, "v", keep=("v",))
-    tmp = f"{index_path}.building.{os.getpid()}"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
+    tmp = publish.staging(index_path)
     rows.write.mode("overwrite").partitionBy("_t", "_b").parquet(
         os.path.join(tmp, "buckets")
     )
     with open(os.path.join(tmp, "params.json"), "w") as f:
         json.dump({"bits": bits, "tables": tables, "dim": dim, "seed": seed}, f)
-    _publish_dir(tmp, index_path)
+    publish.publish(tmp, index_path)
     return index_path
 
 
@@ -1800,7 +1763,7 @@ def lsh_append(emb_new: DataFrame, index_path: str, vec_col: str = "embedding") 
     probe may see a prefix of the batch. Returns ``{"appended": n}``."""
     import json
 
-    _recover_crashed_publish(index_path)
+    publish.recover(index_path)
     with open(os.path.join(index_path, "params.json")) as f:
         p = json.load(f)
     planes = hyperplanes(p["dim"], p["bits"], p["tables"], p["seed"])
@@ -1846,7 +1809,7 @@ def lsh_search_indexed(
     ``tables`` directories instead of the corpus."""
     import json
 
-    _recover_crashed_publish(index_path)
+    publish.recover(index_path)
     with open(os.path.join(index_path, "params.json")) as f:
         p = json.load(f)
     planes = hyperplanes(p["dim"], p["bits"], p["tables"], p["seed"])

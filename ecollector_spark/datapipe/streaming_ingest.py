@@ -32,24 +32,20 @@ without a transaction log:
 
 No reference counterpart (the reference ingests metering points, not
 documents); this composes the gated dedup operators with the streaming
-machinery of §2.8. The rename-aside swap is the shared index-publish
-protocol (``similarity._publish_dir``), not a third reimplementation.
+machinery of §2.8. The rename-aside swap and its crash recovery are the
+program's one publish protocol (``ecollector_spark.functions.publish``),
+not a reimplementation.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecollector_spark.datapipe import dedup
-from ecollector_spark.datapipe.similarity import (
-    _publish_dir,
-    _recover_crashed_publish,
-)
-from ecollector_spark.functions import barriers
+from ecollector_spark.functions import barriers, publish
 
 
 class StreamingCorpusIngest:
@@ -113,7 +109,7 @@ class StreamingCorpusIngest:
         hex->int preserves the min/collision structure exactly, so a
         legacy manifest keeps classifying identically; the next fold
         publishes longs and the conversion never runs again."""
-        _recover_crashed_publish(self._path("manifests"))
+        publish.recover(self._path("manifests"))
         ex = self._read_or_none("manifests", "exact")
         sg = self._read_or_none("manifests", "sigs")
         if ex is None:
@@ -137,7 +133,7 @@ class StreamingCorpusIngest:
     def corpus(self) -> DataFrame | None:
         # heal a compaction that died between its two renames (the .old
         # sibling holds the only complete corpus) before reading
-        _recover_crashed_publish(self._path("corpus"))
+        publish.recover(self._path("corpus"))
         return self._read_or_none("corpus")
 
     # -- corpus compaction ---------------------------------------------------
@@ -166,9 +162,9 @@ class StreamingCorpusIngest:
         publish with the rename-aside swap. Moves bytes, never rows —
         manifests are untouched and replay idempotence is unaffected
         (a replayed batch still classifies against the same manifests;
-        a crash mid-compaction leaves either the staged ``corpus.next``
-        (ignored, overwritten next time) or the ``corpus.old`` window
-        that :meth:`corpus` heals on the next read)."""
+        a crash mid-compaction leaves either a staging directory
+        (ignored, cleared next time) or the ``corpus.old`` window that
+        :meth:`corpus` heals on the next read)."""
         corpus = self.corpus()
         if corpus is None:
             return False
@@ -177,10 +173,9 @@ class StreamingCorpusIngest:
             # one extra md5 over text the compaction reads anyway
             corpus = corpus.withColumn("text_hash", F.md5(F.col(self.text_col)))
         target = int(target_files or self.compact_target_files) or 1
-        tmp = self._path("corpus.next")
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = publish.staging(self._path("corpus"))
         corpus.repartition(target).write.mode("overwrite").parquet(tmp)
-        _publish_dir(tmp, self._path("corpus"))
+        publish.publish(tmp, self._path("corpus"))
         return True
 
     def _maybe_compact(self) -> bool:
@@ -238,17 +233,16 @@ class StreamingCorpusIngest:
             k=self.k,
             num_hashes=self.num_hashes,
         )
-        # stage BOTH manifests into one .next tree, publish with ONE
-        # swap (they can never drift apart), then append the corpus
-        tmp = self._path("manifests.next")
-        shutil.rmtree(tmp, ignore_errors=True)
+        # stage BOTH manifests into one tree, publish with ONE swap
+        # (they can never drift apart), then append the corpus
+        tmp = publish.staging(self._path("manifests"))
         barriers.snapshot(new_exact).write.mode("overwrite").parquet(
             os.path.join(tmp, "exact")
         )
         barriers.snapshot(new_sigs).write.mode("overwrite").parquet(
             os.path.join(tmp, "sigs")
         )
-        _publish_dir(tmp, self._path("manifests"))
+        publish.publish(tmp, self._path("manifests"))
         # the corpus stores md5(text) as a COLUMN so repair's coverage
         # check is a narrow columnar projection, never a full-text
         # re-hash of the corpus (ADVICE r6: a duplicate-heavy stream

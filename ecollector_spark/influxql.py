@@ -727,8 +727,9 @@ def _parse_arith(piece: str):
 
 def arith_column(ast: tuple, leaf_cols):
     """AST -> Spark Column over the planned leaf columns (list indexed
-    by the ``("sel", i)`` nodes). Division follows Spark SQL: a zero
-    divisor yields null, like InfluxDB's null result rows."""
+    by the ``("sel", i)`` nodes). Division is ``try_divide``: a zero
+    divisor yields null, like InfluxDB's null result rows, under ANSI
+    mode too."""
     from pyspark.sql import functions as F
 
     kind = ast[0]
@@ -738,7 +739,9 @@ def arith_column(ast: tuple, leaf_cols):
         return leaf_cols[ast[1]]
     _, op, lhs, rhs = ast
     lc, rc = arith_column(lhs, leaf_cols), arith_column(rhs, leaf_cols)
-    return {"+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc}[op]
+    if op == "/":
+        return F.try_divide(lc, rc)
+    return {"+": lc + rc, "-": lc - rc, "*": lc * rc}[op]
 
 
 def parse_influxql(query: str) -> InfluxQLQuery:

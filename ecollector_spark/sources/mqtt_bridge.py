@@ -13,11 +13,12 @@ the existing pipeline: ``read_fimp_stream(spark, landing_dir)`` tails the
 directory as a Structured Streaming file source, so a reference user
 points their broker at the bridge and the engine takes over from there.
 
-Durability contract: files become visible to Spark atomically (written to
-a dot-prefixed temp name, then ``os.rename``), so the file source never
-reads a half-written batch. The broker link is MQTT QoS 1 (at-least-once)
-like the reference's (process.go:112 ``...true, 1, 1``); redelivered
-envelopes are dropped downstream by ``dedup_stream`` on message uid.
+Durability contract: files become visible to Spark atomically
+(``functions.publish.write_atomic``: a dot-prefixed temp name, then a
+rename), so the file source never reads a half-written batch. The broker
+link is MQTT QoS 1 (at-least-once) like the reference's (process.go:112
+``...true, 1, 1``); redelivered envelopes are dropped downstream by
+``dedup_stream`` on message uid.
 
 paho-mqtt is optional: ``MqttBridge.connect(...)`` uses it when
 installed, but the bridge core is transport-agnostic — ``handle_message``
@@ -32,6 +33,8 @@ import json
 import os
 import time
 from typing import Iterable, Sequence
+
+from ecollector_spark.functions import publish
 
 #: the reference's default subscription — every FIMP event topic
 #: (config selector default; process.go:461-463 subscribes per selector)
@@ -101,11 +104,8 @@ class MqttBridge:
             return None
         name = f"fimp-{int(time.time())}-{self._seq:06d}.json"
         self._seq += 1
-        tmp = os.path.join(self.landing_dir, "." + name + ".tmp")
         final = os.path.join(self.landing_dir, name)
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write("\n".join(self._buf) + "\n")
-        os.rename(tmp, final)
+        publish.write_atomic(final, "\n".join(self._buf) + "\n")
         self._buf = []
         return final
 

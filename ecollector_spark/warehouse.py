@@ -36,13 +36,12 @@ import functools
 import operator
 import os
 import shutil
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ecollector_spark.functions import quote_ident
+from ecollector_spark.functions import publish, quote_ident
 from ecollector_spark.schema import DATAPOINT_SCHEMA, WAREHOUSE_PARTITION_COLUMNS
 from ecollector_spark.tiers import TIER_TTL_SECONDS, TIERS
 from ecollector_spark.tiers import write_retention_col
@@ -95,54 +94,6 @@ def canonical_points(points: DataFrame, date_partition: bool = False) -> DataFra
             if f.name in present
         ]
     )
-
-
-#: Serializes rename-aside publishes against recovery-on-read. Reads are a
-#: supported concurrent pattern (with_read_retry), and a reader that lands
-#: between _swap_in's two renames would see old-present/dst-missing, rename
-#: the pre-swap copy back over dst and break the writer's final
-#: ``rename(tmp, dst)`` — silently abandoning the replacement data. The
-#: mid-swap state is only distinguishable from a crash by knowing a swap is
-#: in flight, so recovery and publish share one in-process lock (threads
-#: share the Warehouse; the window is two renames, so contention is
-#: microseconds). Cross-process coordination is the object-store manifest
-#: flip documented in _swap_in.
-_SWAP_LOCK = threading.RLock()
-
-
-def _recover_measurement_swaps(tier_path: str) -> None:
-    """Recover measurement-level rename-aside crashes inside a tier dir
-    (``delete_points`` swaps at that granularity): any ``<m>.old`` whose
-    live directory is missing is restored — otherwise readers see the
-    data vanish and partition discovery surfaces a phantom ``m.old``
-    measurement. A directory listing, no scan."""
-    if not os.path.isdir(tier_path):
-        return
-    with _SWAP_LOCK:
-        for d in os.listdir(tier_path):
-            if d.endswith(".old"):
-                _recover_crashed_swap(os.path.join(tier_path, d[: -len(".old")]))
-
-
-def _recover_crashed_swap(dst: str) -> None:
-    """Crash recovery for the rename-aside publish: if a previous swap
-    died between ``rename(dst, old)`` and ``rename(tmp, dst)``, the
-    ``.old`` directory holds the only complete copy of the data. Restore
-    it as the live directory instead of letting the next swap (or a
-    rewrite that reads the now-missing ``dst``) delete the last good
-    copy. No-op in every healthy state. Holds _SWAP_LOCK so a concurrent
-    in-flight swap is never mistaken for a crash."""
-    old = dst + ".old"
-    with _SWAP_LOCK:
-        if os.path.isdir(old) and not os.path.isdir(dst):
-            os.rename(old, dst)
-        elif os.path.isdir(old) and os.path.isdir(dst):
-            # crash AFTER rename(tmp, dst) but before rmtree(old): the live
-            # dir is the published replacement and the leftover ``.old`` is
-            # the pre-swap copy — without this, partition discovery surfaces
-            # a phantom 'm.old' measurement (including just-deleted rows)
-            # until the next swap of the same measurement
-            shutil.rmtree(old, ignore_errors=True)
 
 
 def _parquet_listing(path: str) -> frozenset:
@@ -198,26 +149,6 @@ class Warehouse:
             f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
         )
 
-    def _swap_in(self, tmp: str, dst: str) -> None:
-        """Publish a rewritten directory via rename-aside: the live copy
-        is renamed out of the way, the replacement renamed in, and only
-        then is the old copy deleted — the not-there window is two cheap
-        renames instead of a full ``rmtree`` of the live data. (Single
-        local filesystem; on an object store this becomes a manifest
-        pointer flip.) Holds _SWAP_LOCK across the window so a concurrent
-        reader's recovery pass cannot rename ``.old`` back over ``dst``
-        mid-swap (which would fail the final rename and abandon the
-        replacement data)."""
-        old = dst + ".old"
-        with _SWAP_LOCK:
-            _recover_crashed_swap(dst)
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            if os.path.isdir(dst):
-                os.rename(dst, old)
-            os.rename(tmp, dst)
-            shutil.rmtree(old, ignore_errors=True)
-
     def _scan(self, *paths: str, base_path: str | None = None) -> DataFrame:
         """The one warehouse scan: parquet under ``paths`` read with the
         canonical schema (module docstring) — no inference job, and the
@@ -234,11 +165,74 @@ class Warehouse:
         return df
 
     def _read_hwm_sidecar(self, tier: str) -> int | None:
+        """The tier's ``_hwm`` value when it still describes the tier: its
+        mtime is strictly newer than every parquet file there. An append
+        after the sidecar was recorded (``write_points`` does not record
+        one) makes it stale, and None sends the caller to the scan. The
+        tier is listed only when a sidecar exists."""
+        tp = self.tier_path(tier)
         try:
-            with open(os.path.join(self.tier_path(tier), "_hwm")) as f:
-                return int(f.read().strip())
+            with open(os.path.join(tp, "_hwm")) as f:
+                hwm = int(f.read().strip())
+                recorded = os.fstat(f.fileno()).st_mtime_ns
         except (OSError, ValueError):
             return None
+        listing = _parquet_listing(tp)
+        if listing and all(mtime < recorded for _, _, mtime in listing):
+            return hwm
+        return None
+
+    def _rewrite(
+        self,
+        df: DataFrame,
+        tier: str,
+        measurement: str | None = None,
+        since: int | None = None,
+    ) -> None:
+        """Replace ``tier`` (or one ``measurement`` directory in it) by
+        ``df``, the one path for every directory rewrite: rows sorted by
+        (series_id, ts) within each written file, the clustering
+        :meth:`write_points` promises, so rowgroup min/max stats stay
+        tight after compaction and retention; written to a staging
+        directory and published by rename-aside
+        (:mod:`ecollector_spark.functions.publish`).
+
+        The tier's ``_hwm`` is carried across: re-recorded after the
+        publish (the tier-level publish replaces the directory holding
+        it, and every rewrite leaves files newer than it). With
+        ``since``, the rows at or after ``since`` were recomputed: the
+        mark becomes their max ts, read from the staged files by a
+        rowgroup-pruned scan, or stays the old one only if it predates
+        ``since``."""
+        dst = self.tier_path(tier)
+        pcols = self._pcols[1:]
+        if measurement is not None:
+            dst = os.path.join(dst, f"measurement={measurement}")
+            pcols = self._pcols[2:]
+        hwm = self._read_hwm_sidecar(tier)
+        if hwm is not None and since is not None and hwm >= since:
+            hwm = None
+        tmp = publish.staging(dst)
+        (
+            # the partition columns lead, so the writer's own sort on them
+            # is already satisfied and cannot reorder a file's rows
+            df.sortWithinPartitions(*pcols, "series_id", "ts")
+            .write.mode("overwrite")
+            .partitionBy(*pcols)
+            .parquet(tmp)
+        )
+        if since is not None:
+            tail = (
+                self._scan(tmp)
+                .where(F.col("ts") >= F.timestamp_seconds(F.lit(int(since))))
+                .agg(F.max("ts").alias("m"))
+                .collect()[0]["m"]
+            )
+            if tail is not None:
+                hwm = int(tail.timestamp())
+        publish.publish(tmp, dst)
+        if hwm is not None:
+            self.record_high_water_mark(tier, hwm)
 
     # -- write -------------------------------------------------------------
     def write_points(self, points: DataFrame, mode: str = "append", sort: bool = True) -> None:
@@ -284,10 +278,10 @@ class Warehouse:
         The tier's scan is reused while its parquet files are unchanged
         (same paths, sizes and mtimes): building one costs a file listing
         plus relation analysis on the driver, every query. Any append,
-        swap or removal changes the listing, and the scan is rebuilt."""
+        publish or removal changes the listing, and the scan is rebuilt."""
         path = self.tier_path(tier)
-        _recover_crashed_swap(path)
-        _recover_measurement_swaps(path)
+        publish.recover(path)
+        publish.recover_within(path)
         listing = _parquet_listing(path)
         if not listing:
             return None
@@ -332,8 +326,8 @@ class Warehouse:
         """Serve reads across concurrent rename-aside swaps, like the
         reference's always-on query path (storage/influxdb_v1.go:87-95
         serves HTTP queries while writes land). A DataFrame planned
-        before :meth:`_swap_in` holds the pre-swap file listing; an
-        action after the swap then throws FileNotFoundException for the
+        before a publish holds the pre-publish file listing; an
+        action after it then throws FileNotFoundException for the
         renamed-away files. ``build_and_run`` must BUILD the query (so a
         retry re-lists the directory) and RUN the action; on a
         missing-file failure the warehouse root's cached file listings
@@ -384,11 +378,12 @@ class Warehouse:
     def high_water_mark(self, tier: str) -> int | None:
         """Max materialized bucket ts (epoch s) in a tier, None if empty.
 
-        Fast path: a tiny ``_hwm`` sidecar file written by
-        :meth:`record_high_water_mark` after each incremental cascade run
-        — O(1) regardless of tier size. Fallback: one max() over the
-        tier's ts column. Note the fallback IS a column scan: Spark only
-        answers max() from parquet footer stats when
+        Fast path: the tiny ``_hwm`` sidecar written by
+        :meth:`record_high_water_mark` (the directory rewrites re-record
+        it), trusted while it is newer than every parquet file in the
+        tier — one directory listing, no scan. Fallback: one max() over
+        the tier's ts column. Note the fallback IS a column scan: Spark
+        only answers max() from parquet footer stats when
         ``spark.sql.parquet.aggregatePushdown`` is enabled (off by
         default), so at scale the sidecar is the path that matters.
         """
@@ -405,20 +400,11 @@ class Warehouse:
         """Idempotently re-materialize a tier's tail: every existing row
         with ``ts >= from_epoch`` is replaced by ``points`` (the
         recomputed buckets). Used by the cascade's trailing-window re-run
-        (late-data absorption). Publishes via the rename-aside swap
-        (:meth:`_swap_in`) — the no-directory window is two renames, and
-        the old data is deleted only after the new tier is live. Only the
-        affected (tier, measurement) partitions are rewritten; at 100 TB
-        a date subpartition makes the kept-prefix rewrite a file move,
-        not a scan.
-
-        The tier's ``_hwm`` sidecar is re-recorded after the swap (the
-        rewrite replaces the directory that held it): the new high-water
-        mark is read back from the rewritten tail only — a
-        rowgroup-pruned ``ts >= from_epoch`` scan of the fresh files,
-        never a full-tier scan — falling back to the old sidecar value
-        when it predates the rewritten range."""
-        old_hwm = self._read_hwm_sidecar(tier)
+        (late-data absorption). One :meth:`_rewrite`: only the tier's own
+        (measurement) partitions are rewritten; at 100 TB a date
+        subpartition makes the kept-prefix rewrite a file move, not a
+        scan. The new high-water mark is read back from the rewritten
+        tail only (``since=from_epoch``), never by a full-tier scan."""
         df = self.read_tier(tier)
         # dt is re-stamped below for every row, kept and new alike
         new = canonical_points(points, self.date_partition).drop("tier", "dt")
@@ -430,37 +416,16 @@ class Warehouse:
             merged = keep.unionByName(new, allowMissingColumns=True)
         else:
             merged = new
-        tmp = self.tier_path(tier) + ".rewriting"
-        (
-            self._stamp_dt(merged)
-            .sortWithinPartitions("series_id", "ts")
-            .write.mode("overwrite")
-            .partitionBy(*self._pcols[1:])
-            .parquet(tmp)
-        )
-        tail_max = (
-            self._scan(tmp)
-            .where(F.col("ts") >= F.timestamp_seconds(F.lit(int(from_epoch))))
-            .agg(F.max("ts").alias("m"))
-            .collect()[0]["m"]
-        )
-        self._swap_in(tmp, self.tier_path(tier))
-        if tail_max is not None:
-            self.record_high_water_mark(tier, int(tail_max.timestamp()))
-        elif old_hwm is not None and old_hwm < from_epoch:
-            self.record_high_water_mark(tier, old_hwm)
+        self._rewrite(self._stamp_dt(merged), tier, since=from_epoch)
 
     def record_high_water_mark(self, tier: str, epoch_s: int) -> None:
         """Persist the tier's max materialized bucket ts so later
         incremental runs skip the fallback scan. Written atomically
-        (tmp + rename) because a concurrent reader hitting a torn file
-        would silently fall back to the scan path — correct but slow."""
+        because a concurrent reader hitting a torn file would silently
+        fall back to the scan path — correct but slow."""
         tp = self.tier_path(tier)
         os.makedirs(tp, exist_ok=True)
-        tmp = os.path.join(tp, "_hwm.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(int(epoch_s)))
-        os.replace(tmp, os.path.join(tp, "_hwm"))
+        publish.write_atomic(os.path.join(tp, "_hwm"), str(int(epoch_s)))
 
     # -- catalog (§2.10) ---------------------------------------------------
     def measurements(self) -> list[str]:
@@ -471,7 +436,7 @@ class Warehouse:
             tp = self.tier_path(tier)
             if not os.path.isdir(tp):
                 continue
-            _recover_measurement_swaps(tp)
+            publish.recover_within(tp)
             for d in os.listdir(tp):
                 if d.startswith("measurement="):
                     out.add(d.split("=", 1)[1])
@@ -510,9 +475,9 @@ class Warehouse:
         Scale shape: with a measurement the rewrite touches only that
         measurement's partition directory per tier (never the tier's
         other measurements); an unbounded-measurement delete rewrites
-        each populated tier once. Each rewrite is filter + write + the
-        rename-aside swap (:meth:`_swap_in`); a fully-emptied partition
-        is removed instead of rewritten, which makes
+        each populated tier once. Each rewrite is filter + one
+        :meth:`_rewrite` of the measurement directory; a fully-emptied
+        partition is removed instead of rewritten, which makes
         ``DELETE FROM m`` (no WHERE) a directory drop, and in the dated
         layout a ``time <`` cutoff aligned to day boundaries is mostly
         directory drops too (the TTL enforcement path)."""
@@ -537,20 +502,20 @@ class Warehouse:
         deleted = 0
         for tier in TIERS:
             tp = self.tier_path(tier)
-            _recover_crashed_swap(tp)
+            # a crash mid-publish leaves tier=t.old or measurement=m.old,
+            # which the listing below would skip or take for a measurement
+            publish.recover(tp)
+            publish.recover_within(tp)
             if measurement is not None:
-                dirs = [os.path.join(tp, f"measurement={measurement}")]
+                names = [measurement]
             else:
-                dirs = (
-                    [os.path.join(tp, d) for d in os.listdir(tp) if d.startswith("measurement=")]
+                names = (
+                    [d.split("=", 1)[1] for d in os.listdir(tp) if d.startswith("measurement=")]
                     if os.path.isdir(tp)
                     else []
                 )
-            for mdir in dirs:
-                # measurement-level twin of the tier-level recovery: a
-                # crash between _swap_in's two renames leaves only
-                # measurement=m.old, which _has_data would skip forever
-                _recover_crashed_swap(mdir)
+            for name in names:
+                mdir = os.path.join(tp, f"measurement={name}")
                 if not self._has_data(mdir):
                     continue
                 df = self._scan(mdir, base_path=self.root)
@@ -567,18 +532,7 @@ class Warehouse:
                     shutil.rmtree(mdir)
                     continue
                 keep = df.where(~match).drop(*self._pcols[:2])
-                # tmp lives under the root (underscore prefix: invisible
-                # to partition discovery), NOT inside the tier dir where
-                # a reader could glimpse it as a phantom partition
-                tmp = os.path.join(self.root, "_delete.rewriting")
-                shutil.rmtree(tmp, ignore_errors=True)
-                (
-                    keep.sortWithinPartitions("series_id", "ts")
-                    .write.mode("overwrite")
-                    .partitionBy(*self._pcols[2:])
-                    .parquet(tmp)
-                )
-                self._swap_in(tmp, mdir)
+                self._rewrite(keep, tier, measurement=name)
         return deleted
 
     def drop_tier(self, tier: str) -> bool:
@@ -635,18 +589,12 @@ class Warehouse:
         df = self.read_tier(tier)
         if df is None:
             return False
-        hwm = self._read_hwm_sidecar(tier)
-        tmp = self.tier_path(tier) + ".compacting"
-        (
-            self._stamp_dt(df.drop("tier"))
-            .repartition(target_files_per_measurement, "measurement")
-            .write.mode("overwrite")
-            .partitionBy(*self._pcols[1:])
-            .parquet(tmp)
+        self._rewrite(
+            self._stamp_dt(df.drop("tier")).repartition(
+                target_files_per_measurement, "measurement"
+            ),
+            tier,
         )
-        self._swap_in(tmp, self.tier_path(tier))
-        if hwm is not None:  # compaction moves bytes, not rows: HWM unchanged
-            self.record_high_water_mark(tier, hwm)
         return True
 
     # -- retention TTL (the RP enforcement job) ----------------------------
@@ -677,15 +625,10 @@ class Warehouse:
             n = expired.count()
             if n == 0:
                 continue
-            hwm = self._read_hwm_sidecar(tier)
-            keep = df.where(F.col("ts") >= cut_lit).drop("tier")
-            tmp = self.tier_path(tier) + ".compacting"
-            keep.write.mode("overwrite").partitionBy("measurement").parquet(tmp)
-            self._swap_in(tmp, self.tier_path(tier))
-            if hwm is not None and hwm > cutoff:
-                # TTL drops old rows only; the max materialized bucket
-                # survives unless the whole tier expired
-                self.record_high_water_mark(tier, hwm)
+            # TTL drops old rows only: the carried high-water mark stays
+            # true, and a tier that expired whole lists no file to trust
+            # it against
+            self._rewrite(df.where(F.col("ts") >= cut_lit).drop("tier"), tier)
             deleted[tier] = n
         return deleted
 

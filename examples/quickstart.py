@@ -183,8 +183,8 @@ def main() -> None:
         ]
     )
     print("\ncommand bus replies:")
-    for (topic, env), _ in zip(bus.published, replies):
-        print(f"  -> {topic}: {env['type']} corid={env['corid']} val={str(env['val'])[:90]}")
+    for env in replies:
+        print(f"  -> {env['type']} corid={env['corid']} val={str(env['val'])[:90]}")
 
     print("workdir:", workdir)
 

@@ -638,6 +638,38 @@ class TestIncrementalCascade:
         assert os.path.isfile(os.path.join(w.tier_path("gen_raw"), "_hwm"))
         assert w.high_water_mark("gen_raw") == t_new
 
+    def test_hwm_sidecar_not_trusted_after_plain_appends(self, spark, tmp_path):
+        """A trailing re-run records ``_hwm``; a later plain run appends
+        through write_points, which records none. The next plain run
+        must not trust the stale sidecar (it would re-materialize the
+        appended buckets): every bucket lands exactly once."""
+        from ecollector_spark.downsample import run_cascade_incremental
+
+        w = Warehouse(spark, str(tmp_path / "w"))
+        t0 = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp())
+
+        def run(minutes, trailing=0):
+            w.write_points(_mk_points(spark, [
+                ("electricity_meter_power", f"2024-01-01T00:{m:02d}:10", "7", float(m))
+                for m in minutes
+            ]))
+            run_cascade_incremental(
+                w.read_tier, lambda df, tier: w.write_points(df), w.high_water_mark,
+                now_epoch=t0 + 60 * (minutes[-1] + 1),
+                reprocess_trailing_buckets=trailing,
+                tier_rewriter=w.replace_points_from,
+                stages=[("gen_raw", "gen_day", "1m")],
+            )
+
+        run(range(0, 5))
+        run(range(5, 10), trailing=1)  # rewrites from 00:04, records _hwm
+        assert os.path.isfile(os.path.join(w.tier_path("gen_day"), "_hwm"))
+        run(range(10, 15))
+        run(range(15, 20))
+        buckets = sorted(int(r["ts"].timestamp()) for r in w.read_tier("gen_day").collect())
+        assert buckets == [t0 + 60 * m for m in range(20)]
+        assert w.high_water_mark("gen_day") == t0 + 60 * 19
+
 
 class TestDatedWarehouse:
     """The opt-in dt=yyyy-MM-dd subpartition layout (SCALE.md's 100 TB
@@ -1015,15 +1047,15 @@ class TestConcurrentReadDuringSwap:
         assert [v[1] for v in series["values"]] == [100.0, 999.0]
 
     def test_recovery_mid_swap_does_not_break_writer(self, spark, wh, monkeypatch):
-        """ADVICE r6: a reader's recovery pass landing between _swap_in's
+        """ADVICE r6: a reader's recovery pass landing between publish's
         rename(dst, old) and rename(tmp, dst) must not rename the .old
         copy back over dst (which fails the writer's final rename and
-        abandons the replacement). The injected recovery blocks on
-        _SWAP_LOCK until the swap completes, then no-ops."""
+        abandons the replacement). The injected recovery blocks on the
+        publish lock until the swap completes, then no-ops."""
         import threading
         import time
 
-        from ecollector_spark import warehouse as whmod
+        from ecollector_spark.functions import publish
 
         tier_dir = wh.tier_path("gen_raw")
         real_rename = os.rename
@@ -1036,7 +1068,7 @@ class TestConcurrentReadDuringSwap:
                 # mid-swap window: dst missing, .old present — fire the
                 # reader-side recovery exactly here
                 def reader_recovery():
-                    whmod._recover_crashed_swap(tier_dir)
+                    publish.recover(tier_dir)
                     recovered.set()
 
                 t = threading.Thread(target=reader_recovery)
@@ -1044,7 +1076,7 @@ class TestConcurrentReadDuringSwap:
                 injected.append(t)
                 time.sleep(0.3)  # give the racer a chance to misbehave
 
-        monkeypatch.setattr(whmod.os, "rename", racy_rename)
+        monkeypatch.setattr(publish.os, "rename", racy_rename)
         cut = int(datetime(2024, 1, 1, 0, 5, 30, tzinfo=timezone.utc).timestamp())
         wh.replace_points_from(self._replacement(spark), "gen_raw", cut)
         monkeypatch.undo()

@@ -23,7 +23,14 @@ def _cmd(mtype, val, val_t="str_map", uid=None, resp_to=None):
 
 
 @pytest.fixture()
-def dispatcher(spark, tmp_path):
+def sent():
+    """The (topic, envelope) pairs the dispatcher publishes, collected
+    through its ``publish=`` transport hook."""
+    return []
+
+
+@pytest.fixture()
+def dispatcher(spark, tmp_path, sent):
     w = Warehouse(spark, str(tmp_path / "wh"))
     rows = [
         {
@@ -48,11 +55,13 @@ def dispatcher(spark, tmp_path):
         for i in range(3)
     ]
     w.write_points(spark.createDataFrame(rows, DATAPOINT_SCHEMA).drop("tier"))
-    return CommandDispatcher(EcollectorApi(spark, w))
+    return CommandDispatcher(
+        EcollectorApi(spark, w), publish=lambda topic, env: sent.append((topic, env))
+    )
 
 
 class TestDispatch:
-    def test_recorded_session_replay(self, dispatcher):
+    def test_recorded_session_replay(self, dispatcher, sent):
         """The e2e contract: replay a session covering query, catalog,
         DDL, and process control; assert every published report envelope
         and its routing."""
@@ -71,7 +80,7 @@ class TestDispatch:
         reports = dispatcher.replay_session(session)
         # silent add_retention_policy publishes nothing: 9 reports for 10 cmds
         assert len(reports) == 9
-        topics = [t for t, _ in dispatcher.published]
+        topics = [t for t, _ in sent]
         # resp_to routing for the first, event address for the rest
         assert topics[0] == "pt:j1/mt:rsp/rt:cloud/rn:x/ad:1"
         assert set(topics[1:]) == {EVENT_TOPIC}
@@ -141,7 +150,7 @@ class TestDispatch:
         assert series and series[0]["name"] == "electricity_meter_power"
         assert len(series[0]["values"]) >= 3  # one bucket per sample minute
 
-    def test_write_data_points_is_silent_but_lands(self, dispatcher):
+    def test_write_data_points_is_silent_but_lands(self, dispatcher, sent):
         out = dispatcher.handle_message(
             COMMAND_TOPIC,
             json.dumps(
@@ -162,10 +171,10 @@ class TestDispatch:
                 }
             ),
         )
-        assert out is None and dispatcher.published == []
+        assert out is None and sent == []
         assert "sensor_temp.evt.sensor.report" in dispatcher.api.warehouse.measurements()
 
-    def test_ignores_foreign_service_and_malformed(self, dispatcher):
+    def test_ignores_foreign_service_and_malformed(self, dispatcher, sent):
         assert (
             dispatcher.handle_message(
                 COMMAND_TOPIC,
@@ -175,7 +184,7 @@ class TestDispatch:
         )
         assert dispatcher.handle_message(COMMAND_TOPIC, "{not json") is None
         assert dispatcher.dropped == 1
-        assert dispatcher.published == []
+        assert sent == []
 
     def test_reset_to_default_drops_processes_silently(self, dispatcher):
         for mtype, val in [
@@ -298,17 +307,17 @@ class TestDispatch:
         assert out["val"]["op"] == "get_list" and out["val"]["status"] == "error"
         assert out["corid"] == "e3"
 
-    def test_silent_command_failure_stays_silent(self, dispatcher):
+    def test_silent_command_failure_stays_silent(self, dispatcher, sent):
         # the reference publishes nothing for set_log_level, success or
         # failure (admin.go:374-388) — a failure must not leak a
         # tsdb-typed error envelope to a client that expects silence
         dispatcher.api.set_log_level = None  # type: ignore[assignment]
-        before = len(dispatcher.published)
+        before = len(sent)
         out = dispatcher.handle_message(
             *_cmd("cmd.log.set_level", "debug", val_t="string")
         )
         assert out is None
-        assert len(dispatcher.published) == before
+        assert len(sent) == before
 
 
 class TestCQDDLOverBus:

@@ -1488,6 +1488,18 @@ class TestSelectorArithmetic:
         )
         assert rows[0]["value"] == -7.0  # 21 / -3
 
+    def test_zero_divisor_yields_null(self, spark):
+        """A zero divisor yields a null value (InfluxDB's null result
+        row), not an ANSI DIVIDE_BY_ZERO failure: a literal 0, and a
+        selector difference that is 0 in every bucket."""
+        where = (
+            "WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-01T04:00:00Z' "
+            "GROUP BY time(1h) FILL(none)"
+        )
+        for expr in ('mean("value") / 0', 'max("value") / (max("value") - max("value"))'):
+            rows = self._run(spark, f'SELECT {expr} FROM "m1" {where}')
+            assert [r["value"] for r in rows] == [None, None, None], expr
+
     def test_rejects_two_stage_in_combination(self):
         from ecollector_spark.influxql import InfluxQLParseError, parse_influxql
 

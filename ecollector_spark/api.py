@@ -13,11 +13,16 @@ is the parse/plan/execute pipeline the reference delegated to InfluxDB.
 Q2 (cmd.tsdb.get_data_points): the structured request compiles through
 QueryPlanner. Serialization collects only final, already-aggregated
 results — the driver-side loop is the API boundary, never an operator.
+Planned reads are answered from :class:`SeriesCache` while their input
+files are unchanged.
 """
 
 from __future__ import annotations
 
+import copy
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import replace as _dc_replace
 from datetime import datetime, timezone
 
@@ -35,7 +40,7 @@ from ecollector_spark.query import (
 )
 from ecollector_spark.schema import DATAPOINT_SCHEMA
 from ecollector_spark.tiers import CQ_STAGES, TIER_TTL_SECONDS
-from ecollector_spark.warehouse import Warehouse
+from ecollector_spark.warehouse import Warehouse, listing_digest
 
 #: energy rollup validation (influxdb_v1.go:36): 1-2 digits + m/h/d/w,
 #: else fall back to 1h
@@ -93,6 +98,52 @@ def _report(series: list[dict] | None = None, error: str | None = None) -> dict:
     }
 
 
+class SeriesCache:
+    """Bounded LRU of answered series. A planned answer is a
+    deterministic function of the request and the committed files it
+    reads, so a key made of the request (or InfluxQL) text, each
+    statement's :class:`~ecollector_spark.query.Resolution` and the
+    digest of the tier listing it reads names one answer exactly (see
+    ``EcollectorApi._answer_cached``). Entries go in and come out as
+    copies: a caller that edits its report cannot change the next one.
+    ``hits``, ``misses`` and ``evictions`` count lookups and LRU drops."""
+
+    #: entries kept; the least recently used goes first
+    ENTRIES = 256
+    #: the largest answer stored, in result rows: the cache serves
+    #: dashboard-sized repeats, not bulk exports
+    MAX_ROWS = 10_000
+
+    def __init__(self):
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        self.hits = self.misses = self.evictions = 0
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, key) -> list[dict] | None:
+        with self._lock:
+            series = self._entries.get(key)
+            if series is None:
+                self.misses += 1
+                return None
+            self._entries.move_to_end(key)
+            self.hits += 1
+        return copy.deepcopy(series)
+
+    def put(self, key, series: list[dict]) -> None:
+        if sum(len(s["values"]) for s in series) > self.MAX_ROWS:
+            return
+        series = copy.deepcopy(series)
+        with self._lock:
+            self._entries[key] = series
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.ENTRIES:
+                self._entries.popitem(last=False)
+                self.evictions += 1
+
+
 # ---------------------------------------------------------------------------
 # API facade
 # ---------------------------------------------------------------------------
@@ -103,16 +154,11 @@ class EcollectorApi:
     def __init__(self, spark: SparkSession, warehouse: Warehouse, profile: str = "optimized"):
         self.spark = spark
         self.warehouse = warehouse
-
-        def reader(tier: str, from_epoch=None, to_epoch=None) -> DataFrame:
-            # a tier with no data behaves like an empty retention policy
-            # (the reference queries it and gets zero series back); the
-            # planner's resolved time bounds flow through so a dated
-            # warehouse prunes day partitions before the ts row filter
-            df = warehouse.read_tier(tier, from_epoch, to_epoch)
-            return df if df is not None else self._no_points()
-
-        self.planner = QueryPlanner(reader, profile=profile)
+        self.profile = profile
+        self.planner = self._planner()
+        #: answered planned reads (get_data_points, the energy rollup and
+        #: InfluxQL series SELECTs); see _answer_cached
+        self.series_cache = SeriesCache()
         #: custom / altered RP TTLs (add/update_retention_policy)
         self.ttl_overrides: dict[str, int] = {}
         #: live continuous-query set (influxdb_v1.go:72-78);
@@ -122,6 +168,31 @@ class EcollectorApi:
 
     def _no_points(self) -> DataFrame:
         return self.spark.createDataFrame([], DATAPOINT_SCHEMA)
+
+    def _planner(self, reads: list | None = None, pin: str | None = None) -> QueryPlanner:
+        """A planner over the warehouse tiers. ``reads`` collects
+        ``(tier, lo, hi, found)`` for every tier read (the series
+        cache's store check); ``pin`` reads that one tier whatever the
+        routing chose."""
+
+        def reader(tier: str, from_epoch=None, to_epoch=None) -> DataFrame:
+            # a tier with no data behaves like an empty retention policy
+            # (the reference queries it and gets zero series back); the
+            # planner's resolved time bounds flow through so a dated
+            # warehouse prunes day partitions before the ts row filter
+            tier = pin or tier
+            df = self.warehouse.read_tier(tier, from_epoch, to_epoch)
+            if reads is not None:
+                reads.append((tier, from_epoch, to_epoch, df is not None))
+            return df if df is not None else self._no_points()
+
+        return QueryPlanner(reader, profile=self.profile)
+
+    def _routed(self, label: str, req: DataPointsRequest, now: datetime) -> tuple:
+        """``(label, resolution, tier read)`` of a statement read through
+        tier routing — one entry of :meth:`_answer_cached`'s key."""
+        res = self.planner.resolve(req, now)
+        return label, res, res.tier
 
     # -- Q1: cmd.tsdb.query ------------------------------------------------
     def run_query(self, query: str, now: datetime | None = None) -> dict:
@@ -230,38 +301,45 @@ class EcollectorApi:
         except InfluxQLParseError:
             iq = None
         if iq is not None and iq.into_measurement is None:
+            now = now or datetime.now(timezone.utc)
             tags = split_group_tags(iq.request.group_by_tag)
 
-            def _run():
-                # one statement per result series: list FROM and regex
-                # FROM (expanded against the catalog, a directory
-                # listing) run one per measurement; FROM (subquery) is
-                # one composed plan, its series named by the innermost
-                # measurement (InfluxDB's behavior)
-                if iq.subquery is not None:
-                    inner = iq.subquery
-                    while inner.subquery is not None:
-                        inner = inner.subquery
-                    statements = [(inner.measurement, iq)]
-                else:
-                    if iq.measurement_regex is not None:
-                        pat = re.compile(iq.measurement_regex)
-                        names = [m for m in self.warehouse.measurements() if pat.search(m)]
-                    else:
-                        names = iq.measurement_list or [iq.measurement]
-                    statements = [
-                        (n, _dc_replace(iq, request=_dc_replace(iq.request, measurement_name=n)))
-                        for n in names
-                    ]
+            def _series(planner, statements):
                 series = []
                 for name, one in statements:
-                    df = apply_result_shape(plan_tree(self.planner, one, now=now), iq)
+                    df = apply_result_shape(plan_tree(planner, one, now=now), iq)
                     if iq.alias and iq.alias != "value" and "value" in df.columns:
                         df = df.withColumnRenamed("value", iq.alias)
                     series.extend(to_series_shape(df, name, tags))
                 return series
 
-            return self._answer(_run)
+            # one statement per result series: FROM (subquery) is one
+            # composed plan, its series named by the innermost
+            # measurement (InfluxDB's behavior), and is never cached;
+            # list FROM and regex FROM (expanded against the catalog, a
+            # directory listing) run one per measurement
+            if iq.subquery is not None:
+                inner = iq.subquery
+                while inner.subquery is not None:
+                    inner = inner.subquery
+                return self._answer(lambda: _series(self.planner, [(inner.measurement, iq)]))
+            try:
+                if iq.measurement_regex is not None:
+                    pat = re.compile(iq.measurement_regex)
+                    names = [m for m in self.warehouse.measurements() if pat.search(m)]
+                else:
+                    names = iq.measurement_list or [iq.measurement]
+            except Exception as e:  # noqa: BLE001 — error envelope is the contract
+                return _report(error=str(e))
+            statements = [
+                (n, _dc_replace(iq, request=_dc_replace(iq.request, measurement_name=n)))
+                for n in names
+            ]
+            return self._answer_cached(
+                ("run_query", query),
+                lambda: [self._routed(n, one.request, now) for n, one in statements],
+                lambda reads: _series(self._planner(reads), statements),
+            )
         try:
             if iq is not None:
                 # SELECT ... INTO: the one-off twin of the CQ template
@@ -291,6 +369,41 @@ class EcollectorApi:
             return _report(self.warehouse.with_read_retry(build_and_run))
         except Exception as e:  # noqa: BLE001 — error envelope is the contract
             return _report(error=str(e))
+
+    def _answer_cached(self, text: tuple, statements, build_and_run) -> dict:
+        """:meth:`_answer` through :attr:`series_cache`. ``statements()``
+        returns one ``(label, resolution, tier read)`` per series
+        statement (:meth:`_routed`); with ``text`` and each tier's
+        listing digest it is the key. On a miss ``build_and_run(reads)``
+        plans through ``self._planner(reads)``. The answer is stored
+        only if every read was one the key names and every listing in
+        the key is unchanged after the run, so a swap that lands between
+        key and store leaves nothing stored. Errors are never stored."""
+
+        def listed(stmts):
+            return tuple(
+                (label, res, listing_digest(self.warehouse.tier_listing(tier)))
+                for label, res, tier in stmts
+            )
+
+        try:
+            stmts = statements()
+            key = (text, listed(stmts))
+        except Exception as e:  # noqa: BLE001 — error envelope is the contract
+            return _report(error=str(e))
+        series = self.series_cache.get(key)
+        if series is not None:
+            return _report(series)
+        reads: list = []
+        report = self._answer(lambda: build_and_run(reads))
+        named = {(tier, res.lo, res.hi) for _, res, tier in stmts}
+        if (
+            report["val"].get("error") is None
+            and {r[:3] for r in reads} <= named
+            and listed(stmts) == key[1]
+        ):
+            self.series_cache.put(key, report["val"]["Results"][0]["Series"])
+        return report
 
     def _write_into(self, df, iq, tags: list[str]) -> int:
         """Distributed write for ``SELECT ... INTO``: the planned result
@@ -343,12 +456,15 @@ class EcollectorApi:
 
     # -- Q2: cmd.tsdb.get_data_points -------------------------------------
     def get_data_points(self, req: DataPointsRequest, now: datetime | None = None) -> dict:
-        return self._answer(
-            lambda: to_series_shape(
-                self.planner.plan(req, now=now),
+        now = now or datetime.now(timezone.utc)
+        return self._answer_cached(
+            ("get_data_points", repr(req)),
+            lambda: [self._routed(req.measurement_name, req, now)],
+            lambda reads: to_series_shape(
+                self._planner(reads).plan(req, now=now),
                 req.measurement_name,
                 split_group_tags(req.group_by_tag),
-            )
+            ),
         )
 
     # -- cmd.tsdb.get_energy_data_points (A17) -----------------------------
@@ -377,23 +493,23 @@ class EcollectorApi:
             fill_type="null",
         )
 
-        def _run():
-            if not (from_time and to_time):
-                raise ValueError("the energy rollup needs both from_time and to_time")
-            scans = []
+        if not (from_time and to_time):
+            return _report(error="the energy rollup needs both from_time and to_time")
+        now = now or datetime.now(timezone.utc)
 
-            def gen_year(tier, from_epoch, to_epoch):
-                scans.append(self.warehouse.read_tier("gen_year", from_epoch, to_epoch))
-                return scans[0] if scans[0] is not None else self._no_points()
-
-            df = QueryPlanner(gen_year).plan(req, now=now)
+        def _run(reads):
+            df = self._planner(reads, pin="gen_year").plan(req, now=now)
             # an empty gen_year answers with no series (an ungrouped
             # FILL(null) would otherwise spine all-null buckets)
-            if scans[0] is None:
+            if not reads[-1][3]:
                 return []
             return to_series_shape(df, req.measurement_name, split_group_tags(group_by_tag))
 
-        return self._answer(_run)
+        return self._answer_cached(
+            ("get_energy_data_points", repr(req)),
+            lambda: [(req.measurement_name, self.planner.resolve(req, now), "gen_year")],
+            _run,
+        )
 
     # -- cmd.tsdb.write_data_points ----------------------------------------
     def write_data_points(self, points: list[dict], now: datetime | None = None) -> dict:

@@ -793,7 +793,7 @@ def influxql_multi_field_agg(spark, sf_dir):
     twin rows via a projected conditional column inside ONE plan_multi
     groupBy (no join, no per-field re-plan); single-selector aggregates,
     transform wraps and selector arithmetic over mangled fields ride the
-    ordinary plan() path through _prepare's pushed dir predicate. The
+    ordinary plan() path through its pushed dir predicate. The
     gate reuses influxql_multi_field's synthesized twin corpus."""
     from ecollector_spark.influxql import parse_influxql, plan_tree
     from ecollector_spark.query import QueryPlanner

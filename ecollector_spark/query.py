@@ -512,6 +512,26 @@ def split_group_tags(group_by_tag: str) -> list[str]:
     return [t.strip().strip('"') for t in group_by_tag.split(",") if t.strip()]
 
 
+@dataclass(frozen=True)
+class Resolution:
+    """Every ``now``-derived input of a plan (:meth:`QueryPlanner.resolve`).
+    Two resolutions of one request that compare equal build the same
+    plan: the invariant ``EcollectorApi``'s series cache keys on."""
+
+    tier: str
+    #: inclusive epoch-second row bounds (None = open)
+    lo: int | None
+    hi: int | None
+    #: the fill spine's range, epoch seconds
+    from_epoch: int
+    to_epoch: int
+    #: the defaulted function and fill type
+    data_function: str
+    fill_type: str
+    #: the defaulted group interval in seconds (0 = no buckets)
+    step: int
+
+
 class QueryPlanner:
     """Compiles DataPointsRequest -> DataFrame.
 
@@ -537,11 +557,10 @@ class QueryPlanner:
             self._reader_takes_bounds = False
 
     # -- planning ----------------------------------------------------------
-    def _prepare(self, req: DataPointsRequest, now: datetime | None):
-        """Shared front half of every plan: defaults, time-range and tier
-        resolution, the (optionally bounds-pruned) scan, and the time/tag
-        predicates. Returns the filtered frame plus the resolved context
-        consumed by the aggregation stage."""
+    def resolve(self, req: DataPointsRequest, now: datetime | None = None) -> Resolution:
+        """Every ``now``-derived input of the plan of ``req``: defaults,
+        time range and tier. Pure (no I/O, no Spark); the frame build
+        (:meth:`_frame`) reads ``now`` only through the result."""
         now = now or datetime.now(timezone.utc)
         now_epoch = int(now.timestamp())
 
@@ -609,20 +628,35 @@ class QueryPlanner:
             lo = from_epoch + 1
         if rel_to_epoch is not None:
             hi = rel_to_epoch - 1 if hi is None else min(hi, rel_to_epoch - 1)
+        return Resolution(
+            choice.tier,
+            lo,
+            hi,
+            from_epoch,
+            to_epoch,
+            data_function,
+            fill_type,
+            _parse_group_interval(group_by_time),
+        )
+
+    def _frame(self, req: DataPointsRequest, res: Resolution):
+        """Shared front half of every plan, built from the request and
+        its :meth:`resolve` result: the (optionally bounds-pruned) scan
+        and the time/tag predicates. Returns the filtered frame plus the
+        context consumed by the aggregation stage."""
         if self._reader_takes_bounds:
             # a bounds-aware reader gets exactly the row bounds, so its
             # ts conjuncts and the planner's fold into one per side
-            df = self.tier_reader(choice.tier, lo, hi)
+            df = self.tier_reader(res.tier, res.lo, res.hi)
         else:
-            df = self.tier_reader(choice.tier)
+            df = self.tier_reader(res.tier)
         df = df.where(F.col("measurement") == req.measurement_name)
-        ts_epoch = F.unix_timestamp("ts")
         # the sargable ts literal is the row-exact bound (and is pushed to the scan)
         ts_lit = lambda e: F.timestamp_seconds(F.lit(int(e)))  # noqa: E731
-        if lo is not None:
-            df = df.where(F.col("ts") >= ts_lit(lo))
-        if hi is not None:
-            df = df.where(F.col("ts") < ts_lit(hi + 1))
+        if res.lo is not None:
+            df = df.where(F.col("ts") >= ts_lit(res.lo))
+        if res.hi is not None:
+            df = df.where(F.col("ts") < ts_lit(res.hi + 1))
 
         # tag predicates (influxdb_v1.go:145-156; list bug fixed to IN)
         flt = req.filters
@@ -659,27 +693,24 @@ class QueryPlanner:
                     raise ValueError(f"unsupported field predicate op: {op!r}")
                 df = df.where(ops[op](F.lit(float(num))))
 
-        step = _parse_group_interval(group_by_time)
         bucket_off = (
             _parse_signed_duration(req.group_by_offset) if req.group_by_offset else 0
         )
         return df, {
-            "ts_epoch": ts_epoch,
-            "from_epoch": from_epoch,
-            "to_epoch": to_epoch,
+            "res": res,
+            "ts_epoch": F.unix_timestamp("ts"),
             "value_col": value_col,
             "tag_cols": split_group_tags(req.group_by_tag),
-            "step": step,
             "bucket_off": bucket_off,
             # tz('<zone>') (public InfluxQL) aligns buckets to the zone's
             # wall clock, DST-exact (timeutil.bucketing). Raw (unbucketed)
             # shapes are unaffected: tz only moves bucket boundaries, and
             # the wire format is epoch seconds either way.
             "bk": (
-                bucketing(req.tz, step, bucket_off, from_epoch, to_epoch) if step else None
+                bucketing(req.tz, res.step, bucket_off, res.from_epoch, res.to_epoch)
+                if res.step
+                else None
             ),
-            "data_function": data_function,
-            "fill_type": fill_type,
         }
 
     def plan(
@@ -696,7 +727,7 @@ class QueryPlanner:
         expression's output; ADVICE r6). The InfluxQL selector-arithmetic
         path rides this hook."""
         _post = post_agg if post_agg is not None else (lambda d: d)
-        df, ctx = self._prepare(req, now)
+        df, ctx = self._frame(req, self.resolve(req, now))
         # dir-mangled field (r9): selecting/aggregating "e_import" means
         # the import-direction twin rows of the measurement — ONE pushed
         # dir predicate, then the query is an ordinary single-field plan
@@ -705,9 +736,9 @@ class QueryPlanner:
         mangled = _mangled_dir(req.field_name)
         if mangled is not None:
             df = df.where(F.col("dir") == mangled)
-        ts_epoch = ctx["ts_epoch"]
+        res, ts_epoch = ctx["res"], ctx["ts_epoch"]
         value_col, tag_cols = ctx["value_col"], ctx["tag_cols"]
-        step, data_function = ctx["step"], ctx["data_function"]
+        step, data_function = res.step, res.data_function
 
         # selector shapes (influxdb_v1.go:159-188). NB the reference's
         # tag-only shape selects the RAW field (series organized by tag,
@@ -737,8 +768,8 @@ class QueryPlanner:
                         tag_cols,
                         ts_epoch,
                         value_col,
-                        ctx["from_epoch"],
-                        ctx["to_epoch"],
+                        res.from_epoch,
+                        res.to_epoch,
                     )
                 )
             value = F.col(value_col)
@@ -771,7 +802,7 @@ class QueryPlanner:
                 tag_cols,
                 value_col,
                 ts_epoch,
-                ctx["from_epoch"],
+                res.from_epoch,
             ))
         if data_function == "mode":
             def grouped(keys):
@@ -827,22 +858,22 @@ class QueryPlanner:
         on the aggregate before gap fill (``fill``: spine the buckets
         per the request's fill type); the result is the wire shape
         (epoch-second ``time``, tags, double ``names``) sorted by time."""
-        bk, tag_cols = ctx["bk"], ctx["tag_cols"]
+        res, bk, tag_cols = ctx["res"], ctx["bk"], ctx["tag_cols"]
         if bk is not None:
             agg = grouped([bk.key.alias("time")])
         else:
             agg = grouped([]).select(
-                F.lit(ctx["from_epoch"]).cast("long").alias("time"), *tag_cols, *names
+                F.lit(res.from_epoch).cast("long").alias("time"), *tag_cols, *names
             )
         if shape is not None:
             agg = shape(agg)
         if bk is not None and fill:
             agg = gap_fill(
                 agg,
-                ctx["fill_type"],
+                res.fill_type,
                 bk.fill_from,
                 bk.fill_to,
-                ctx["step"],
+                res.step,
                 tag_cols,
                 offset_seconds=ctx["bucket_off"],
                 spine=bk.spine,
@@ -902,7 +933,7 @@ class QueryPlanner:
                 raise ValueError(f"duplicate output column {name!r}")
             seen.add(name)
             mapped.append((name, d))
-        df, ctx = self._prepare(req, now)
+        df, ctx = self._frame(req, self.resolve(req, now))
         ts_epoch = ctx["ts_epoch"]
         value_col = "value_f"
         df = df.where(F.col("dir").isin(sorted({d for _, d in mapped})))
@@ -943,7 +974,7 @@ class QueryPlanner:
         else."""
         from ecollector_spark.schema import DATAPOINT_TAG_COLUMNS
 
-        df, ctx = self._prepare(req, now)
+        df, ctx = self._frame(req, self.resolve(req, now))
         keys = (
             []
             if fields_only
@@ -979,7 +1010,7 @@ class QueryPlanner:
         # request handed to routing carries a non-upgrading function.
         if not all(s.data_function == "mean" for s in selectors):
             req = _dc_replace(req, data_function="last")
-        df, ctx = self._prepare(req, now)
+        df, ctx = self._frame(req, self.resolve(req, now))
 
         # dir-mangled selector fields (r9): mean("e_import"),
         # mean("e_export") side by side — each aggregates ITS direction's
@@ -1030,5 +1061,5 @@ class QueryPlanner:
             lambda keys: df.groupBy(*keys, *ctx["tag_cols"]).agg(*aggs),
             ctx,
             names,
-            ctx["fill_type"] in ("null", "0"),
+            ctx["res"].fill_type in ("null", "0"),
         )

@@ -97,6 +97,15 @@ def get_spark(
         # off. Pure driver-side overhead, scale-independent; error
         # messages lose only the Python call-site decoration.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache (static conf, so it is set here): the
+        # default keeps 100 classes, and a query-serving mix overflows
+        # it, so a repeated request recompiles its classes (Janino, 8-12
+        # ms each). One whole `perfbench` `query` run, set-up and ingest
+        # included, generates 311 distinct classes. With room for 2,000,
+        # a repeat compiles nothing and a new request compiles only the
+        # classes its inlined literals make unique (1-2). Each entry is
+        # a small compiled class on the driver heap.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # the driver's events.parquet uses TIMESTAMP(NANOS); read as long
         # nanos and convert explicitly (Spark has no nanos timestamp)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

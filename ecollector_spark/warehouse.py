@@ -33,6 +33,7 @@ partition drop — the layout constant keeps that a one-line change.
 from __future__ import annotations
 
 import functools
+import hashlib
 import operator
 import os
 import shutil
@@ -110,6 +111,19 @@ def _parquet_listing(path: str) -> frozenset:
                     continue
                 out.add((p, st.st_size, st.st_mtime_ns))
     return frozenset(out)
+
+
+@functools.lru_cache(maxsize=len(TIERS))
+def listing_digest(listing: frozenset) -> str:
+    """SHA-256 of a tier listing (:meth:`Warehouse.tier_listing`): a key
+    that names a listing without holding it. Memoized for about one
+    listing per tier, which bounds the listings the memo keeps alive;
+    an unchanged tier returns the same listing object, so a repeat
+    costs one identity lookup."""
+    h = hashlib.sha256()
+    for path, size, mtime in sorted(listing):
+        h.update(f"{path}\0{size}\0{mtime}\n".encode())
+    return h.hexdigest()
 
 
 class Warehouse:
@@ -275,22 +289,19 @@ class Warehouse:
         row predicate itself cannot prune directories — the day bounds
         can), then the row-exact ``ts`` filter applies as usual.
 
-        The tier's scan is reused while its parquet files are unchanged
-        (same paths, sizes and mtimes): building one costs a file listing
-        plus relation analysis on the driver, every query. Any append,
-        publish or removal changes the listing, and the scan is rebuilt."""
-        path = self.tier_path(tier)
-        publish.recover(path)
-        publish.recover_within(path)
-        listing = _parquet_listing(path)
+        The tier's scan is reused while :meth:`tier_listing` reports its
+        files unchanged: building one costs relation analysis on the
+        driver, every query. Any append, publish or removal changes the
+        listing, and the scan is rebuilt."""
+        listing = self.tier_listing(tier)
         if not listing:
             return None
         cached = self._tier_scans.get(tier)
-        if cached is None or cached[0] != listing:
+        if cached is None or cached[0] is not listing:
             # read via the root with basePath so partition columns
             # survive, and pin the tier -> Catalyst prunes to the one
             # subdirectory
-            cached = (listing, self._scan(path, base_path=self.root))
+            cached = (listing, self._scan(self.tier_path(tier), base_path=self.root))
             self._tier_scans[tier] = cached
         df = cached[1]
         # r13 (guide §6): sargable timestamp-literal forms instead of
@@ -317,6 +328,19 @@ class Warehouse:
         if self.date_partition:
             df = df.drop("dt")
         return df.withColumn("tier", F.lit(tier))
+
+    def tier_listing(self, tier: str) -> frozenset:
+        """The one definition of "the tier is unchanged": (path, size,
+        mtime_ns) of every parquet file in the tier, read after healing
+        any interrupted publish. While the tier is unchanged this is the
+        very listing its cached scan was built from, so :meth:`read_tier`
+        compares by identity and ``listing_digest`` memoizes on it."""
+        path = self.tier_path(tier)
+        publish.recover(path)
+        publish.recover_within(path)
+        listing = _parquet_listing(path)
+        cached = self._tier_scans.get(tier)
+        return cached[0] if cached is not None and cached[0] == listing else listing
 
     def tier_reader(self):
         """Adapter for QueryPlanner(tier_reader=...)."""
@@ -428,12 +452,13 @@ class Warehouse:
         publish.write_atomic(os.path.join(tp, "_hwm"), str(int(epoch_s)))
 
     # -- catalog (§2.10) ---------------------------------------------------
-    def measurements(self) -> list[str]:
+    def measurements(self, tier: str | None = None) -> list[str]:
         """SHOW MEASUREMENTS (influxdb_v1.go:376-393): distinct measurement
-        partition values across tiers — a directory listing, no scan."""
+        partition values across tiers (or in one ``tier``) — a directory
+        listing, no scan."""
         out: set[str] = set()
-        for tier in TIERS:
-            tp = self.tier_path(tier)
+        for t in (tier,) if tier is not None else TIERS:
+            tp = self.tier_path(t)
             if not os.path.isdir(tp):
                 continue
             publish.recover_within(tp)
@@ -506,14 +531,7 @@ class Warehouse:
             # which the listing below would skip or take for a measurement
             publish.recover(tp)
             publish.recover_within(tp)
-            if measurement is not None:
-                names = [measurement]
-            else:
-                names = (
-                    [d.split("=", 1)[1] for d in os.listdir(tp) if d.startswith("measurement=")]
-                    if os.path.isdir(tp)
-                    else []
-                )
+            names = [measurement] if measurement is not None else self.measurements(tier)
             for name in names:
                 mdir = os.path.join(tp, f"measurement={name}")
                 if not self._has_data(mdir):
@@ -582,19 +600,27 @@ class Warehouse:
 
     def compact(self, tier: str, target_files_per_measurement: int = 1) -> bool:
         """Small-file compaction: streaming micro-batches leave one file
-        per trigger per partition; rewrite the tier with ``repartition``
-        so each measurement partition holds ~target file count. Run
-        alongside the TTL job. (At 100 TB: compact only partitions whose
-        file count exceeds a threshold, tracked from the file index.)"""
+        per trigger per partition. The tier is rewritten with
+        ``target_files_per_measurement`` files per measurement (fewer
+        only when it has fewer distinct (series_id, ts) keys): each
+        measurement is range-partitioned on (series_id, ts) on its own,
+        so every file holds one contiguous key range of one measurement,
+        sorted by :meth:`_rewrite` — tight rowgroup stats for series and
+        time predicates. In the dated layout each range file splits by
+        day. Run alongside the TTL job. (At 100 TB: compact only
+        partitions whose file count exceeds a threshold, tracked from
+        the file index.)"""
         df = self.read_tier(tier)
         if df is None:
             return False
-        self._rewrite(
-            self._stamp_dt(df.drop("tier")).repartition(
-                target_files_per_measurement, "measurement"
-            ),
-            tier,
-        )
+        df = self._stamp_dt(df.drop("tier"))
+        parts = [
+            df.where(F.col("measurement") == m).repartitionByRange(
+                target_files_per_measurement, "series_id", "ts"
+            )
+            for m in self.measurements(tier)
+        ]
+        self._rewrite(functools.reduce(DataFrame.unionByName, parts), tier)
         return True
 
     # -- retention TTL (the RP enforcement job) ----------------------------

@@ -2309,7 +2309,7 @@ class TestMultiFieldArithmetic:
 class TestMultiFieldAggregates:
     """Aggregates over dir-mangled field names (r9): each selector reads
     ITS direction's twin rows — multi-selector via projected conditional
-    columns in one plan_multi groupBy, single-selector via _prepare's
+    columns in one plan_multi groupBy, single-selector via plan()'s
     pushed dir predicate (so transforms/fills/arith compose unchanged)."""
 
     NOW = None

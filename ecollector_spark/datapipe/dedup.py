@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from ecollector_spark.datapipe.text import floor6_sql, shingles_expr, tokens_expr
 from ecollector_spark.functions import barriers
+from ecollector_spark.session import spread_small_scan
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -43,12 +44,17 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _doc_shingles(docs: DataFrame, text_col: str, k: int, materialize: bool = False) -> DataFrame:
+    # An input with fewer scan splits than the cluster has cores (one
+    # parquet row group is one split) is spread over every core first,
+    # so tokenizing, shingling and hashing do not run as one task; at
+    # real scale the helper returns the input unchanged (see
+    # spread_small_scan).
     # Tokenize in a separate projection: shingles_expr references the
     # token array k+2 times, and inlining the tokenizer into each
     # reference would re-run the regex split per shingle per element
     # (~150x per doc). A multi-referenced non-cheap alias survives
     # CollapseProject, so tokens are computed once per row.
-    toks = docs.select("doc_id", tokens_expr(text_col).alias("_toks"))
+    toks = spread_small_scan(docs).select("doc_id", tokens_expr(text_col).alias("_toks"))
     sh = toks.select("doc_id", F.explode(shingles_expr("_toks", k)).alias("shingle"))
     if materialize:
         # The shingle table feeds the signature aggregate, both sides of
@@ -213,45 +219,43 @@ def minhash_signatures(
 
 
 def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
-    # The num_hashes "independent" hash functions are disjoint 4-hex-char
-    # (16-bit) slices of ONE md5 per shingle — md5 bits are independent,
-    # so each slice is a valid permutation hash, and hashing cost drops
-    # num_hashes-fold (measured ~40% off the whole LSH pipeline at
-    # sf0.1). 16-bit min ties only blunt candidate *generation*;
-    # membership is decided by exact-Jaccard verification afterwards.
-    # md5 yields 32 hex chars = 8 disjoint 4-char slices; beyond that,
-    # derive extra independent hashes from seeded re-hashes (md5(seed|shingle))
-    # rather than silently slicing past the digest (substring past position
-    # 32 returns '' -> constant signatures -> universal LSH collisions).
-    # Each digest is PROJECTED once per shingle row below the aggregate
-    # (r13, guide §2.3/§1): the old shape put substring(md5(shingle))
-    # inside every min(), so the non-codegen aggregate evaluated md5
-    # 8x per row. The hex->int conversion moved INSIDE the min (r13):
-    # min over the int64 of a fixed-width lowercase-hex slice equals
-    # conv(min(hex)) (the conversion is an order-preserving bijection),
-    # and a BIGINT min buffer makes the aggregate a codegen'd
-    # HashAggregate — the string-buffered min forced SortAggregate,
-    # which sorted the full exploded shingle table by doc_id before
-    # aggregating (plan-verified: Sort+SortAggregate -> HashAggregate,
-    # same mh_i values). Built as ONE SQL string per aggregate (r12
-    # optimization, guide §5).
+    # The num_hashes hash functions are disjoint 16-bit slices of md5
+    # digests: mh_i is slice i % 8 of digest i // 8 (digest 0 is
+    # md5(shingle), digest d is md5('d|' || shingle)), read as an
+    # unsigned value 0..65535. md5 bits are independent, so each slice
+    # is a valid permutation hash; 16-bit min ties only blunt candidate
+    # generation, and exact-Jaccard verification decides membership.
+    # Min over the slice value equals the lexicographic min over its 4
+    # hex chars, so the longs keep the collision structure of the hex
+    # form while shuffling 8-byte fixed-width values.
+    # Kernel: each digest is projected once per shingle row, then parsed
+    # once per half as a signed 64-bit word (conv to base -10 gives the
+    # two's-complement value when the top bit is set). Slice i is
+    # shiftrightunsigned(word, 48 - 16 * (i % 4)) & 65535 inside its
+    # min(). Digests and words are each referenced more than once above
+    # their projection, so CollapseProject keeps both layers, and the
+    # BIGINT min buffers keep a codegen'd HashAggregate with a map-side
+    # partial_min. Built as one SQL string per column.
     n_digests = -(-num_hashes // 8)
 
     def _digest_sql(d: int) -> str:
         return "md5(shingle)" if d == 0 else f"md5(concat('{d}|', shingle))"
 
-    hashed = sh.selectExpr(
-        "doc_id", *[f"{_digest_sql(d)} AS _h{d}" for d in range(n_digests)]
-    )
-
-    def _hash_sql(i: int) -> str:
-        digest, slot = divmod(i, 8)
+    def _word_sql(w: int) -> str:
+        digest, half = divmod(w, 2)
         return (
-            f"min(CAST(conv(substring(_h{digest}, {4 * slot + 1}, 4), 16, 10)"
-            f" AS BIGINT)) AS mh_{i}"
+            f"CAST(conv(substring(_h{digest}, {1 + 16 * half}, 16), 16, -10)"
+            f" AS BIGINT) AS _w{w}"
         )
 
-    return hashed.groupBy("doc_id").agg(
+    def _hash_sql(i: int) -> str:
+        word, pos = divmod(i, 4)
+        return f"min(shiftrightunsigned(_w{word}, {48 - 16 * pos}) & 65535) AS mh_{i}"
+
+    words = sh.selectExpr(
+        "doc_id", *[f"{_digest_sql(d)} AS _h{d}" for d in range(n_digests)]
+    ).selectExpr("doc_id", *[_word_sql(w) for w in range(-(-num_hashes // 4))])
+    return words.groupBy("doc_id").agg(
         F.expr(_hash_sql(0)), *[F.expr(_hash_sql(i)) for i in range(1, num_hashes)]
     )
 
@@ -329,13 +333,18 @@ def minhash_lsh_pairs(
     if verify != "hybrid":
         raise ValueError(f"unknown verify mode {verify!r}")
     # hybrid: the signature table is PER-DOC and fixed-width
-    # (num_hashes longs) — small enough to checkpoint lazily, unlike
-    # the pair table whose materialization GC-killed the 1000x driver.
-    # Every band-side branch below (pair join's two sides, the
-    # hot-bucket aggregate, the candidate-doc semi-join) then replays a
-    # cheap explode over the cached signatures instead of re-running
-    # the shingle aggregate.
-    sig = barriers.materialize(_signatures_from_shingles(sh, num_hashes))
+    # (num_hashes longs) — small enough to checkpoint, unlike the pair
+    # table whose materialization GC-killed the 1000x driver. Every
+    # band-side branch below (pair join's two sides, the hot-bucket
+    # aggregate, the candidate-doc semi-join) then replays a cheap
+    # explode over the cached signatures instead of re-running the
+    # shingle aggregate. The checkpoint is eager because AQE schedules
+    # those branches as concurrent stages: over a lazy one, the first
+    # job to end cuts the lineage while the other stages still carry
+    # the signature plan's SQL metrics, and once a JVM GC drops them
+    # each such task logs "attempted to access non-existent
+    # accumulator" on completion.
+    sig = barriers.snapshot(_signatures_from_shingles(sh, num_hashes))
     bl = _bands_long(sig, num_hashes, bands)
     cand = _pairs_from_bands(bl)
     # docs that can appear in any pair = members of a >=2-doc bucket —

@@ -57,6 +57,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from dataclasses import replace as _dc_replace
 
 from ecollector_spark import tiers
 from ecollector_spark.query import DataPointsFilter, DataPointsRequest, Selector
@@ -1270,7 +1271,20 @@ def plan_tree(planner, iq: InfluxQLQuery, now=None):
         # apply before the outer statement sees its rows
         inner = apply_result_shape(plan_tree(planner, iq.subquery, now=now), iq.subquery)
         req = _align_inherited_range(iq, now)
-        tags = split_group_tags(iq.subquery.request.group_by_tag)
+        # InfluxDB names the inner column by its AS alias, else by its
+        # outermost function ("mean"); the outer statement may read it
+        # by that name as well as by the canonical "value"
+        inner_req = iq.subquery.request
+        named = iq.subquery.alias or inner_req.transform_function or inner_req.data_function
+        if named and named != "value":
+            if req.field_name == named:
+                req = _dc_replace(req, field_name="value")
+            if iq.selectors is not None:
+                iq = _dc_replace(iq, selectors=[
+                    _dc_replace(s, field="value") if s.field == named else s
+                    for s in iq.selectors
+                ])
+        tags = split_group_tags(inner_req.group_by_tag)
         src = inner.select(
             F.lit(req.measurement_name).alias("measurement"),
             F.timestamp_seconds(F.col("time")).alias("ts"),
@@ -1312,7 +1326,6 @@ def _align_inherited_range(iq: InfluxQLQuery, now):
     an absolute range whose lower edge aligns down to the inner bucket
     grid (inclusive >=/<= branch). Explicit outer WHERE time is the
     user's own predicate and passes through untouched."""
-    from dataclasses import replace as _dc_replace
     from datetime import datetime, timezone
 
     from ecollector_spark.functions.timeutil import parse_relative_duration

@@ -230,7 +230,11 @@ def spread_small_scan(
     expression-heavy operator downstream runs on one core while the rest
     of the cluster idles. When the planned scan partition count is below
     ``sparkContext.defaultParallelism``, round-robin repartition to that
-    width; otherwise return the input unchanged.
+    width; otherwise return the input unchanged. Without ``input_bytes``
+    or ``input_path`` the count comes from the input's physical plan,
+    and an input whose plan has an exchange (it was shuffled already;
+    probing it would run the upstream stage) is returned unchanged. The
+    decision never runs a Spark job.
 
     Scale posture (optimization guide §2.4): at real scale inputs have
     hundreds-to-millions of splits, the branch never fires, and no
@@ -262,11 +266,25 @@ def spread_small_scan(
         if _estimated_splits(df.sparkSession, input_bytes, w, n_files) >= w:
             return df
         return df.repartition(w)
-    # .rdd on a scan+project plan is driver-side planning only (no jobs:
-    # nothing adaptive executes without an exchange upstream)
-    if df.rdd.getNumPartitions() >= w:
+    # No layout given: read the split count from the physical plan, but
+    # only when that is planning alone. Under AQE a plan with an exchange
+    # is an AdaptiveSparkPlanExec, whose execute() runs the upstream
+    # shuffle stages; such an input already went through a shuffle, so
+    # it is returned as it is.
+    plan = df._jdf.queryExecution().executedPlan()
+    if _runs_jobs_to_plan(plan) or plan.execute().getNumPartitions() >= w:
         return df
     return df.repartition(w)
+
+
+def _runs_jobs_to_plan(plan) -> bool:
+    """Whether executing ``plan`` (a JVM SparkPlan) down to its RDD runs
+    Spark jobs: an adaptive plan or an exchange anywhere in the tree."""
+    name = plan.nodeName()
+    if name.startswith("AdaptiveSparkPlan") or "Exchange" in name:
+        return True
+    children = plan.children()
+    return any(_runs_jobs_to_plan(children.apply(i)) for i in range(children.size()))
 
 
 #: Inferred parquet schemas memoized per live SparkContext (weak key: a

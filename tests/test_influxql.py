@@ -379,6 +379,28 @@ class TestPlanTreeSemantics:
         # only the newest 2 inner buckets survive: 5 + 6
         assert vals == {1704067200: 11.0}
 
+    def test_subquery_outer_field_names_inner_column(self, spark):
+        """The outer statement reads the inner column by InfluxDB's name
+        for it (the inner function, or its AS alias) and gets the same
+        rows as through the canonical "value"."""
+        from ecollector_spark.influxql import parse_influxql, plan_tree
+
+        planner = self._planner(spark)
+
+        def rows(outer, inner_sel='mean("value")'):
+            iq = parse_influxql(
+                f"SELECT {outer} FROM (SELECT {inner_sel} FROM \"m1\" "
+                "WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-01T03:59:59Z' "
+                "GROUP BY time(30m)) GROUP BY time(1h)"
+            )
+            return sorted(map(tuple, plan_tree(planner, iq, now=self.NOW).collect()))
+
+        want = rows('max("value")')
+        assert len(want) == 4 and any(r[1] is not None for r in want)
+        assert rows('max("mean")') == want
+        assert rows('max("m")', 'mean("value") AS m') == want
+        assert rows('max("mean"), min("mean")') == rows('max("value"), min("value")')
+
 
 class TestRunQuery:
     def test_doc_mean_query_end_to_end(self, spark, tmp_path):

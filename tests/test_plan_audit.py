@@ -117,3 +117,29 @@ def test_fence_checks_catch_a_reverted_fence(spark, monkeypatch):
     monkeypatch.setattr(transform, "_PREPARED", weakref.WeakKeyDictionary())
     reverted = failures()
     assert all(reverted.values()), reverted
+
+
+def test_signature_parse_check_catches_the_eight_parse_kernel(spark, monkeypatch):
+    """The `_raw_minhash_candidates` check allows 2 hex parses per md5
+    digest: it passes on the two-word kernel and fails on a kernel that
+    parses every 16-bit slice on its own."""
+    sys.path.insert(0, REPO)
+    from pyspark.sql import functions as F
+
+    from ecollector_spark.datapipe import dedup
+    from tools import explain_audit as ea
+
+    def eight_parse(sh, num_hashes):
+        return sh.selectExpr("doc_id", "md5(shingle) AS _h0").groupBy("doc_id").agg(*[
+            F.expr(f"min(CAST(conv(substring(_h0, {4 * i + 1}, 4), 16, 10) AS BIGINT)) AS mh_{i}")
+            for i in range(num_hashes)
+        ])
+
+    def failures():
+        df = ea.audit_builders()["_raw_minhash_candidates"](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return ea.pattern_failures(plan, ea.CHECKS["_raw_minhash_candidates"])
+
+    assert failures() == []
+    monkeypatch.setattr(dedup, "_signatures_from_shingles", eight_parse)
+    assert failures() == ["plan contains forbidden /(?:conv\\([^\\n]*){3}/"]

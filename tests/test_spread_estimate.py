@@ -1,6 +1,7 @@
-"""spread_small_scan's driver-side split estimate (r12): must take the
-same branch as the exact .rdd probe on single-file inputs, and must
-never fire at real scale."""
+"""spread_small_scan: the driver-side split estimate must take the same
+branch as the exact .rdd probe on single-file inputs and never fire at
+real scale; the plan probe runs no Spark job; and the shingle consumers
+spread a one-split shard over every core."""
 
 import os
 
@@ -97,3 +98,98 @@ def test_min_partition_num_ignores_non_positive():
     assert _min_partition_num(jconf(-1, "6"), 4) == 6
     assert _min_partition_num(jconf(None, "0"), 4) == 4
     assert _min_partition_num(jconf(5, "6"), 4) == 5
+
+
+def _spread_jobs(spark, df, group):
+    """(spread_small_scan(df), Spark jobs it ran) under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = spread_small_scan(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spread_probe_runs_no_jobs(spark, sf_dir):
+    """Without a layout the helper reads the split count from the physical
+    plan only when that is planning alone: a plain scan is probed and
+    spread, and an input with an exchange (whose adaptive plan would run
+    its shuffle stage to be probed) comes back as it is, all with 0 jobs."""
+    docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).select("doc_id", "text")
+    spread, jobs = _spread_jobs(spark, docs, "spread-scan")
+    assert jobs == 0 and spread is not docs
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    for name, df in (
+        ("spread-groupby", docs.groupBy("doc_id").count()),
+        ("spread-union-distinct", docs.union(docs).distinct()),
+    ):
+        out, jobs = _spread_jobs(spark, df, name)
+        assert jobs == 0, name
+        assert out is df, name
+
+
+def test_spread_keeps_wide_inputs(spark):
+    w = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 1000, 1, numPartitions=w)
+    assert spread_small_scan(wide) is wide
+    shuffled = spark.range(0, 1000, 1, numPartitions=1).repartition(1)
+    assert spread_small_scan(shuffled) is shuffled
+
+
+_SIGNATURE_STAGE_PROBE = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from ecollector_spark.datapipe import dedup
+from ecollector_spark.session import get_spark
+
+spark = get_spark("spread-probe", master="local[2]")
+sc = spark.sparkContext
+docs = spark.read.parquet(sys.argv[2])
+out = {}
+for name, df in (("spread", docs), ("unspread", docs.repartition(1))):
+    group = "sig-" + name
+    sc.setJobGroup(group, group)
+    dedup.minhash_signatures(df).collect()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    stages = [s for j in sc.statusTracker().getJobIdsForGroup(group)
+              for s in sc.statusTracker().getJobInfo(j).stageIds]
+    pairs = dedup.minhash_lsh_pairs(df).select("doc_a", "doc_b").collect()
+    out[name] = {
+        "widest_stage": max(sc.statusTracker().getStageInfo(s).numTasks for s in stages),
+        "pairs": sorted(map(list, pairs)),
+    }
+print(json.dumps(out))
+"""
+
+
+def test_one_row_group_shard_signatures_run_on_every_core(sf_dir, tmp_path):
+    """At local[2] a one-row-group shard is one scan split; the shingle
+    consumers spread it, so the stage that tokenizes, hashes and takes
+    the partial mins runs 2 tasks (1 when the input arrives already
+    shuffled to one partition), and the pairs are the same."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
+    dups = pa.table({"doc_id": pc.add(src["doc_id"], 10_000_000), "text": src["text"]})
+    shard = str(tmp_path / "shard.parquet")
+    pq.write_table(pa.concat_tables([src, dups]), shard, row_group_size=1 << 20)
+    assert pq.ParquetFile(shard).metadata.num_row_groups == 1
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k not in ("SPARK_GRAFT_MASTER", "SPARK_GRAFT_CPUS")}
+    proc = subprocess.run(
+        [sys.executable, "-c", _SIGNATURE_STAGE_PROBE, repo, shard],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["spread"]["widest_stage"] == 2
+    assert got["unspread"]["widest_stage"] == 1
+    assert len(got["spread"]["pairs"]) >= src.num_rows // 2
+    assert got["spread"]["pairs"] == got["unspread"]["pairs"]

@@ -3,25 +3,26 @@
 - brute-force cosine: exact baseline — one scan, dot product as a
   sequential fold (bit-identical to the DuckDB oracle's list_reduce),
   no shuffle until the final top-k (which AQE keeps tiny).
-- LSH-bucketed: random-hyperplane LSH for cosine with ``bits``
-  deterministic md5-seeded hyperplanes per table x ``tables``
-  independent tables. Candidate recall for a pair at angle theta is
+- LSH: random-hyperplane LSH for cosine with ``bits`` deterministic
+  md5-seeded hyperplanes per table x ``tables`` independent tables.
+  Candidate recall for a pair at angle theta is
   1 - (1 - (1 - theta/pi)^bits)^tables; more tables buys recall, more
   bits buys smaller buckets (expected bucket size N / 2^bits, so the
   bucket-local pair join is O(sum b^2) ~ N^2 / 2^bits per table instead
-  of N^2). At 100 TB (table, bucket) becomes a partition column so
-  probing is partition pruning.
+  of N^2). Search builds the index once (``lsh_build``: (table, bucket)
+  partition columns) and probes it (``lsh_search_indexed``: partition
+  pruning to the query's buckets).
 - IVF: seeded-sample centroids refined by a fixed number of Lloyd
   iterations (means in exact decimal so any engine reproduces them
-  bit-identically), then nprobe nearest inverted lists. Split into a
-  train-once ``ivf_build`` (persists cid-partitioned inverted lists +
-  an O(n_centroids) centroid sidecar) and ``ivf_topk_indexed`` (probe =
-  partition-pruned scan of nprobe lists — never a corpus scan);
-  ``ivf_topk`` remains the self-contained train+search convenience.
-  Past ``flat_cap`` lists (r10) the index goes TWO-LEVEL
-  (``hierarchical_centroids``): sqrt(k)-partitioned layout, two-stage
-  O(sqrt(k)) driver probes, no 4096-list broadcast ceiling — the same
-  quantizer SemDeDup's large-k path uses.
+  bit-identically), then nprobe nearest inverted lists. Search builds
+  the index once (``ivf_build``: cid-partitioned inverted lists + an
+  O(n_centroids) centroid sidecar, optionally PQ codes beside each
+  row) and probes it (``ivf_topk_indexed`` / ``ivf_pq_topk_indexed``:
+  partition-pruned scan of nprobe lists — never a corpus scan, never a
+  per-call training pass). Past ``flat_cap`` lists (r10) the index
+  goes TWO-LEVEL (``hierarchical_centroids``): sqrt(k)-partitioned
+  layout, two-stage O(sqrt(k)) driver probes, no 4096-list broadcast
+  ceiling — the same quantizer SemDeDup's large-k path uses.
 
 Everything is expression-only; a Pandas-UDF variant would move Arrow
 batches for no gain since the fold is already JVM-side.
@@ -700,7 +701,6 @@ def pq_encode(
     emb: DataFrame,
     codebooks: DataFrame,
     vec_col: str = "embedding",
-    engine: str = "expr",
 ) -> DataFrame:
     """(vec_id, codes array<int>): every vector compressed to its m
     per-block nearest-centroid ids — ONE map-only projection, no
@@ -709,25 +709,13 @@ def pq_encode(
     and each row argmins every block inside the same expression
     (sequential-fold squared L2, ties to the lowest cid — the exact
     convention of :func:`_assign_to_centroids`, so the oracle replays
-    codes bit-identically). At 100 TB this is the pass that turns the
-    raw vector table into the codes table the ADC scan reads.
+    codes bit-identically).
 
-    ``engine="numpy"`` (r12) runs the SAME argmin as a vectorized
-    mapInPandas stage — per block, the squared-L2 accumulates one
-    dimension at a time across the whole Arrow batch, so every float
-    add happens in the exact order of the expression fold and the
-    emitted codes are BIT-IDENTICAL to the expr engine (pytest-pinned);
-    ``np.argmin`` takes the first minimum = the lowest cid, same tie
-    rule. This is the bulk-encode path: the full-corpus projection is
-    the one pass PQ runs over 100 TB, and the expression tree's
-    per-row overhead (measured ~2 k rows/s at dim 64, PQ8) makes it
-    the bottleneck — the numpy twin is ~40x faster at identical
-    output (PQ_SCALE.json). Keep ``expr`` for oracle-replayed gates;
-    use ``numpy`` for corpus encodes."""
-    if engine == "numpy":
-        return _pq_encode_numpy(emb, codebooks, vec_col)
-    if engine != "expr":
-        raise ValueError(f"pq_encode: unknown engine {engine!r}")
+    This expression form is the reference encoder. Corpus encodes (the
+    index build and append) run :func:`_pq_encode_numpy`, which emits
+    the same codes bit for bit (pytest-pinned) about 40x faster
+    (PQ_SCALE.json): the expression tree's per-row overhead measured
+    ~2 k rows/s at dim 64, PQ8."""
     grouped = codebooks.groupBy("block").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("cid", "cvec"))),
@@ -773,13 +761,13 @@ def _pq_encode_numpy(
     vec_col: str,
     keep_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """The vectorized twin of :func:`pq_encode` (see its docstring for
-    the bit-identity argument). Codebooks ride into the closure as a
-    numpy array (m * 2**nbits * d doubles — a few hundred KB at PQ8),
-    the batch loop accumulates (x_t - c_t)^2 one dimension at a time so
-    the float-add ORDER matches the expression fold exactly, and
-    argmin's first-index rule IS the lowest-cid tie rule (cids are
-    validated dense by :func:`_pq_shape`).
+    """The vectorized twin of :func:`pq_encode`, emitting the same codes
+    bit for bit. Codebooks ride into the closure as a numpy array
+    (m * 2**nbits * d doubles — a few hundred KB at PQ8), the batch loop
+    accumulates (x_t - c_t)^2 one dimension at a time so the float-add
+    ORDER matches the expression fold exactly, and argmin's first-index
+    rule IS the lowest-cid tie rule (cids are validated dense by
+    :func:`_pq_shape`).
 
     ``keep_cols`` (r12) passes extra columns of ``emb`` through the
     Arrow stage untouched (same row order inside each batch), so the
@@ -860,15 +848,16 @@ def pq_topk(
     At 100 TB: the scan reads m bytes per vector instead of the full
     float array (32x less I/O at m=8 on dim-64 float32), the lookup
     table is a few KB broadcast with the plan, and the top-k collapses
-    to TakeOrdered — compose with the IVF layout (encode each inverted
-    list) for pruned+compressed probes, the standard IVF-PQ stack.
+    to TakeOrdered — the IVF layout (``ivf_build(pq_m=...)``) stores
+    codes in each inverted list for pruned+compressed probes, the
+    standard IVF-PQ stack.
     Measured crossover (PQ_SCALE.json v2, clustered corpus, parquet
     scans): the ADC scan reaches parity with the exact JVM scan at
     ~1M rows and wins 2.0x at 3M — compression pays where scans are
     byte-bound, not on an in-memory 200k corpus. Single-stage ADC
     top-k is a SHORTLIST generator, not a ranker: within a tight
     neighborhood the codes tie (recall@10 = 0.02 clustered), so ship
-    the two-stage shape (:func:`ivf_pq_topk` ``rerank=``)."""
+    the two-stage shape (:func:`ivf_pq_topk_indexed` ``rerank=``)."""
     rows = codebooks.collect()  # bounded: m * 2**nbits codebook entries
     m, kk, d = _pq_shape(rows)
     if len(query_vec) != m * d:
@@ -924,98 +913,6 @@ def pq_topk(
     )
 
 
-def ivf_pq_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    m: int = 2,
-    nbits: int = 2,
-    n_iter: int = 2,
-    vec_col: str = "embedding",
-    exclude_vec_id: int | None = None,
-    rerank: int | None = None,
-) -> DataFrame:
-    """The composed IVF-PQ search (the standard 100 TB ANN stack —
-    Jégou et al. 2011 §V): the coarse IVF quantizer prunes the corpus
-    to ``nprobe`` inverted lists, and WITHIN them the ADC scan scores
-    PQ codes against the query's lookup table — the scan is both
-    partition-pruned AND compressed, touching nprobe/n_centroids of
-    the corpus at m bytes per vector.
-
-    One-shot train+search shape (like :func:`ivf_topk`) so the whole
-    stack sits in one plan for the gate's oracle to replay: coarse
-    Lloyd + per-block PQ Lloyds are the same deterministic
-    exact-decimal machinery, probes tie to the lowest cid, ADC sums in
-    block order, output (vec_id, d2_adc) ascending / ties by vec_id.
-    The materialized twin is REAL as of r12: ``ivf_build(pq_m=...)``
-    stores :func:`pq_encode` codes beside each list's rows (the codes
-    column rides the same ``cid=`` partitioning, so probe pruning and
-    code-only projection compose for free in parquet) and
-    :func:`ivf_pq_topk_indexed` probes it without retraining —
-    bit-identical results to this in-plan form at the same params.
-
-    ``rerank=<shortlist>`` (r12 — VERDICT r11 #1) switches on the
-    two-stage deployment shape: ADC shortlist inside the probed cells,
-    exact squared-L2 re-rank of just those rows, output (vec_id, d2)
-    ascending / ties by vec_id. USE THIS IN PRODUCTION. The measured
-    operating point (PQ_SCALE.json v2, clustered 200k corpus of
-    100-member planted neighborhoods): single-stage ADC recall@10 is
-    0.02 — members of one neighborhood quantize to near-identical
-    codes, so within-cluster ADC ranks are ties — while a shortlist
-    covering the neighborhood size (named config m=4, nprobe=1,
-    shortlist=100 = 10x k) re-ranks to recall@10 = 1.0 with the IVF
-    pruning itself lossless (ceiling 1.0). Division of labor: ADC
-    finds the neighborhood, exact math resolves within it — size the
-    shortlist to the expected duplicate/neighborhood multiplicity,
-    5-10x k as the default. Compression pays at scan-bound scale: the
-    ADC full scan crosses exact at ~1M rows and wins 2.0x at 3M
-    (21.6x fewer bytes), while at 200k in-memory the exact scan's JVM
-    codegen still wins — exactly the regime note r11 recorded."""
-    e = emb.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
-    cents = ivf_centroids(e, n_centroids, n_iter)
-    assigned = _assign_to_centroids(e, cents).select("vec_id", "v", "cid")
-    # driver-side probe pick: same sequential L2 as the in-plan fold
-    probe_rows = cents.collect()
-    ranked = sorted(
-        (_driver_d2(r["cvec"], [float(x) for x in query_vec]), r["cid"])
-        for r in probe_rows
-    )
-    probes = [cid for _, cid in ranked[:nprobe]]
-    pruned = assigned.where(F.col("cid").isin([int(c) for c in probes]))
-    cb = pq_train(emb, m=m, nbits=nbits, n_iter=n_iter, vec_col=vec_col)
-    codes = pq_encode(
-        pruned.select("vec_id", F.col("v").alias(vec_col)), cb, vec_col=vec_col
-    )
-    q = [float(x) for x in query_vec]
-    if rerank is None:
-        return pq_topk(codes, cb, q, k=k, exclude_vec_id=exclude_vec_id)
-    # Two-stage deployment shape (r12, VERDICT r11 #1): the ADC scan
-    # SHORTLISTS `rerank` candidates inside the probed cells, then the
-    # exact squared-L2 re-ranks only those rows — the scan stays
-    # compressed (m bytes/vector) and pruned, the accuracy comes from
-    # exact math over a candidate set of constant size. The named
-    # operating point from the clustered-corpus sweep (PQ_SCALE.json
-    # v2, planted 100-member neighborhoods): shortlist = 10x k reaches
-    # re-ranked recall@10 = 1.0 at every (m, nprobe) swept, shortlist
-    # 5x k = 0.4 — size the shortlist to the expected neighborhood
-    # multiplicity; raw single-stage ADC reads 0.02 (pure within-
-    # neighborhood code ties).
-    if rerank < k:
-        raise ValueError(f"rerank shortlist {rerank} must be >= k {k}")
-    short = pq_topk(
-        codes, cb, q, k=rerank, exclude_vec_id=exclude_vec_id
-    ).select("vec_id")
-    qlit = F.array(*[F.lit(x) for x in q])
-    return (
-        pruned.join(short, "vec_id")
-        .select("vec_id", F.round(_l2sq(F.col("v"), qlit), 6).alias("d2"))
-        .orderBy("d2", "vec_id")
-        .limit(k)
-    )
-
-
 def ivf_index_exists(index_path: str) -> bool:
     """True when a completed index lives at ``index_path`` (the centroid
     sidecar only appears after the atomic publish rename). Heals a
@@ -1045,6 +942,20 @@ def default_n_centroids(n_rows: int, floor: int = 8, cap: int = 4096) -> int:
     if k - p > 2 * p - k:  # nearest power of two
         p *= 2
     return max(floor, min(p, cap))
+
+
+def _refuse_stale(index_path: str, built: dict, want: dict) -> None:
+    """Raise when the index at ``index_path`` was built with other
+    parameters than ``want``: serving it would answer for an index the
+    caller did not ask for. Fields the sidecar does not record are not
+    compared."""
+    for field, value in want.items():
+        if field in built and built[field] != value:
+            raise ValueError(
+                f"index at {index_path!r} was built with {field}="
+                f"{built[field]!r}, not {value!r}; pass overwrite=True to "
+                "rebuild it"
+            )
 
 
 def ivf_build(
@@ -1122,7 +1033,12 @@ def ivf_build(
     """
     import json
 
+    pq = None if pq_m is None else {"m": pq_m, "nbits": pq_nbits, "n_iter": pq_n_iter}
     if ivf_index_exists(index_path) and not overwrite:
+        want = {"n_iter": n_iter, "pq": pq}
+        if n_centroids is not None:
+            want.update(n_centroids=n_centroids, hierarchical=n_centroids > flat_cap)
+        _refuse_stale(index_path, _index_stats(index_path), want)
         return index_path
     e = emb.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
     if n_centroids is None:
@@ -1235,11 +1151,7 @@ def ivf_build(
                 # fixed nprobe over a sqrt(N) quantizer is the measured
                 # flat-cost configuration — probed rows ~ 2*sqrt(N))
                 "default_nprobe": 2,
-                "pq": (
-                    None
-                    if pq_m is None
-                    else {"m": pq_m, "nbits": pq_nbits, "n_iter": pq_n_iter}
-                ),
+                "pq": pq,
                 **extra,
             },
             f,
@@ -1284,16 +1196,15 @@ def ivf_append(
     spark = emb_new.sparkSession
     if not ivf_index_exists(index_path):
         raise FileNotFoundError(f"no IVF index at {index_path!r}")
-    try:
-        with open(os.path.join(index_path, "stats.json")) as f:
-            stats = json.load(f)
-    except FileNotFoundError:
-        # Index built before the running-stats sidecar existed: appends
-        # remain exact (assignment only depends on the live centroids),
-        # but there is no drift baseline — the guard stays disabled and
-        # the stats file is not invented, until a full rebuild records
-        # one. Graceful degradation instead of a bare FileNotFoundError.
-        stats = {"n": None, "mean_d2": None, "n_centroids": None, "n_iter": None}
+    # An index built before the running-stats sidecar existed has none:
+    # appends remain exact (assignment only depends on the live
+    # centroids), but there is no drift baseline — the guard stays
+    # disabled and the stats file is not invented, until a full rebuild
+    # records one. Graceful degradation instead of a bare
+    # FileNotFoundError.
+    stats = _index_stats(index_path) or dict.fromkeys(
+        ("n", "mean_d2", "n_centroids", "n_iter")
+    )
     cents = spark.read.parquet(os.path.join(index_path, "centroids"))
     e = emb_new.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
     hierarchical = bool(stats.get("hierarchical"))
@@ -1462,7 +1373,8 @@ def _sidecar_collect(spark: SparkSession, path: str) -> list[dict]:
 
 def _driver_d2(cvec, query_vec: list[float]) -> float:
     """Driver-side squared L2 in the same sequential order as
-    :func:`_l2sq`, so probe picks are bit-identical to in-plan ranking."""
+    :func:`_l2sq`, so probe picks are bit-identical to in-plan ranking
+    and to the oracle's."""
     acc = 0.0
     for x, y in zip(cvec, query_vec):
         acc = acc + (x - y) * (x - y)
@@ -1516,19 +1428,11 @@ def ivf_probe_cids(
     """The ``nprobe`` nearest inverted lists for a query vector.
 
     Reads only the O(n_centroids) sidecar; the squared-L2 fold runs on
-    the driver in the same sequential order as :func:`_l2sq`, so the
-    probed lists are bit-identical to the in-plan variant (ties to the
-    lowest cid)."""
+    the driver (:func:`_driver_d2`), so the probed lists are
+    bit-identical to an in-plan ranking (ties to the lowest cid)."""
     publish.recover(index_path)
     rows = _sidecar_collect(spark, os.path.join(index_path, "centroids"))
-
-    def d2(cvec) -> float:
-        acc = 0.0
-        for x, y in zip(cvec, query_vec):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    ranked = sorted((d2(r["cvec"]), r["cid"]) for r in rows)
+    ranked = sorted((_driver_d2(r["cvec"], query_vec), r["cid"]) for r in rows)
     return [cid for _, cid in ranked[:nprobe]]
 
 
@@ -1546,8 +1450,7 @@ def ivf_topk_indexed(
     cosine inside them, top-k. The query vector enters the plan as a
     literal array, so the whole probe is one pruned scan + project +
     TakeOrdered (asserted in tools/explain_audit.py). Output
-    (vec_id, cosine) ordered desc, ties by vec_id — same contract as
-    :func:`ivf_topk`.
+    (vec_id, cosine) ordered desc, ties by vec_id.
 
     ``nprobe=None`` reads the index's own recorded default from
     ``stats.json`` (``default_nprobe``, written by :func:`ivf_build`) —
@@ -1612,11 +1515,11 @@ def ivf_pq_topk_indexed(
     rerank: int | None = None,
     exclude_vec_id: int | None = None,
 ) -> DataFrame:
-    """IVF-PQ search against a MATERIALIZED index (r12 — the serving
-    twin of :func:`ivf_pq_topk`, which retrains per call): the index
-    was built with ``ivf_build(pq_m=...)``, so the probed inverted
-    lists already carry ``codes`` and the probe never touches a raw
-    vector until (optionally) the re-rank.
+    """IVF-PQ search against a MATERIALIZED index (r12): the index was
+    built with ``ivf_build(pq_m=...)``, so the coarse Lloyd, the PQ
+    Lloyds and the full-corpus encode are paid once, the probed
+    inverted lists already carry ``codes``, and the probe never
+    touches a raw vector until (optionally) the re-rank.
 
     The plan is the 100 TB shape end-to-end: pick ``nprobe`` lists from
     the centroid sidecar (driver-side, O(sqrt(k)) rows), partition-prune
@@ -1627,18 +1530,28 @@ def ivf_pq_topk_indexed(
     scan shortlists inside the probed cells, then the exact squared-L2
     re-ranks just those rows by reading their vectors (a second pruned
     scan joined on the tiny shortlist — broadcast, no shuffle of the
-    lists). Sizing guidance and the measured operating point are in
-    :func:`ivf_pq_topk`'s docstring (shortlist 5-10x k; single-stage
-    ADC is a shortlist generator, not a ranker).
+    lists).
 
-    Results are BIT-IDENTICAL to the in-plan :func:`ivf_pq_topk` at the
-    same (n_centroids, nprobe, m, nbits, n_iter): the coarse Lloyd, the
-    probe pick, the PQ Lloyds, the encode (numpy twin of the expression
-    fold) and the ADC sum all share conventions — which is what lets
-    the DuckDB oracle replay this probe through the same SQL as the
-    in-plan gate. Output: ``(vec_id, d2_adc)`` ascending, or
-    ``(vec_id, d2)`` ascending with ``rerank=``, rounded 6, ties by
-    vec_id."""
+    Use ``rerank=`` in production: single-stage ADC is a shortlist
+    generator, not a ranker. The measured operating point (PQ_SCALE.json
+    v2, clustered 200k corpus of 100-member planted neighborhoods):
+    single-stage ADC recall@10 is 0.02 — members of one neighborhood
+    quantize to near-identical codes, so within-cluster ADC ranks are
+    ties — while a shortlist covering the neighborhood size (named
+    config m=4, nprobe=1, shortlist=100 = 10x k) re-ranks to
+    recall@10 = 1.0 at every (m, nprobe) swept, with the IVF pruning
+    itself lossless; shortlist 5x k reached 0.4. ADC finds the
+    neighborhood, exact math resolves within it: size the shortlist to
+    the expected duplicate/neighborhood multiplicity, 5-10x k as the
+    default. Compression pays at scan-bound scale: the ADC full scan
+    crosses the exact scan at ~1M rows and wins 2.0x at 3M (21.6x
+    fewer bytes), while at 200k in memory the exact scan still wins.
+
+    The DuckDB oracle replays this probe bit for bit: the coarse Lloyd,
+    the probe pick, the PQ Lloyds, the encode (numpy twin of the
+    expression fold) and the ADC sum all share its conventions.
+    Output: ``(vec_id, d2_adc)`` ascending, or ``(vec_id, d2)``
+    ascending with ``rerank=``, rounded 6, ties by vec_id."""
     publish.recover(index_path)
     st = _index_stats(index_path)
     if not st.get("pq"):
@@ -1672,44 +1585,6 @@ def ivf_pq_topk_indexed(
     )
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    n_iter: int = 2,
-) -> DataFrame:
-    """One-shot IVF search (train + probe in a single plan): probe the
-    query's ``nprobe`` nearest centroid lists, exact cosine inside them,
-    top-k. Recall < 1 by design (the ANN trade). Output (vec_id, cosine)
-    ordered desc, ties by vec_id.
-
-    This retrains per call — fine for ad-hoc exploration, wrong as a
-    serving path. For repeated searches build the index once with
-    :func:`ivf_build` and probe it with :func:`ivf_topk_indexed`."""
-    e = emb.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
-    cents = ivf_centroids(e, n_centroids, n_iter)
-    q = e.where(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
-    probes = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cid", _l2sq(F.col("cvec"), F.col("qv")).alias("d2"))
-        .withColumn("_rn", F.row_number().over(Window.orderBy("d2", "cid")))
-        .where(F.col("_rn") <= nprobe)
-        .select("cid")
-    )
-    assigned = _assign_to_centroids(e, cents)
-    probed = assigned.join(F.broadcast(probes), "cid").crossJoin(F.broadcast(q))
-    cos = F.expr(_cosine_sql("v", "qv"))
-    return (
-        probed.where(F.col("vec_id") != query_id)
-        .select("vec_id", F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
-
-
 def lsh_build(
     emb: DataFrame,
     index_path: str,
@@ -1736,6 +1611,10 @@ def lsh_build(
 
     publish.recover(index_path)
     if os.path.isfile(os.path.join(index_path, "params.json")) and not overwrite:
+        want = {"bits": bits, "tables": tables, "seed": seed}
+        if dim is not None:
+            want["dim"] = dim
+        _refuse_stale(index_path, _lsh_params(index_path), want)
         return index_path
     if dim is None:
         dim = _embedding_dim(emb, vec_col)
@@ -1752,6 +1631,14 @@ def lsh_build(
     return index_path
 
 
+def _lsh_params(index_path: str) -> dict:
+    """The LSH index's ``params.json`` sidecar: bits, tables, dim, seed."""
+    import json
+
+    with open(os.path.join(index_path, "params.json")) as f:
+        return json.load(f)
+
+
 def lsh_append(emb_new: DataFrame, index_path: str, vec_col: str = "embedding") -> dict:
     """Incremental LSH maintenance: bucket a batch of new vectors with
     the index's pinned hyperplanes (params.json) and append them to the
@@ -1761,11 +1648,8 @@ def lsh_append(emb_new: DataFrame, index_path: str, vec_col: str = "embedding") 
     drift case and no retrain path (parity-tested). Same concurrency
     contract as :func:`ivf_append`: files land atomically, a concurrent
     probe may see a prefix of the batch. Returns ``{"appended": n}``."""
-    import json
-
     publish.recover(index_path)
-    with open(os.path.join(index_path, "params.json")) as f:
-        p = json.load(f)
+    p = _lsh_params(index_path)
     planes = hyperplanes(p["dim"], p["bits"], p["tables"], p["seed"])
     base = emb_new.select(F.col("vec_id"), _as_double(F.col(vec_col)).alias("v"))
     rows = _table_buckets(base, planes, "v", keep=("v",))
@@ -1803,81 +1687,30 @@ def lsh_search_indexed(
     """Approximate search against a materialized LSH index: read the
     params sidecar, compute the query's (table, bucket) pairs on the
     driver, partition-prune the bucket store to those directories,
-    dedup candidate ids (a vector can collide in several tables), exact
-    cosine. Same output contract as :func:`lsh_bucketed_search`
-    (vec_id, cosine >= threshold, rounded to 6), but the scan touches
-    ``tables`` directories instead of the corpus."""
-    import json
-
+    keep one copy of each candidate (a vector can collide in several
+    tables), exact cosine. Output (vec_id, cosine >= threshold,
+    rounded to 6); the scan touches ``tables`` directories instead of
+    the corpus, and nothing is shuffled."""
     publish.recover(index_path)
-    with open(os.path.join(index_path, "params.json")) as f:
-        p = json.load(f)
+    p = _lsh_params(index_path)
     planes = hyperplanes(p["dim"], p["bits"], p["tables"], p["seed"])
     qb = lsh_query_buckets(query_vec, planes)
-    pred = None
+    probed = first = None
     for t, b in enumerate(qb):
         c = (F.col("_t") == t) & (F.col("_b") == int(b))
-        pred = c if pred is None else (pred | c)
-    scan = spark.read.parquet(os.path.join(index_path, "buckets")).where(pred)
-    # a vector colliding in several tables appears once per collision:
-    # keep one copy before scoring
-    cand = scan.groupBy("vec_id").agg(F.first("v").alias("v"))
+        probed = c if probed is None else (probed | c)
+        # a vector colliding in several tables is stored once per table:
+        # keep the copy from its lowest colliding table, decided row by
+        # row from the stored vector's buckets, so no dedup shuffle runs
+        own = F.col("_t") == t
+        for u in range(t):
+            own = own & (hyperplane_bucket("v", planes[u]) != qb[u])
+        first = own if first is None else (first | own)
+    cand = spark.read.parquet(os.path.join(index_path, "buckets")).where(probed & first)
     cos = F.expr(_cosine_sql("v", _lit_vec_sql(query_vec)))
     if exclude_vec_id is not None:
         cand = cand.where(F.col("vec_id") != exclude_vec_id)
     return (
         cand.select("vec_id", F.round(cos, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
-
-
-def lsh_bucketed_search(
-    emb: DataFrame,
-    query_id: int,
-    threshold: float,
-    vec_col: str = "embedding",
-    bits: int = 8,
-    tables: int = 2,
-    dim: int | None = None,
-    seed: str = DEFAULT_LSH_SEED,
-) -> DataFrame:
-    """Approximate search: score only vectors sharing the query's
-    hyperplane-LSH bucket in ANY table. Same output shape as
-    cosine_threshold; recall < 1 by design (see module docstring for
-    the recall formula).
-
-    Scale shape (r7 rework, measurement-directed): the ANN rung showed
-    the old shape — explode to (vec_id, table, bucket), semi-join,
-    distinct, then RE-JOIN candidate ids to full-width vectors —
-    going superlinear (exponent 1.27 to 20M vectors: the id→vector join
-    shuffles ~¼ of the corpus's vectors per query). Now the bucket
-    match is a pure MAP-SIDE filter: the query row broadcasts with its
-    per-table buckets precomputed, each corpus row compares its own
-    bucket per table inline (each row evaluated exactly once, so no
-    distinct is needed), and survivors flow straight into the cosine —
-    zero shuffles, strictly one corpus scan. The materialized twin
-    (:func:`lsh_search_indexed`) remains the real scale path (it scans
-    only the query's (table, bucket) partitions); this in-plan form is
-    for ad-hoc one-shot queries where no index exists."""
-    if dim is None:
-        dim = _embedding_dim(emb, vec_col)
-    planes = hyperplanes(dim, bits, tables, seed)
-    base = emb.select(F.col("vec_id"), _as_double(F.col(vec_col)).alias("_v"))
-    q = base.where(F.col("vec_id") == query_id).select(
-        F.col("_v").alias("_q"),
-        *[
-            hyperplane_bucket("_v", tp).alias(f"_qb{t}")
-            for t, tp in enumerate(planes)
-        ],
-    )
-    joined = base.crossJoin(F.broadcast(q))
-    match = None
-    for t, tp in enumerate(planes):
-        c = hyperplane_bucket("_v", tp) == F.col(f"_qb{t}")
-        match = c if match is None else (match | c)
-    scored = cosine_scores(joined.where(match), "_q", "_v")
-    return (
-        scored.where(F.col("vec_id") != query_id)
-        .select("vec_id", F.round("cosine", 6).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )

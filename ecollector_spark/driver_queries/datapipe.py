@@ -1001,69 +1001,36 @@ _B_CTE, _ANY_TABLE_EQ = _b_cte(_LSH_BITS, _LSH_TABLES)
 _SB_CTE, _S_ANY_EQ = _b_cte(_SEARCH_BITS, _SEARCH_TABLES)
 
 
+_LSH_SEARCH_SQL = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+{_SB_CTE},
+qb AS (SELECT * FROM b WHERE vec_id = 0),
+cand AS (SELECT DISTINCT a.vec_id FROM b a, qb y WHERE {_S_ANY_EQ}),
+q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+SELECT vec_id, round({_cos_sql('v', 'qv')}, 6) AS cosine
+FROM cand JOIN e USING (vec_id), q
+WHERE vec_id <> 0 AND round({_cos_sql('v', 'qv')}, 6) >= 0.2
+"""
+_LSH_INDEX = {"bits": _SEARCH_BITS, "tables": _SEARCH_TABLES, "dim": _EMB_DIM}
+
+
+@register("ann_lsh_indexed", _LSH_SEARCH_SQL)
 @register(
     "ann_lsh_bucketed",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-{_SB_CTE},
-qb AS (SELECT * FROM b WHERE vec_id = 0),
-cand AS (SELECT DISTINCT a.vec_id FROM b a, qb y WHERE {_S_ANY_EQ}),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-SELECT vec_id, round({_cos_sql('v', 'qv')}, 6) AS cosine
-FROM cand JOIN e USING (vec_id), q
-WHERE vec_id <> 0 AND round({_cos_sql('v', 'qv')}, 6) >= 0.2
-""",
+    _LSH_SEARCH_SQL,
     shelved=True,  # rotated out r10: ann_lsh_indexed keeps the LSH bucket-store path
 )
-def ann_lsh_bucketed(spark, sf_dir):
-    """Hyperplane-LSH bucketed search: probe the query's bucket in each
-    of {_SEARCH_TABLES} tables x {_SEARCH_BITS} seeded hyperplanes — the
-    scan-reducing scale path ((table, bucket) partition-prunes at
-    100 TB)."""
-    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    return similarity.lsh_bucketed_search(
-        emb,
-        query_id=0,
-        threshold=0.2,
-        bits=_SEARCH_BITS,
-        tables=_SEARCH_TABLES,
-        dim=_EMB_DIM,
-    )
-
-
-@register(
-    "ann_lsh_indexed",
-    f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-{_SB_CTE},
-qb AS (SELECT * FROM b WHERE vec_id = 0),
-cand AS (SELECT DISTINCT a.vec_id FROM b a, qb y WHERE {_S_ANY_EQ}),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-SELECT vec_id, round({_cos_sql('v', 'qv')}, 6) AS cosine
-FROM cand JOIN e USING (vec_id), q
-WHERE vec_id <> 0 AND round({_cos_sql('v', 'qv')}, 6) >= 0.2
-""",
-    # r12 optimization round: restored to main — the optimization driver
-    # re-runs every query declared in r11; none may disappear.
-)
 def ann_lsh_indexed(spark, sf_dir):
-    """The MATERIALIZED LSH index path on the value signal (previously
-    pytest-only): build once into a (_t, _b)-partitioned bucket store,
-    compute the query's buckets driver-side, probe = pruned scan of the
-    query's (table, bucket) directories. Same hyperplanes, threshold and
-    output contract as the in-plan ``ann_lsh_bucketed`` — and the same
-    oracle, which is exactly the claim: materializing the index changes
-    the cost, never the rows."""
+    """Hyperplane-LSH search over a materialized index: build once into
+    a (_t, _b)-partitioned bucket store (4 tables x 4 seeded
+    hyperplanes), compute the query's buckets driver-side, probe =
+    pruned scan of the query's (table, bucket) directories, exact
+    cosine >= 0.2 within. The oracle buckets every vector with the same
+    hyperplanes, so the rows and cosines hash-match."""
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    idx = _ivf_index_dir(sf_dir, n_centroids=0, n_iter=0) + "_lsh"
-    similarity.lsh_build(
-        emb, idx, bits=_SEARCH_BITS, tables=_SEARCH_TABLES, dim=_EMB_DIM
-    )
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
+    idx = _ivf_index_dir(sf_dir, **_LSH_INDEX)
+    similarity.lsh_build(emb, idx, **_LSH_INDEX)
     return similarity.lsh_search_indexed(
-        spark, idx, list(row["v"]), threshold=0.2, exclude_vec_id=0
+        spark, idx, _query_vec(emb), threshold=0.2, exclude_vec_id=0
     )
 
 
@@ -1103,7 +1070,8 @@ def _ivf_sql(
     k: int = 10,
     train_max_id: int | None = None,
 ) -> str:
-    """DuckDB twin of similarity.ivf_topk: the same seed centroids and the
+    """DuckDB twin of the IVF index probe (similarity.ivf_build +
+    ivf_topk_indexed, query vec_id 0): the same seed centroids and the
     same ``n_iter`` Lloyd steps unrolled as chained CTEs. Means are
     exact-decimal sum / count cast to double on both engines, so centroid
     coordinates (and therefore assignments and the probed lists) are
@@ -1158,10 +1126,11 @@ ORDER BY cosine DESC, vec_id LIMIT {k}
     )
 
 
-def _ivf_index_dir(sf_dir: str, n_centroids: int, n_iter: int) -> str:
+def _ivf_index_dir(sf_dir: str, **params) -> str:
     """Deterministic per-corpus index location: keyed on the corpus path,
-    quantizer params, and the parquet mtime so a regenerated corpus
-    triggers a rebuild instead of serving a stale index."""
+    the parquet mtime (a regenerated corpus triggers a rebuild instead
+    of serving a stale index) and every parameter of the index, so two
+    gates share a directory only when they ask for the same index."""
     import hashlib as _hl
     import tempfile as _tf
 
@@ -1171,9 +1140,22 @@ def _ivf_index_dir(sf_dir: str, n_centroids: int, n_iter: int) -> str:
     except OSError:
         mt = "0"
     key = _hl.md5(
-        f"{os.path.abspath(sf_dir)}|{n_centroids}|{n_iter}|{mt}".encode()
+        f"{os.path.abspath(sf_dir)}|{mt}|{sorted(params.items())!r}".encode()
     ).hexdigest()[:12]
     return os.path.join(_tf.gettempdir(), f"ecollector_ivf_{key}")
+
+
+def _query_vec(emb) -> list[float]:
+    """vec_id 0's embedding as doubles: the query every ANN gate runs."""
+    row = (
+        emb.where(F.col("vec_id") == 0)
+        .select(F.col("embedding").cast("array<double>").alias("v"))
+        .first()
+    )
+    return list(row["v"])
+
+
+_IVF_INDEX = {"n_centroids": 8, "n_iter": 2}
 
 
 @register("ann_ivf_topk", _ivf_sql())
@@ -1185,15 +1167,10 @@ def ann_ivf_topk(spark, sf_dir):
     build is idempotent per corpus (skipped when the index exists), so
     repeated searches pay only the pruned probe scan."""
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    idx = _ivf_index_dir(sf_dir, n_centroids=8, n_iter=2)
-    similarity.ivf_build(emb, idx, n_centroids=8, n_iter=2)
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
+    idx = _ivf_index_dir(sf_dir, **_IVF_INDEX)
+    similarity.ivf_build(emb, idx, **_IVF_INDEX)
     return similarity.ivf_topk_indexed(
-        spark, idx, list(row["v"]), k=10, nprobe=2, exclude_vec_id=0
+        spark, idx, _query_vec(emb), k=10, nprobe=2, exclude_vec_id=0
     )
 
 
@@ -1386,16 +1363,11 @@ def ann_ivf_hier_topk(spark, sf_dir):
     stages bit-identically (same tie rules), so the returned rows AND
     cosines hash-match."""
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    idx = _ivf_index_dir(sf_dir, n_centroids=916, n_iter=2)  # distinct key
-    similarity.ivf_build(emb, idx, n_centroids=16, n_iter=2, flat_cap=8)
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
-    qv = list(row["v"])
+    params = {"n_centroids": 16, "n_iter": 2, "flat_cap": 8}
+    idx = _ivf_index_dir(sf_dir, **params)
+    similarity.ivf_build(emb, idx, **params)
     return similarity.ivf_topk_indexed(
-        spark, idx, qv, k=5, nprobe=3, exclude_vec_id=0
+        spark, idx, _query_vec(emb), k=5, nprobe=3, exclude_vec_id=0
     )
 
 
@@ -1561,14 +1533,7 @@ def ann_pq_topk(spark, sf_dir):
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     cb = similarity.pq_train(emb, m=2, nbits=2, n_iter=2)
     codes = similarity.pq_encode(emb, cb)
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
-    return similarity.pq_topk(
-        codes, cb, list(row["v"]), k=10, exclude_vec_id=0
-    )
+    return similarity.pq_topk(codes, cb, _query_vec(emb), k=10, exclude_vec_id=0)
 
 
 def _ivf_pq_sql(
@@ -1581,12 +1546,13 @@ def _ivf_pq_sql(
     topk: int = 10,
     rerank: int | None = None,
 ) -> str:
-    """DuckDB twin of the composed IVF-PQ search
-    (similarity.ivf_pq_topk): the coarse Lloyd + probe pick of
-    _ivf_sql (renamed g* to avoid clashing with the PQ CTEs) prunes
-    the corpus to the probed lists; the _pq_sql block Lloyds + ADC
-    score run over the FULL corpus's codebooks (training never sees
-    the probe) and the final score joins against the pruned rows."""
+    """DuckDB twin of the IVF-PQ index probe
+    (similarity.ivf_build(pq_m=...) + ivf_pq_topk_indexed): the coarse
+    Lloyd + probe pick of _ivf_sql (renamed g* to avoid clashing with
+    the PQ CTEs) prunes the corpus to the probed lists; the _pq_sql
+    block Lloyds + ADC score run over the FULL corpus's codebooks
+    (training never sees the probe) and the final score joins against
+    the pruned rows."""
 
     def assign(c: str, src: str) -> str:
         return (
@@ -1671,6 +1637,20 @@ ORDER BY d2, vec_id LIMIT {topk}
     )
 
 
+_IVF_PQ_INDEX = {**_IVF_INDEX, "pq_m": 2, "pq_nbits": 2, "pq_n_iter": 2}
+
+
+def _ivf_pq_probe(spark, sf_dir, rerank=None):
+    """Top 10 of the IVF-PQ index probe for vec_id 0 (see the gates)."""
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
+    idx = _ivf_index_dir(sf_dir, **_IVF_PQ_INDEX)
+    similarity.ivf_build(emb, idx, **_IVF_PQ_INDEX)
+    return similarity.ivf_pq_topk_indexed(
+        spark, idx, _query_vec(emb), k=10, nprobe=2, rerank=rerank,
+        exclude_vec_id=0,
+    )
+
+
 @register(
     "ann_ivf_pq_topk",
     _ivf_pq_sql(),
@@ -1678,25 +1658,22 @@ ORDER BY d2, vec_id LIMIT {topk}
 )
 def ann_ivf_pq_topk(spark, sf_dir):
     """The composed IVF-PQ search (Jégou et al. 2011 §V — THE standard
-    100 TB ANN architecture): the coarse quantizer prunes to nprobe=2
-    of 8 inverted lists, PQ codebooks (m=2 blocks x 4 sub-centroids)
-    compress the pruned rows to code ids, and the ADC scan ranks them
-    against the query's lookup table — partition pruning AND 32x-class
-    scan compression in one plan. The oracle replays the coarse Lloyd,
-    the probe pick, BOTH block Lloyds, the code assignment and the ADC
-    sum bit-identically."""
-    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
-    return similarity.ivf_pq_topk(
-        emb, list(row["v"]), k=10, n_centroids=8, nprobe=2, m=2, nbits=2,
-        n_iter=2, exclude_vec_id=0,
-    )
+    100 TB ANN architecture), single-stage ADC: the index is built once
+    with ``ivf_build(pq_m=2, pq_nbits=2)`` — 8 coarse lists, PQ
+    codebooks of m=2 blocks x 4 sub-centroids, every row's codes
+    stored beside it — and the probe partition-prunes to nprobe=2
+    lists, reads ``(vec_id, codes)`` only and ranks the rows against
+    the query's lookup table. The oracle replays the coarse Lloyd, the
+    probe pick, BOTH block Lloyds, the code assignment and the ADC sum
+    bit-identically."""
+    return _ivf_pq_probe(spark, sf_dir)
 
 
+@register(
+    "ann_ivf_pq_indexed",
+    _ivf_pq_sql(rerank=50),
+    shelved=True,  # new r12: the MATERIALIZED IVF-PQ serving path
+)
 @register(
     "ann_ivf_pq_rerank",
     _ivf_pq_sql(rerank=50),
@@ -1705,59 +1682,16 @@ def ann_ivf_pq_topk(spark, sf_dir):
 )
 def ann_ivf_pq_rerank(spark, sf_dir):
     """The IVF-PQ DEPLOYMENT shape on a value gate (r12 — VERDICT r11
-    #1): coarse probe prunes, the ADC scan shortlists 50 candidates
-    (5x k, the named-config ratio from the clustered-corpus sweep in
-    PQ_SCALE.json), and the exact squared-L2 re-ranks just those rows
-    to the top 10. The oracle replays the whole stack — coarse Lloyd,
-    probe pick, both block Lloyds, ADC sum, the ROUNDED-score
-    shortlist cut and the exact re-rank — bit-identically, so a slip
-    in any stage (including the shortlist tie rule) breaks the hash."""
-    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
-    return similarity.ivf_pq_topk(
-        emb, list(row["v"]), k=10, n_centroids=8, nprobe=2, m=2, nbits=2,
-        n_iter=2, exclude_vec_id=0, rerank=50,
-    )
-
-
-@register(
-    "ann_ivf_pq_indexed",
-    _ivf_pq_sql(rerank=50),
-    shelved=True,  # new r12: the MATERIALIZED IVF-PQ serving path —
-    # codes stored in the index, probe never reads a vector until the
-    # re-rank; r13 rotation candidate
-)
-def ann_ivf_pq_indexed(spark, sf_dir):
-    """The materialized IVF-PQ serving path on a value gate (r12): the
-    index is built ONCE with ``ivf_build(pq_m=2, pq_nbits=2)`` — coarse
-    Lloyd, PQ block Lloyds, and the full-corpus encode all paid at
-    build — and ``ivf_pq_topk_indexed`` probes it with partition
-    pruning + a ``(vec_id, codes)``-only projection (plan-audited: the
-    ADC scan never reads ``v``), ADC-shortlists 50, exact re-ranks to
-    the top 10. The oracle is the SAME SQL as ``ann_ivf_pq_rerank``:
-    the materialized path must be bit-identical to the in-plan one —
-    train/probe/encode/ADC/shortlist-cut conventions all shared — so
-    any drift between the layout the build writes and what the probe
-    reads (codes dropped, lists scrambled, stale sidecar) breaks the
-    hash."""
-    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    idx = _ivf_index_dir(sf_dir, n_centroids=8, n_iter=2) + "_pq"
-    similarity.ivf_build(
-        emb, idx, n_centroids=8, n_iter=2, pq_m=2, pq_nbits=2, pq_n_iter=2
-    )
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
-    return similarity.ivf_pq_topk_indexed(
-        spark, idx, list(row["v"]), k=10, nprobe=2, rerank=50,
-        exclude_vec_id=0,
-    )
+    #1): the same index as ``ann_ivf_pq_topk``; the coarse probe
+    prunes, the ADC scan over ``(vec_id, codes)`` shortlists 50
+    candidates (5x k, the named-config ratio from the clustered-corpus
+    sweep in PQ_SCALE.json), and the exact squared-L2 re-ranks just
+    those rows to the top 10. The oracle replays the whole stack —
+    coarse Lloyd, probe pick, both block Lloyds, ADC sum, the
+    ROUNDED-score shortlist cut and the exact re-rank — bit-identically,
+    so a slip in any stage (including the shortlist tie rule, or codes
+    dropped or lists scrambled by the build) breaks the hash."""
+    return _ivf_pq_probe(spark, sf_dir, rerank=50)
 
 
 _IVF_APPEND_TRAIN = 250  # < the smallest SF's corpus (sf0.001 has 500 vecs)
@@ -1780,7 +1714,7 @@ def ann_ivf_append_topk(spark, sf_dir):
     import shutil
 
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    idx = _ivf_index_dir(sf_dir, n_centroids=8, n_iter=2) + "_append"
+    idx = _ivf_index_dir(sf_dir, **_IVF_INDEX, train_max_id=_IVF_APPEND_TRAIN)
     n_total = emb.count()
 
     def _complete() -> bool:
@@ -1799,16 +1733,11 @@ def ann_ivf_append_topk(spark, sf_dir):
         if os.path.isdir(idx):
             shutil.rmtree(idx)
         similarity.ivf_build(
-            emb.where(F.col("vec_id") < _IVF_APPEND_TRAIN), idx, n_centroids=8, n_iter=2
+            emb.where(F.col("vec_id") < _IVF_APPEND_TRAIN), idx, **_IVF_INDEX
         )
         similarity.ivf_append(emb.where(F.col("vec_id") >= _IVF_APPEND_TRAIN), idx)
-    row = (
-        emb.where(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .first()
-    )
     return similarity.ivf_topk_indexed(
-        spark, idx, list(row["v"]), k=10, nprobe=2, exclude_vec_id=0
+        spark, idx, _query_vec(emb), k=10, nprobe=2, exclude_vec_id=0
     )
 
 

@@ -143,3 +143,39 @@ def test_signature_parse_check_catches_the_eight_parse_kernel(spark, monkeypatch
     assert failures() == []
     monkeypatch.setattr(dedup, "_signatures_from_shingles", eight_parse)
     assert failures() == ["plan contains forbidden /(?:conv\\([^\\n]*){3}/"]
+
+
+def test_index_probe_checks_catch_an_unpruned_read(spark, monkeypatch):
+    """The `ann_ivf_pq_topk` and LSH probe checks pass on the gates and
+    fail, on their partition-filter patterns alone, when the probe reads
+    the same index with its partition predicates dropped (every list or
+    bucket scanned)."""
+    sys.path.insert(0, REPO)
+    import re
+
+    from tools import explain_audit as ea
+
+    builders = ea.audit_builders()
+    names = ["ann_ivf_pq_topk", "ann_lsh_bucketed", "ann_lsh_indexed"]
+
+    def failures():
+        return {
+            n: ea.pattern_failures(
+                builders[n](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString(),
+                ea.CHECKS[n],
+            )
+            for n in names
+        }
+
+    assert failures() == {n: [] for n in names}
+    frame = type(spark.range(1))
+    where = frame.where
+
+    def unpruned(self, cond):
+        return self if re.search(r"\b(cid|_t|_b)\b", str(cond)) else where(self, cond)
+
+    monkeypatch.setattr(frame, "where", unpruned)
+    assert failures() == {
+        n: [f"plan lacks /{p}/" for p in ea.CHECKS[n] if p.startswith("PartitionFilters")]
+        for n in names
+    }

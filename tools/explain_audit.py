@@ -17,6 +17,14 @@ import sys
 
 sys.path.insert(0, ".")
 
+_LSH_PROBE = [
+    r"PartitionFilters: \[[^\]]*_t#\d+ = ",
+    r"PartitionFilters: \[[^\]]*_b#\d+ = ",
+    "!SortMergeJoin",
+    "!ShuffledHashJoin",
+    "!Exchange hashpartitioning",
+]
+
 CHECKS = {
     # planner path: measurement + time predicates must reach the scan,
     # aggregation must have a partial (map-side) phase
@@ -180,14 +188,13 @@ CHECKS = {
         "BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin",
         "!CartesianProduct",
     ],
-    # in-plan LSH search (r7 rework): the bucket match is a MAP-SIDE
-    # filter against the broadcast query row — one scan, zero shuffles
-    # (the old id->vector re-join shape measured exponent 1.27 at 20M)
-    "ann_lsh_bucketed": [
-        "!SortMergeJoin",
-        "!ShuffledHashJoin",
-        "!Exchange hashpartitioning",
-    ],
+    # LSH probe against the materialized bucket store: the scan prunes
+    # to the query's (_t, _b) partitions, and a vector colliding in
+    # several tables keeps one copy by a row-local rule — one scan, zero
+    # shuffles (the old id->vector re-join shape measured exponent 1.27
+    # at 20M). Both LSH gates run the same builder.
+    "ann_lsh_bucketed": _LSH_PROBE,
+    "ann_lsh_indexed": _LSH_PROBE,
     # transform: the price fan-out rides the same scan as every other
     # branch — exactly one parquet scan, no Union (built pre-checkpoint)
     "_raw_transform": ["!Union", "Generate explode"],
@@ -424,17 +431,24 @@ CHECKS = {
     # vectorized lut gather), the one-row collapsed codebook broadcasts
     # (BroadcastNestedLoopJoin — the same shape as every in-row argmin
     # here), the top-k collapses to TakeOrdered; nothing enumerates
-    # pairs. Same contract for the composed IVF-PQ probe.
+    # pairs.
     "ann_pq_topk": [
         "MapInPandas",
         "TakeOrderedAndProject",
         "BroadcastNestedLoopJoin",
         "!CartesianProduct",
     ],
+    # single-stage IVF-PQ probe against the materialized index: the scan
+    # prunes to the probed lists (cid IN) and reads (vec_id, codes)
+    # only, scoring is the Arrow lut gather, the top-k a TakeOrdered;
+    # the codebooks come from the sidecar, so no collapsed-codebook
+    # cross join (BroadcastNestedLoopJoin) — the plan carries no training
     "ann_ivf_pq_topk": [
+        r"PartitionFilters: \[cid#\d+ IN \(",
+        r"ReadSchema: struct<vec_id:bigint,codes:array<int>>",
         "MapInPandas",
         "TakeOrderedAndProject",
-        "BroadcastNestedLoopJoin",
+        "!BroadcastNestedLoopJoin",
         "!CartesianProduct",
     ],
     # materialized IVF-PQ probe (r12): both scans partition-prune to the

@@ -305,6 +305,32 @@ class TestSimilarity:
         assert sum(sizes) == 400  # every vector bucketed in both tables
         assert max(sizes) <= 40  # largest bucket is a small corpus share
 
+    def test_ivf_recall_vs_bruteforce(self, corpus_emb, tmp_path_factory):
+        """Recall@10 of a built 8-list index against exact search, for
+        several queries: half the lists keeps recall >= 0.5, more lists
+        never lose recall, and probing every list is exact."""
+        idx = str(tmp_path_factory.mktemp("ivf") / "index")
+        similarity.ivf_build(corpus_emb, idx, n_centroids=8, n_iter=2)
+        spark = corpus_emb.sparkSession
+        vecs = {
+            r["vec_id"]: list(r["v"])
+            for r in corpus_emb.where(F.col("vec_id").isin(0, 57, 133))
+            .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+            .collect()
+        }
+        for q, qv in sorted(vecs.items()):
+            exact = {r["vec_id"] for r in
+                     similarity.brute_force_topk(corpus_emb, q, k=10).collect()}
+            recalls = []
+            for nprobe in (4, 8):
+                probed = {r["vec_id"] for r in
+                          similarity.ivf_topk_indexed(
+                              spark, idx, qv, k=10, nprobe=nprobe, exclude_vec_id=q,
+                          ).collect()}
+                recalls.append(len(exact & probed) / 10)
+            assert recalls[0] >= 0.5, f"query {q}: recall@10 {recalls[0]} at nprobe=4"
+            assert recalls[0] <= recalls[1] == 1.0, f"query {q}: recalls {recalls}"
+
     def test_ivf_centroids_move_from_seed(self, corpus_emb):
         e = corpus_emb.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")

@@ -351,6 +351,9 @@ class EcollectorApi:
                 return _report(
                     [{"name": "result", "columns": ["time", "written"], "values": [[0, n]]}]
                 )
+            # the views hold the listing they were built from: bring
+            # them up to date after a write (no Spark job when unchanged)
+            self.warehouse.refresh_views()
             df = self.spark.sql(query)
             cols = df.columns
             values = [[r[c] for c in cols] for r in df.collect()]

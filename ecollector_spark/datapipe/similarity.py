@@ -1710,7 +1710,9 @@ def lsh_search_indexed(
     cos = F.expr(_cosine_sql("v", _lit_vec_sql(query_vec)))
     if exclude_vec_id is not None:
         cand = cand.where(F.col("vec_id") != exclude_vec_id)
+    # fenced, as in cosine_threshold: else the threshold filter takes a
+    # copy of the cosine fold and it runs twice per candidate row
     return (
-        cand.select("vec_id", F.round(cos, 6).alias("cosine"))
+        cand.select("vec_id", barriers.fence(F.round(cos, 6)).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )

@@ -6,7 +6,7 @@ influxdb_v1.go:112-114, README.md:43 documents `previous`). Spark's groupBy
 only yields buckets that exist, so we synthesize the bucket spine from the
 aggregate being filled:
 
-    aggregate  ->  repartition(1)  ->  groupBy(group...):
+    aggregate  ->  [repartition(1)]  ->  groupBy(group...):
                    map_from_entries(collect_list(struct(time, struct(values))))
     spine array (sequence(from, to, step), or the tz() instant set)
                ->  map_zip_with(spine, map): keep the spine's keys
@@ -19,16 +19,19 @@ ungrouped fill is a global aggregate, which emits one row even on empty
 input, so an empty range still comes back as an all-null spine.
 
 Scale notes: the fact table is scanned once, by the aggregate; the spine
-reads nothing. The only new exchange is a single-partition shuffle of
-aggregated rows — at most what the API collects anyway. Every operator
-above it (the spine, the fill window, the caller's final sort) is
-satisfied by that one partition and plans no further exchange; the
-previous spine (a one-split ``Range`` cross-joined with the distinct
-groups, then joined to the broadcast aggregate) ran in one task as well.
-The merge is ``map_zip_with``, which pairs keys through a hash map —
-O(|spine| + |agg|) per group. A per-bucket ``map[time]`` lookup scans the
-map linearly instead (O(|spine| x |agg|): 85 s against 1.3 s for one
-320k-bucket series on a 4-core box).
+reads nothing. The aggregated rows go to ONE partition, and every
+operator above it (the spine, the fill window, the caller's final sort)
+is satisfied by that partition and plans no further exchange. When the
+planner's read is already one partition (``Warehouse.read_tier`` narrows
+a small tier to one, and the aggregate over it plans no exchange),
+``one_partition`` says so and the spine adds nothing: the whole request
+is one Spark job. Otherwise the one new exchange is a
+single-partition shuffle of aggregated rows — at most what the API
+collects anyway — and a request runs three jobs (the aggregate shuffle,
+that shuffle, the result). The merge is ``map_zip_with``, which pairs
+keys through a hash map — O(|spine| + |agg|) per group. A per-bucket
+``map[time]`` lookup scans the map linearly instead (O(|spine| x |agg|):
+85 s against 1.3 s for one 320k-bucket series on a 4-core box).
 
 `previous`/`linear` fill is *chunked* past ``CHUNK_BUCKETS`` buckets:
 windows partition by (group..., coarse time chunk), so no WindowExec
@@ -77,17 +80,21 @@ def bucket_spine(
     spine_sql: str,
     group_cols: Sequence[str] = (),
     time_col: str = "time",
+    one_partition: bool = False,
 ) -> DataFrame:
     """``agg_df`` on the full spine: one row per (spine bucket, group), with
     every other column of ``agg_df`` read from the matching aggregated row
     (NULL where the bucket is empty). ``spine_sql`` is a SQL
     ``array<bigint>`` of distinct bucket starts; aggregated rows whose time
     is not on it are dropped. ``agg_df`` must be keyed by (time, group...)
-    — a duplicate key raises in ``map_from_entries``."""
+    — a duplicate key raises in ``map_from_entries``. ``one_partition``
+    says ``agg_df`` is one partition already, so it is not shuffled to
+    one."""
     t = quote_ident(time_col)
     keys = [quote_ident(c) for c in group_cols]
     vals = [quote_ident(c) for c in agg_df.columns if c != time_col and c not in group_cols]
-    per_group = agg_df.repartition(1).groupBy(*keys).agg(
+    one = agg_df if one_partition else agg_df.repartition(1)
+    per_group = one.groupBy(*keys).agg(
         F.expr(
             f"map_from_entries(collect_list(struct(CAST({t} AS BIGINT), "
             f"struct({', '.join(vals)}))) FILTER (WHERE {t} IS NOT NULL)) AS _m"
@@ -114,6 +121,7 @@ def gap_fill(
     value_col: str = "value",
     offset_seconds: int = 0,
     spine: tuple[str, int] | None = None,
+    one_partition: bool = False,
 ) -> DataFrame:
     """Put ``agg_df`` on the full bucket spine and apply the fill policy.
 
@@ -122,13 +130,15 @@ def gap_fill(
     tz() buckets need a NON-uniform UTC spine (two instants per wall label
     on DST fall-back, zero on spring-forward; see timeutil.tz_spine_times).
     FILL(0) coalesces every non-key column; previous/linear fill
-    ``value_col``."""
+    ``value_col``. ``one_partition``: ``agg_df`` is one partition
+    already (the planner read a tier narrowed to one), see
+    :func:`bucket_spine`."""
     if fill_type in (FILL_NONE, "", None) or step_seconds <= 0:
         return agg_df
     spine_sql, n_buckets = spine or uniform_spine(
         from_epoch, to_epoch, step_seconds, offset_seconds
     )
-    filled = bucket_spine(agg_df, spine_sql, group_cols, time_col)
+    filled = bucket_spine(agg_df, spine_sql, group_cols, time_col, one_partition)
 
     if fill_type == FILL_NULL:
         return filled

@@ -650,6 +650,9 @@ class QueryPlanner:
             df = self.tier_reader(res.tier, res.lo, res.hi)
         else:
             df = self.tier_reader(res.tier)
+        # a reader that narrowed its scan to one partition says so
+        # (Warehouse.read_tier); gap fill then shuffles nothing to one
+        one_partition = df.__dict__.get("one_partition", False)
         df = df.where(F.col("measurement") == req.measurement_name)
         # the sargable ts literal is the row-exact bound (and is pushed to the scan)
         ts_lit = lambda e: F.timestamp_seconds(F.lit(int(e)))  # noqa: E731
@@ -702,6 +705,7 @@ class QueryPlanner:
             "value_col": value_col,
             "tag_cols": split_group_tags(req.group_by_tag),
             "bucket_off": bucket_off,
+            "one_partition": one_partition,
             # tz('<zone>') (public InfluxQL) aligns buckets to the zone's
             # wall clock, DST-exact (timeutil.bucketing). Raw (unbucketed)
             # shapes are unaffected: tz only moves bucket boundaries, and
@@ -877,6 +881,7 @@ class QueryPlanner:
                 tag_cols,
                 offset_seconds=ctx["bucket_off"],
                 spine=bk.spine,
+                one_partition=ctx["one_partition"],
             )
         time_out = bk.time_out if bk is not None else F.col("time").cast("long")
         return agg.select(

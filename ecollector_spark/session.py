@@ -124,8 +124,8 @@ def get_spark(
     return spark
 
 
-#: (filesMaxPartitionBytes, filesOpenCostInBytes) memoized per live
-#: SparkContext — two JVM conf reads, fixed for the session's lifetime.
+#: split_conf's answer memoized per live SparkContext — JVM conf reads,
+#: fixed for the session's lifetime.
 _SPLIT_CONF_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -144,6 +144,23 @@ def _min_partition_num(jconf, default_parallelism: int) -> int:
         if v is not None and int(v) > 0:
             return int(v)
     return default_parallelism
+
+
+def split_conf(spark: SparkSession) -> tuple[int, int, int]:
+    """(filesMaxPartitionBytes, filesOpenCostInBytes, minPartitionNum) of
+    the session, read from the JVM once per live SparkContext (these
+    confs are pinned at get_spark; mid-session changes are out of
+    contract, same assumption as the other conf memos here)."""
+    sc = spark.sparkContext
+    memo = _SPLIT_CONF_MEMO.get(sc)
+    if memo is None:
+        jconf = spark._jsparkSession.sessionState().conf()
+        memo = _SPLIT_CONF_MEMO[sc] = (
+            int(jconf.filesMaxPartitionBytes()),
+            int(jconf.filesOpenCostInBytes()),
+            _min_partition_num(jconf, sc.defaultParallelism),
+        )
+    return memo
 
 
 def _estimated_splits(
@@ -166,19 +183,7 @@ def _estimated_splits(
     are far apart. Driver-side arithmetic — replaces the ``df.rdd``
     probe (~35 ms of physical planning per call) where the caller knows
     the input layout."""
-    sc = spark.sparkContext
-    memo = _SPLIT_CONF_MEMO.get(sc)
-    if memo is None:
-        # Resolved once per context (these confs are pinned at get_spark;
-        # mid-session changes are out of contract, same assumption as the
-        # other conf memos here).
-        jconf = spark._jsparkSession.sessionState().conf()
-        memo = _SPLIT_CONF_MEMO[sc] = (
-            int(jconf.filesMaxPartitionBytes()),
-            int(jconf.filesOpenCostInBytes()),
-            _min_partition_num(jconf, sc.defaultParallelism),
-        )
-    max_part, open_cost, min_partition_num = memo
+    max_part, open_cost, min_partition_num = split_conf(spark)
     charged = input_bytes + max(n_files, 1) * open_cost
     bytes_per_core = charged // max(min_partition_num, 1)
     max_split = min(max_part, max(open_cost, bytes_per_core)) or 1

@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 
 from ecollector_spark.functions import publish, quote_ident
 from ecollector_spark.schema import DATAPOINT_SCHEMA, WAREHOUSE_PARTITION_COLUMNS
+from ecollector_spark.session import split_conf
 from ecollector_spark.tiers import TIER_TTL_SECONDS, TIERS
 from ecollector_spark.tiers import write_retention_col
 
@@ -151,8 +152,12 @@ class Warehouse:
             else WAREHOUSE_PARTITION_COLUMNS
         )
         self.schema = warehouse_schema(date_partition)
-        #: tier -> (parquet listing, scan built from it); see read_tier
-        self._tier_scans: dict[str, tuple[frozenset, DataFrame]] = {}
+        #: tier -> (parquet listing, scan built from it, whether the scan
+        #: was narrowed to one partition); see read_tier
+        self._tier_scans: dict[str, tuple[frozenset, DataFrame, bool]] = {}
+        #: view name -> {tier: listing its view was built from}; see
+        #: register_views
+        self._views: dict[str, dict[str, frozenset]] = {}
 
     # -- paths -------------------------------------------------------------
     def tier_path(self, tier: str) -> str:
@@ -289,6 +294,23 @@ class Warehouse:
         row predicate itself cannot prune directories — the day bounds
         can), then the row-exact ``ts`` filter applies as usual.
 
+        A small tier reads as ONE partition: the scan is coalesced to one
+        task, no shuffle. A single partition satisfies every
+        distribution, so the planner's aggregate, fill windows and final
+        sort above it plan no exchange and the request runs as one Spark
+        job. Small means both: its files total at most
+        ``spark.sql.files.openCostInBytes`` (what Spark charges for
+        opening one file), and Spark's own charge for the tier — its
+        bytes plus one open per file — fits one
+        ``spark.sql.files.maxPartitionBytes`` scan partition (at the
+        defaults, 4 MB in at most 31 files). One task opens every file
+        in turn, so past a few dozen files the parallel scan wins back
+        what its shuffles cost (docs/OPERATORS.md, "Warehouse and
+        sinks"). The returned frame's ``one_partition`` attribute says
+        which scan it got (the planner tells gap fill). A larger tier
+        reads as Spark splits it, with the plan unchanged. The decision
+        is arithmetic on the listing: no I/O, no job.
+
         The tier's scan is reused while :meth:`tier_listing` reports its
         files unchanged: building one costs relation analysis on the
         driver, every query. Any append, publish or removal changes the
@@ -301,7 +323,11 @@ class Warehouse:
             # read via the root with basePath so partition columns
             # survive, and pin the tier -> Catalyst prunes to the one
             # subdirectory
-            cached = (listing, self._scan(self.tier_path(tier), base_path=self.root))
+            scan = self._scan(self.tier_path(tier), base_path=self.root)
+            max_part, open_cost, _ = split_conf(self.spark)
+            size = sum(s for _, s, _ in listing)
+            one = size <= open_cost and size + len(listing) * open_cost <= max_part
+            cached = (listing, scan.coalesce(1) if one else scan, one)
             self._tier_scans[tier] = cached
         df = cached[1]
         # r13 (guide §6): sargable timestamp-literal forms instead of
@@ -327,7 +353,9 @@ class Warehouse:
             df = df.where(functools.reduce(operator.and_, conds))
         if self.date_partition:
             df = df.drop("dt")
-        return df.withColumn("tier", F.lit(tier))
+        df = df.withColumn("tier", F.lit(tier))
+        df.one_partition = cached[2]
+        return df
 
     def tier_listing(self, tier: str) -> frozenset:
         """The one definition of "the tier is unchanged": (path, size,
@@ -582,20 +610,51 @@ class Warehouse:
         union view ``<name>`` over every populated tier — the table
         surface behind the Q1 raw-SQL endpoint. Tier + measurement
         predicates in user SQL still prune partitions (the views are thin
-        wrappers over the partitioned scans)."""
-        registered = []
-        union = None
+        wrappers over the partitioned scans, built by :meth:`read_tier`,
+        so a small tier's view reads as one partition too). A view holds
+        the file listing it was built from; :meth:`refresh_views` brings
+        the views up to date after a write."""
+        self._views[name] = {}
+        return self._register_views(name, TIERS)
+
+    def refresh_views(self) -> list[str]:
+        """Re-register every view of :meth:`register_views` whose tier's
+        listing is not the one it was built from (compared by identity,
+        as :meth:`read_tier` does), and the union view with them.
+        Returns the names re-registered. With no tier changed this lists
+        the tiers' files and nothing else: no Spark call, no job."""
+        out = []
+        for name, built in list(self._views.items()):
+            # an empty tier lists as a new empty set each time: None here
+            changed = [t for t in TIERS if (self.tier_listing(t) or None) is not built.get(t)]
+            if changed:
+                out += self._register_views(name, changed)
+        return out
+
+    def _register_views(self, name: str, changed) -> list[str]:
+        """Register the views of ``name`` over the ``changed`` tiers and
+        the union view; drop the view of a tier that has emptied."""
+        built = self._views[name]
+        had_views = bool(built)
+        registered, union = [], None
         for tier in TIERS:
+            vname = f"{name}_{tier}"
+            had = built.pop(tier, None)
             df = self.read_tier(tier)
             if df is None:
+                if had is not None:
+                    self.spark.catalog.dropTempView(vname)
                 continue
-            vname = f"{name}_{tier}"
-            df.createOrReplaceTempView(vname)
-            registered.append(vname)
+            built[tier] = self._tier_scans[tier][0]
+            if tier in changed:
+                df.createOrReplaceTempView(vname)
+                registered.append(vname)
             union = df if union is None else union.unionByName(df)
         if union is not None:
             union.createOrReplaceTempView(name)
             registered.append(name)
+        elif had_views:
+            self.spark.catalog.dropTempView(name)
         return registered
 
     def compact(self, tier: str, target_files_per_measurement: int = 1) -> bool:

@@ -1,8 +1,11 @@
 """Warehouse layout / retention / catalog + API surface tests
 (reference §2.10 admin commands, S4/S7 sinks, RP TTL enforcement)."""
 
+import json
 import os
 import re
+import subprocess
+import sys
 from datetime import datetime, timezone
 
 import pytest
@@ -41,19 +44,19 @@ def _mk_points(spark, rows):
     return spark.createDataFrame(data, DATAPOINT_SCHEMA).drop("tier")
 
 
+#: the ``wh`` fixture's points
+WH_ROWS = [
+    ("electricity_meter_power", "2024-01-01T00:00:10", "7", 100.0),
+    ("electricity_meter_power", "2024-01-01T00:10:10", "7", 200.0),
+    ("electricity_meter_power", "2024-01-01T00:10:20", "8", 300.0),
+    ("sensor_temp.evt.sensor.report", "2024-01-01T00:05:00", "9", 21.5),
+]
+
+
 @pytest.fixture()
 def wh(spark, tmp_path):
     w = Warehouse(spark, str(tmp_path / "warehouse"))
-    pts = _mk_points(
-        spark,
-        [
-            ("electricity_meter_power", "2024-01-01T00:00:10", "7", 100.0),
-            ("electricity_meter_power", "2024-01-01T00:10:10", "7", 200.0),
-            ("electricity_meter_power", "2024-01-01T00:10:20", "8", 300.0),
-            ("sensor_temp.evt.sensor.report", "2024-01-01T00:05:00", "9", 21.5),
-        ],
-    )
-    w.write_points(pts)
+    w.write_points(_mk_points(spark, WH_ROWS))
     return w
 
 
@@ -1317,11 +1320,57 @@ class TestCanonicalSchema:
         assert "LessThan(ts,2024-01-01 02:00:00.0)" in pushed
 
 
+def final_plan(df) -> str:
+    """The physical plan ``df`` ran, adaptive query stages included."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName().startswith("AdaptiveSparkPlan"):
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+#: Child process of TestGapFillPlanShape's wide-tier test: the ``wh``
+#: fixture in a session that charges 1 KB per file open, below the
+#: tier's bytes. Prints one JSON line per fill type.
+_WIDE_CHILD = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from ecollector_spark.api import EcollectorApi
+from ecollector_spark.session import get_spark
+from ecollector_spark.warehouse import Warehouse
+from tests.test_api_warehouse import WH_ROWS, TestGapFillPlanShape, _mk_points, final_plan
+
+spark = get_spark("wide-tier", master="local[2]", shuffle_partitions=4,
+                  extra_conf={"spark.sql.files.openCostInBytes": "1024"})
+w = Warehouse(spark, sys.argv[2])
+w.write_points(_mk_points(spark, WH_ROWS))
+api = EcollectorApi(spark, w)
+sc = spark.sparkContext
+for fill in ("null", "previous"):
+    req = TestGapFillPlanShape._req(fill)
+    sc.setJobGroup(fill, fill)
+    rep = api.get_data_points(req, now=TestGapFillPlanShape.NOW)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    df = api.planner.plan(req, now=TestGapFillPlanShape.NOW)
+    df.collect()
+    print(json.dumps({
+        "tier_bytes": sum(size for _, size, _ in w.tier_listing("gen_raw")),
+        "one_partition": w.read_tier("gen_raw").one_partition,
+        "jobs": len(sc.statusTracker().getJobIdsForGroup(fill)),
+        "series": rep["val"]["Results"][0]["Series"],
+        "plan": final_plan(df),
+    }))
+"""
+
+
 class TestGapFillPlanShape:
     """A grouped gap-filled request scans its tier once and joins nothing:
-    the spine is built from the aggregate's own rows (gapfill.bucket_spine),
-    so the request runs the aggregate shuffle, one single-partition
-    shuffle of aggregated rows and the result — three Spark jobs."""
+    the spine is built from the aggregate's own rows (gapfill.bucket_spine).
+    The fixture's tier is smaller than one file open, so it reads as one
+    partition (Warehouse.read_tier): no operator above the scan plans an
+    exchange and the request runs as one Spark job. A tier above that
+    size keeps the distributed plan: the aggregate shuffle, one
+    single-partition shuffle of aggregated rows and the result — three
+    Spark jobs."""
 
     NOW = datetime(2024, 1, 1, 1, tzinfo=timezone.utc)
 
@@ -1338,7 +1387,7 @@ class TestGapFillPlanShape:
         )
 
     @pytest.mark.parametrize("fill", ["null", "previous"])
-    def test_grouped_fill_runs_at_most_three_jobs(self, wh, fill):
+    def test_grouped_fill_runs_one_job(self, wh, fill):
         api = EcollectorApi(wh.spark, wh)
         sc = wh.spark.sparkContext
         group = f"gapfill-jobs-{fill}"
@@ -1349,14 +1398,100 @@ class TestGapFillPlanShape:
             sc.setLocalProperty("spark.jobGroup.id", None)
         series = {s["tags"]["dev_id"]: s["values"] for s in rep["val"]["Results"][0]["Series"]}
         assert sorted(series) == ["7", "8"] and all(len(v) == 7 for v in series.values())
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        df = api.planner.plan(self._req(fill), now=self.NOW)
+        df.collect()
+        plan = final_plan(df)
+        assert "Coalesce 1" in plan and "Exchange" not in plan
 
     @pytest.mark.parametrize("fill", ["null", "previous"])
     def test_grouped_fill_scans_the_tier_once(self, wh, fill):
         df = EcollectorApi(wh.spark, wh).planner.plan(self._req(fill), now=self.NOW)
         df.collect()
-        # the adaptive plan's final physical plan, query stages included
-        plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+        plan = final_plan(df)
         assert plan.count("FileScan") == 1
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
+
+    def test_wide_tier_keeps_the_three_job_plan(self, wh, tmp_path):
+        """In a session whose file-open cost is below the tier's bytes the
+        tier reads as Spark splits it, and the request keeps the plan it
+        had before reads narrowed: the same rows as the narrowed read,
+        three jobs, one hash exchange under the aggregate and one
+        single-partition exchange of aggregated rows."""
+        api = EcollectorApi(wh.spark, wh)
+        narrow = {f: api.get_data_points(self._req(f), now=self.NOW) for f in ("null", "previous")}
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        proc = subprocess.run(
+            [sys.executable, "-c", _WIDE_CHILD, repo, str(tmp_path / "wide")],
+            cwd=repo,
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        lines = [json.loads(x) for x in proc.stdout.splitlines() if x.startswith("{")]
+        for fill, out in zip(("null", "previous"), lines, strict=True):
+            assert out["tier_bytes"] > 1024 and out["one_partition"] is False
+            assert out["jobs"] == 3
+            assert out["series"] == narrow[fill]["val"]["Results"][0]["Series"]
+            plan = out["plan"]
+            assert plan.count("FileScan") == 1 and "Coalesce" not in plan
+            agg_shuffle = r"Exchange hashpartitioning\(_groupingexpression#\d+L, dev_id#\d+, 4\)"
+            assert len(re.findall(agg_shuffle, plan)) == 1
+            assert plan.count("Exchange SinglePartition, REPARTITION_BY_NUM") == 1
+            assert plan.count("Exchange") == 2
+
+
+class TestViewsFollowWrites:
+    """The raw-SQL views hold the listing they were built from; the Spark
+    SQL branch of ``run_query`` re-registers the ones whose tier changed."""
+
+    @staticmethod
+    def _points(spark, first, n):
+        return _mk_points(spark, [
+            ("electricity_meter_power", f"2024-01-01T00:{i:02d}:00", "7", float(i))
+            for i in range(first, first + n)
+        ])
+
+    @staticmethod
+    def _count(api, view):
+        rep = api.run_query(f"SELECT count(*) AS n FROM {view}")
+        assert rep["val"].get("error") is None, rep["val"]
+        return rep["val"]["Results"][0]["Series"][0]["values"][0][0]
+
+    def test_count_after_an_append(self, spark, tmp_path):
+        w = Warehouse(spark, str(tmp_path / "warehouse"))
+        api = EcollectorApi(spark, w)
+        w.write_points(self._points(spark, 0, 10))
+        w.register_views("datapoints")
+        assert self._count(api, "datapoints") == 10
+        w.write_points(self._points(spark, 10, 5))
+        assert self._count(api, "datapoints") == 15
+        assert self._count(api, "datapoints_gen_raw") == 15
+
+    def test_unchanged_warehouse_registers_nothing(self, spark, tmp_path):
+        w = Warehouse(spark, str(tmp_path / "warehouse"))
+        w.write_points(self._points(spark, 0, 3))
+        assert w.register_views("dp") == ["dp_gen_raw", "dp"]
+        sc = spark.sparkContext
+        sc.setJobGroup("refresh-views", "refresh-views")
+        try:
+            assert w.refresh_views() == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("refresh-views") == []
+        w.write_points(self._points(spark, 3, 1))
+        assert w.refresh_views() == ["dp_gen_raw", "dp"]
+        assert w.refresh_views() == []
+
+    def test_emptied_tier_drops_its_view(self, spark, tmp_path):
+        w = Warehouse(spark, str(tmp_path / "warehouse"))
+        w.write_points(self._points(spark, 0, 2))
+        w.write_points(_mk_points(spark, [("door_lock.evt.lock.report", "2024-01-01T00:00:10", "9", 1.0)]))
+        w.register_views("dp")
+        w.drop_tier("gen_default")
+        assert w.refresh_views() == ["dp"]
+        assert not spark.catalog.tableExists("dp_gen_default")
+        got = spark.sql("SELECT tier, count(*) AS n FROM dp GROUP BY tier").collect()
+        assert [(r.tier, r.n) for r in got] == [("gen_raw", 2)]

@@ -110,13 +110,40 @@ def test_fence_checks_catch_a_reverted_fence(spark, monkeypatch):
             for name, fence in ea.FENCES.items()
         }
 
-    assert len(ea.FENCES) == 6
+    assert len(ea.FENCES) == 7
     assert failures() == {name: [] for name in ea.FENCES}
     monkeypatch.setattr(barriers, "fence", lambda expr: expr)
     # default_transform caches its expression fragments per SparkContext
     monkeypatch.setattr(transform, "_PREPARED", weakref.WeakKeyDictionary())
     reverted = failures()
     assert all(reverted.values()), reverted
+
+
+def test_lsh_probe_fence_check_catches_the_unfenced_probe(spark, monkeypatch):
+    """The `ann_lsh_indexed` fence check passes on the probe and fails when
+    the fence is a plain projection: the threshold filter then carries
+    its own copy of the 64-dim cosine fold, which runs twice per
+    candidate row. The rows are the same either way."""
+    sys.path.insert(0, REPO)
+    import re
+
+    from ecollector_spark.functions import barriers
+    from tools import explain_audit as ea
+
+    build = ea.audit_builders()["ann_lsh_indexed"]
+
+    def probe():
+        df = build(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return ea.fence_failures(plan, *ea.FENCES["ann_lsh_indexed"]), sorted(df.collect())
+
+    fenced, rows = probe()
+    assert fenced == [] and rows
+    monkeypatch.setattr(barriers, "fence", lambda expr: expr)
+    unfenced, same_rows = probe()
+    assert same_rows == rows
+    assert unfenced[-1] == "0 one-element Generates produce cosine (want 1)"
+    assert re.search(r"is evaluated in [2-9] plan nodes", unfenced[0]), unfenced
 
 
 def test_signature_parse_check_catches_the_eight_parse_kernel(spark, monkeypatch):

@@ -501,6 +501,8 @@ FENCES = {
     "_raw_minhash": ("jaccard", r"size\(array_intersect\(set_a"),
     # threshold search: the cosine fold under the threshold filter
     "ann_cosine_threshold": ("cosine", r"aggregate\(zip_with\(cast\(embedding"),
+    # LSH probe: the cosine fold (not the bucket folds) under the filter
+    "ann_lsh_indexed": ("cosine", r"round\(\(aggregate\(zip_with\(v#\d+"),
     # embedding near-dup verify: the pair (not norm) dot-product fold
     "_raw_embedding_near_dup": ("cosine", r"aggregate\(zip_with\(_v#(\d+), _v#(?!\1\b)\d+"),
 }
